@@ -110,31 +110,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.app.Cli.cpus
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_result.json")
-    // Shuffle partitions default to the lane count but scale with the
-    // corpus, not the cores: the sf10 (100×) point needs partitions
-    // sized so a post-shuffle partition still fits in executor memory
-    // — exactly the knob a real cluster job retunes per input size.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Large-heap survival knobs: the sf10 working set under a 100 g
-      // heap produced multi-minute full-GC stalls; the default 10 s
-      // heartbeat / 120 s network timeout pair then expires the (only)
-      // local-mode executor and poisons the SparkContext mid-suite —
-      // every remaining query fails instantly and benches as a fast
-      // time-to-failure. Same settings a real cluster uses for big
-      // executors: heartbeat well under the stall, expiry well over it.
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "800s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.app.Cli.session("graft-bench")
     // Wait for machine quiet before timing (r12, VERDICT #7): the
     // artifact IS the number the round is judged on, and r11's was
     // captured at warm tier while the prose quoted a separate quiet

@@ -23,14 +23,29 @@ import graft.sources.FicSources
   */
 object Cli {
 
+  /** Local cores: `SPARK_GRAFT_CPUS`, else every available processor. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The one session factory of every main (CLIs, Bench, Verify, tools).
+    * Shuffle partitions follow `SPARK_GRAFT_SHUFFLE`, else the core
+    * count (the sf10 point needs partitions sized by the corpus, not the
+    * cores). The heartbeat/timeout pair rides out multi-second full-GC
+    * pauses on big heaps, which would otherwise expire the one
+    * local-mode executor and poison the context mid-run; the values are
+    * the ones build.sbt's forked runs pass as JVM properties.
+    */
   def session(appName: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val s = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions",
+        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus.toString))
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.executor.heartbeatInterval", "30s")
+      .config("spark.network.timeout", "600s")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -26,7 +26,7 @@ import graft.Tables
 object TextOps {
 
   /** Non-empty word array of the document text. */
-  private val wordsCol: Column =
+  private[graft] val wordsCol: Column =
     expr("filter(split(text, ' '), w -> w != '')")
   private val wordsSql: String =
     "LIST_FILTER(STRING_SPLIT(text, ' '), w -> w <> '')"
@@ -101,10 +101,7 @@ object TextOps {
     */
   private[operators] def docShingles(s: SparkSession, dir: String): DataFrame =
     memoPersist("shingles", s, dir) {
-      Tables.documents(s, dir)
-        .withColumn("words", wordsCol)
-        .select(col("doc_id"), shingleArr.as("shs"))
-        .withColumn("n", size(col("shs")).cast("long"))
+      shingled(Tables.documents(s, dir).withColumn("words", wordsCol), col("doc_id"))
     }
 
   private val shinglesSql: String = s"""
@@ -355,6 +352,21 @@ object TextOps {
     */
   private val SigMod = 1099511627776L
 
+  /** 4 bands × 2 rows. */
+  private[graft] val MinhashBands = 4
+
+  // ---- The MinHash signing kernel: words → shingles → h1..h8 → band
+  // keys. The batch gates (t28, t73) and the monthly-drop fold
+  // (IncrementalDedup) both sign through these three functions, so a
+  // drop-indexed document and a batch-signed one carry bit-identical
+  // signatures by construction.
+
+  /** `keep` columns plus (shs: distinct shingle array, n: its size) of
+    * a frame carrying `words`. */
+  private[graft] def shingled(df: DataFrame, keep: Column*): DataFrame =
+    df.select(keep :+ shingleArr.as("shs"): _*)
+      .withColumn("n", size(col("shs")).cast("long"))
+
   // Signatures are per-document minima, so compute them IN-ROW with
   // array_min over the shingle array — the naive layout's
   // explode → groupBy(doc_id) shuffle of every shingle disappears.
@@ -365,17 +377,27 @@ object TextOps {
   // 8 per-function passes are integer arithmetic over the parsed
   // halves. (r9 profile: the 8-md5 layout's signature build was 10.2 s
   // of t28's sf1 cold chain — ~8× the remaining stages combined.)
+  /** Adds the minhash minima h1..h8 of the `shs` shingle array. */
+  private[graft] def withMinhashes(df: DataFrame): DataFrame = {
+    val base = df.withColumn("hp", expr(
+      "transform(shs, x -> named_struct(" +
+        "'a', cast(conv(substring(md5(x), 1, 10), 16, 10) as bigint), " +
+        "'b', cast(conv(substring(md5(x), 11, 10), 16, 10) as bigint)))"))
+    (1 to 2 * MinhashBands).foldLeft(base) { case (acc, i) =>
+      acc.withColumn(s"h$i",
+        array_min(expr(s"transform(hp, p -> (p.a + $i * p.b) % $SigMod)")))
+    }.drop("hp")
+  }
+
+  /** Band `b`'s key (1-based): ':'-separated, because the minhashes
+    * are decimal-rendered longs and bare concat would alias
+    * ("12"+"3" = "1"+"23"). */
+  private[graft] def bandKey(b: Int): Column =
+    concat_ws(":", col(s"h${2 * b - 1}"), col(s"h${2 * b}"))
+
   private def minhashSigs(s: SparkSession, dir: String): DataFrame =
     memoPersist("minhash-sig", s, dir) {
-      val base = docShingles(s, dir).filter(col("n") > 0)
-        .withColumn("hp", expr(
-          "transform(shs, x -> named_struct(" +
-            "'a', cast(conv(substring(md5(x), 1, 10), 16, 10) as bigint), " +
-            "'b', cast(conv(substring(md5(x), 11, 10), 16, 10) as bigint)))"))
-      (1 to 8).foldLeft(base) { case (df, i) =>
-        df.withColumn(s"h$i",
-          array_min(expr(s"transform(hp, p -> (p.a + $i * p.b) % $SigMod)")))
-      }.drop("hp")
+      withMinhashes(docShingles(s, dir).filter(col("n") > 0))
     }
 
   /** LSH candidate pairs (doc_a < doc_b) from the 4-band × 2-row
@@ -392,13 +414,8 @@ object TextOps {
     }
 
   private def lshCandidatesBuild(s: SparkSession, dir: String): DataFrame = {
-    // ':'-separated band keys: the minhashes are decimal-rendered longs
-    // now, and bare concat would alias ("12"+"3" = "1"+"23").
-    val bands = minhashSigs(s, dir).select(col("doc_id"), explode(map(
-      lit(1), concat_ws(":", col("h1"), col("h2")),
-      lit(2), concat_ws(":", col("h3"), col("h4")),
-      lit(3), concat_ws(":", col("h5"), col("h6")),
-      lit(4), concat_ws(":", col("h7"), col("h8"))))
+    val bands = minhashSigs(s, dir).select(col("doc_id"), explode(
+      map((1 to MinhashBands).flatMap(b => Seq(lit(b), bandKey(b))): _*))
       .as(Seq("band_id", "band_sig")))
     bands.as("x").join(bands.as("y"),
         col("x.band_id") === col("y.band_id") &&
@@ -407,13 +424,6 @@ object TextOps {
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
   }
-
-  /** Profiler hooks (graft.operators.ProfileT28) — expose the private
-    * stages without widening their access for production callers. */
-  private[operators] def minhashSigsForProfile(s: SparkSession, dir: String): DataFrame =
-    minhashSigs(s, dir)
-  private[operators] def lshCandidatesForProfile(s: SparkSession, dir: String): DataFrame =
-    lshCandidates(s, dir)
 
   /** Candidate-docs-only verify relation (doc_id, shs, n) — the
     * signature frame semi-filtered to docs that appear in an LSH

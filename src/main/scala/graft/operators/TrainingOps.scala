@@ -762,16 +762,40 @@ object TrainingOps {
     */
   private def spanPosRelation(s: SparkSession, dir: String): DataFrame =
     SessionMemo.persist("training:spans", s, dir) {
-      Tables.documents(s, dir)
-        .withColumn("words", expr("filter(split(text, ' '), w -> w != '')"))
-        .withColumn("n", size(col("words")))
-        .filter(col("n") >= SpanL)
-        .select(col("doc_id"), posexplode(expr(
-          s"""transform(sequence(1, n - $SpanL + 1),
-                i -> md5(array_join(slice(words, i, $SpanL), ' ')))"""))
-          .as(Seq("p0", "h")))
-        .select(col("doc_id"), (col("p0") + 1).cast("long").as("pos"), col("h"))
+      spanWindows(Tables.documents(s, dir), "h", windowMd5)
     }
+
+  /** The span-window kernel: every length-[[SpanL]] token window of each
+    * (doc_id, text) row at stride 1, as (doc_id, pos, `hashCol`) with
+    * pos the 1-based start token and `hash` rendering the window-string
+    * expression into its hash. The batch span family hashes with
+    * [[windowMd5]] ([[spanPosRelation]]); the drop fold's window index
+    * (IncrementalSpanIndex) with [[windowH64]]. The hash sits inside
+    * the transform lambda, so each caller's plan stays one in-row
+    * generator off its scan.
+    */
+  private[graft] def spanWindows(docs: DataFrame, hashCol: String,
+      hash: String => String): DataFrame =
+    docs
+      .withColumn("words", expr("filter(split(text, ' '), w -> w != '')"))
+      .withColumn("n", size(col("words")))
+      .filter(col("n") >= SpanL)
+      .select(col("doc_id"), posexplode(expr(
+        s"""transform(sequence(1, n - $SpanL + 1),
+              i -> ${hash(s"array_join(slice(words, i, $SpanL), ' ')")})"""))
+        .as(Seq("p0", hashCol)))
+      .select(col("doc_id"), (col("p0") + 1).cast("long").as("pos"), col(hashCol))
+
+  /** Hex md5 of a window (t65/t68/t82's key). */
+  private[graft] val windowMd5: String => String = w => s"md5($w)"
+
+  /** The 60-bit fingerprint of a hex digest: its first 15 hex digits
+    * as a bigint (see [[qRepeatedSpans]] for the narrow-key contract). */
+  private def fingerprint60(hex: String): String =
+    s"cast(conv(substring($hex, 1, 15), 16, 10) as bigint)"
+
+  /** 60-bit md5 fingerprint of a window (the drop span index's key). */
+  private[graft] val windowH64: String => String = w => fingerprint60(windowMd5(w))
 
   /** Position-free view for the consumers that only count hashes. */
   private def spanRelation(s: SparkSession, dir: String): DataFrame =
@@ -792,7 +816,7 @@ object TrainingOps {
     */
   def qRepeatedSpans(s: SparkSession, dir: String): DataFrame = {
     val spans = spanPosRelation(s, dir).select(col("doc_id"),
-      expr("cast(conv(substring(h, 1, 15), 16, 10) as bigint)").as("h64"))
+      expr(fingerprint60("h")).as("h64"))
     val w = Window.partitionBy(col("h64"))
     spans.withColumn("c", count(lit(1)).over(w))
       .groupBy(col("doc_id"))
@@ -956,17 +980,28 @@ object TrainingOps {
           col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
         .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
           col("a.pos").as("pa"), col("b.pos").as("pb"))
-        .withColumn("d", col("pa") - col("pb"))
-      val w = Window.partitionBy(col("doc_a"), col("doc_b"), col("d"))
-        .orderBy(col("pa"))
-      m.withColumn("isl", col("pa") - row_number().over(w))
-        .groupBy(col("doc_a"), col("doc_b"), col("d"), col("isl"))
-        .agg(min(col("pa")).as("start_a"), min(col("pb")).as("start_b"),
-          (max(col("pa")) - min(col("pa")) + lit(SpanL.toLong)).as("span_len"))
-        .filter(col("span_len") >= MinSpan)
-        .select(col("doc_a"), col("doc_b"), col("start_a"), col("start_b"),
-          col("span_len"))
+      maximalSpans(m)
     }
+
+  /** Maximal-span extension of matched windows (doc_a, doc_b, pa, pb)
+    * — t82's diagonal gaps-and-islands, shared with the drop span
+    * index (IncrementalSpanIndex): matches on diagonal d = pa − pb
+    * with consecutive pa form one island (id = pa − row_number()),
+    * and each island is one maximal span of (last − first + SpanL)
+    * tokens; spans shorter than [[MinSpan]] are dropped.
+    */
+  private[graft] def maximalSpans(m: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("doc_a"), col("doc_b"), col("d"))
+      .orderBy(col("pa"))
+    m.withColumn("d", col("pa") - col("pb"))
+      .withColumn("isl", col("pa") - row_number().over(w))
+      .groupBy(col("doc_a"), col("doc_b"), col("d"), col("isl"))
+      .agg(min(col("pa")).as("start_a"), min(col("pb")).as("start_b"),
+        (max(col("pa")) - min(col("pa")) + lit(SpanL.toLong)).as("span_len"))
+      .filter(col("span_len") >= MinSpan)
+      .select(col("doc_a"), col("doc_b"), col("start_a"), col("start_b"),
+        col("span_len"))
+  }
 
   def qExactSubstring(s: SparkSession, dir: String): DataFrame =
     exactSpanRelation(s, dir)

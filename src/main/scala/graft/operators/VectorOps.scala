@@ -126,21 +126,38 @@ object VectorOps {
   private[graft] val LshBits = 12
   private[graft] val LshCap = 100 // max vectors per (band, sig) bucket
 
-  private def withBandSigs(e: DataFrame): DataFrame = {
-    val planesArr = e.filter(col("vec_id") < LshBands * LshBits)
-      .select(col("vec_id").cast("int").as("plane_id"), col("v").as("pv"))
+  // ---- The sign-LSH kernel: vectors → packed sign bits → band
+  // slices. v34/v35 (batch) and IncrementalAnn (drop fold) both sign
+  // through these two functions; what differs on purpose stays with
+  // the callers — the planes (corpus-derived here, written once by the
+  // index) and the bucket cap (window here, folded occupancy there).
+
+  /** Adds `bucket`: the sign bit of `v` · `pv` for every (plane_id, pv)
+    * row of `planes`, packed into one long (bit `plane_id`) against a
+    * single broadcast plane array. */
+  private[graft] def signBuckets(df: DataFrame, planes: DataFrame): DataFrame = {
+    val planesArr = planes
       .agg(collect_list(struct(col("plane_id"), col("pv"))).as("ps"))
-    val bucket = e.crossJoin(broadcast(planesArr))
+    df.crossJoin(broadcast(planesArr))
       .withColumn("bucket", expr(
         """aggregate(ps, 0L, (acc, p) -> acc +
              if(dot_product(v, p.pv) >= 0,
                 shiftleft(1L, p.plane_id), 0L))"""))
       .drop("ps")
-    val banded = bucket
-      .select(col("*"), explode(expr(s"sequence(0, ${LshBands - 1})")).as("band_id"))
+  }
+
+  /** Replaces `bucket` by `bands` rows (band_id, sig): band b's
+    * signature is bits [b·bits, (b+1)·bits) of the bucket. */
+  private[graft] def bandSlices(df: DataFrame, bands: Int, bits: Int): DataFrame =
+    df.select(col("*"), explode(expr(s"sequence(0, ${bands - 1})")).as("band_id"))
       .withColumn("sig",
-        expr(s"shiftright(bucket, $LshBits * band_id) & ${(1 << LshBits) - 1}"))
+        expr(s"shiftright(bucket, $bits * band_id) & ${(1 << bits) - 1}"))
       .drop("bucket")
+
+  private def withBandSigs(e: DataFrame): DataFrame = {
+    val planes = e.filter(col("vec_id") < LshBands * LshBits)
+      .select(col("vec_id").cast("int").as("plane_id"), col("v").as("pv"))
+    val banded = bandSlices(signBuckets(e, planes), LshBands, LshBits)
     // Hot-bucket guard: a degenerate signature (e.g. the all-zeros region
     // of a skewed embedding space) would reintroduce the quadratic stage;
     // cap membership and drop that bucket's candidates instead.

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import graft.operators.TextOps
 
 /** Incremental MinHash+LSH index maintenance (r5, VERDICT #6): the
   * monthly-drop dedup story as an UPDATEABLE signature index instead of
@@ -12,9 +13,10 @@ import org.apache.spark.storage.StorageLevel
   *
   * The index is a persisted table (parquet) of one row per document:
   * its distinct shingle array, shingle count, and the 4 banded MinHash
-  * signatures — exactly the signature layout of the batch operator
-  * (TextOps.qMinhashLsh: 8 Kirsch–Mitzenmacher minhash minima off one
-  * md5 per shingle, 4 bands × 2 rows). Each micro-batch:
+  * signatures, signed by the batch gates' MinHash kernel itself
+  * (TextOps.shingled / withMinhashes / bandKey, shared with t28/t73:
+  * 8 Kirsch–Mitzenmacher minhash minima off one md5 per shingle,
+  * 4 bands × 2 rows). Each micro-batch:
   *
   *  1. computes signatures for the NEW documents only (the old
   *     documents' raw text is never touched — their signatures are
@@ -36,7 +38,7 @@ import org.apache.spark.storage.StorageLevel
   */
 object IncrementalDedup {
 
-  private val Bands = 4
+  private val Bands = TextOps.MinhashBands
 
   /** On-disk format version. History: 1 = seeded-md5 string minima
     * with bare band concat (≤ r9); 2 = Kirsch–Mitzenmacher 40-bit
@@ -138,9 +140,10 @@ object IncrementalDedup {
     StructField("score", DoubleType, nullable = true)) ++
     (1 to Bands).map(b => StructField(s"b$b", StringType, nullable = true)))
 
-  /** Doc-level signature rows for a (doc_id, text) batch — in-row
-    * shingling and array_min minhashing, no shuffle (see
-    * TextOps.qMinhashLsh for the formulation notes). The t52 quality
+  /** Doc-level signature rows for a (doc_id, text) batch, signed by
+    * the batch gates' own MinHash kernel ([[TextOps.shingled]] →
+    * [[TextOps.withMinhashes]] → [[TextOps.bandKey]]): in-row, no
+    * shuffle, bit-identical to t28's signatures. The t52 quality
     * score is computed here too — at arrival, while the text is in
     * hand — so a document paired in a LATER drop (its text long gone
     * from the stream) can still be survivor-elected: the pair report
@@ -161,28 +164,11 @@ object IncrementalDedup {
         graft.functions.UnicodeNormalize.register(docs.sparkSession)
         docs.withColumn("text", expr("nfc_normalize(text)"))
       }
-    val base = graft.operators.TextOps.withQualityScore(
-        text.withColumn("words", expr("filter(split(text, ' '), w -> w != '')")))
-      .select(col("doc_id"), col("score"), array_distinct(
-        expr("case when size(words) < 3 then array() " +
-          "else transform(sequence(1, size(words) - 2), " +
-          "i -> array_join(slice(words, i, 3), ' ')) end")).as("shs"))
-      .withColumn("n", size(col("shs")).cast("long"))
-      .filter(col("n") > 0)
-    // one md5 per shingle + Kirsch–Mitzenmacher mixing — the same
-    // signature family as the batch operator (TextOps.minhashSigs):
-    // h_i = (a + i·b) mod 2^40 over the digest's two 40-bit halves
-    val withHalves = base.withColumn("hp", expr(
-      "transform(shs, x -> named_struct(" +
-        "'a', cast(conv(substring(md5(x), 1, 10), 16, 10) as bigint), " +
-        "'b', cast(conv(substring(md5(x), 11, 10), 16, 10) as bigint)))"))
-    val sigs = (1 to 2 * Bands).foldLeft(withHalves) { case (df, i) =>
-      df.withColumn(s"h$i", array_min(
-        expr(s"transform(hp, p -> (p.a + $i * p.b) % 1099511627776)")))
-    }
+    val scored = TextOps.withQualityScore(text.withColumn("words", TextOps.wordsCol))
+    val sigs = TextOps.withMinhashes(
+      TextOps.shingled(scored, col("doc_id"), col("score")).filter(col("n") > 0))
     (1 to Bands).foldLeft(sigs) { case (df, b) =>
-      df.withColumn(s"b$b",
-        concat_ws(":", col(s"h${2 * b - 1}"), col(s"h${2 * b}")))
+      df.withColumn(s"b$b", TextOps.bandKey(b))
     }.select(indexSchema.fieldNames.toIndexedSeq.map(col): _*)
   }
 

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 import org.apache.spark.sql.types._
@@ -15,7 +14,8 @@ import graft.operators.TrainingOps
   * DROPS (the t82 class: same ≥50-token passage, arbitrary alignment,
   * too little whole-document overlap for LSH) went unseen.
   *
-  * The persisted artifact is t82's seeding relation itself: one row
+  * The persisted artifact is t82's seeding relation itself, built by
+  * the batch family's window kernel (TrainingOps.spanWindows): one row
   * per stride-1 token window, (doc_id, pos, h64) with h64 the 60-bit
   * md5-prefix fingerprint (the t65/t83 narrow-key discipline — 4×
   * fewer shuffled/stored bytes than the hex string; a fingerprint
@@ -54,7 +54,8 @@ import graft.operators.TrainingOps
   *     shuffles one row per distinct window hash plus the batch delta;
   *  3. probes new-vs-all (never old-vs-old: those pairs were reported
   *     when their younger side arrived) and extends matches to
-  *     maximal spans by t82's diagonal gaps-and-islands, emitting
+  *     maximal spans by t82's diagonal gaps-and-islands kernel
+  *     (TrainingOps.maximalSpans), emitting
   *     (doc_a, doc_b, start_a, start_b, span_len) for spans ≥
   *     MinSpan;
   *  4. commits windows + docs + caps + spans atomically (step 2's
@@ -99,22 +100,11 @@ object IncrementalSpanIndex {
     StructField("span_len", LongType, nullable = true)))
 
   /** Stride-1 window fingerprints for a (doc_id, text) batch — the
-    * same SpanL-token window + md5 construction as the batch family,
-    * truncated to the 60-bit fingerprint in-row.
+    * batch span family's window kernel ([[TrainingOps.spanWindows]])
+    * hashing each window to its 60-bit fingerprint in-row.
     */
-  def windowRows(docs: DataFrame): DataFrame = {
-    val L = TrainingOps.SpanL
-    docs
-      .withColumn("words", expr("filter(split(text, ' '), w -> w != '')"))
-      .withColumn("n", size(col("words")))
-      .filter(col("n") >= L)
-      .select(col("doc_id"), posexplode(expr(
-        s"""transform(sequence(1, n - $L + 1),
-              i -> cast(conv(substring(md5(array_join(slice(words, i, $L), ' ')),
-                             1, 15), 16, 10) as bigint))"""))
-        .as(Seq("p0", "h64")))
-      .select(col("doc_id"), (col("p0") + 1).cast("long").as("pos"), col("h64"))
-  }
+  def windowRows(docs: DataFrame): DataFrame =
+    TrainingOps.spanWindows(docs, "h64", TrainingOps.windowH64)
 
   /** Current committed window index (union of every published epoch's
     * delta; empty if never written).
@@ -208,21 +198,11 @@ object IncrementalSpanIndex {
       // a new-vs-new pair matches from both fresh sides — dedup the
       // normalized rows before island construction
       .distinct()
-      .withColumn("d", col("pa") - col("pb"))
 
-    val w = Window.partitionBy(col("doc_a"), col("doc_b"), col("d"))
-      .orderBy(col("pa"))
-    // No localCheckpoint: the committed index is stable until the
-    // marker below, so the span plan materializes exactly once — by
-    // the epoch write — against an unmoving listing
-    val spans = m.withColumn("isl", col("pa") - row_number().over(w))
-      .groupBy(col("doc_a"), col("doc_b"), col("d"), col("isl"))
-      .agg(min(col("pa")).as("start_a"), min(col("pb")).as("start_b"),
-        (max(col("pa")) - min(col("pa")) + lit(TrainingOps.SpanL.toLong))
-          .as("span_len"))
-      .filter(col("span_len") >= TrainingOps.MinSpan)
-      .select(col("doc_a"), col("doc_b"), col("start_a"), col("start_b"),
-        col("span_len"))
+    // t82's own island kernel. No localCheckpoint: the committed index
+    // is stable until the marker below, so the span plan materializes
+    // exactly once — by the epoch write — against an unmoving listing
+    val spans = TrainingOps.maximalSpans(m)
     StreamingState.commitAppend(spark, indexPath, batchId,
       Map("windows" -> fresh, "docs" -> newDocs, "caps" -> caps,
         "spans" -> spans))

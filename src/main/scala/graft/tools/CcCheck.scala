@@ -144,14 +144,7 @@ object CcCheck {
 
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.app.Cli.session("graft-cc-check")
     val errs = check(spark, dir)
     if (errs.isEmpty) println(s"[cc-check] $dir: t40 + t52 + t78 verified against driver-side union-find")
     else { errs.foreach(e => println(s"[cc-check] MISMATCH: $e")); }

@@ -190,15 +190,7 @@ object CrashCheck {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val drops = args.lift(1).map(_.toInt).getOrElse(4)
     val seed = args.lift(2).map(_.toLong).getOrElse(42L)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.app.Cli.session("graft-crash-check")
     val errs = check(spark, dir, drops, seed)
     errs.foreach(e => System.err.println(s"[crash-check] DIVERGED: $e"))
     if (errs.nonEmpty) sys.exit(1)

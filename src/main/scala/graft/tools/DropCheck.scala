@@ -385,15 +385,7 @@ object DropCheck {
     val drops = args.lift(1).map(_.toInt).getOrElse(4)
     val legs = args.lift(2).map(_.split(",").map(_.trim).toSet)
       .getOrElse(Set("dedup", "spans", "ann"))
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.app.Cli.session("graft-drop-check")
     val errs =
       (if (legs("dedup")) check(spark, dir, drops) else Seq.empty) ++
       (if (legs("spans")) checkSpans(spark, dir, drops) else Seq.empty) ++

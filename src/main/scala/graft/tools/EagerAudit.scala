@@ -11,17 +11,12 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 object EagerAudit {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.app.Cli.session("graft-eager-audit")
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new AtomicInteger(0)
     spark.sparkContext.addSparkListener(new SparkListener {

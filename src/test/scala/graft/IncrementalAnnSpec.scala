@@ -61,6 +61,9 @@ class IncrementalAnnSpec extends AnyFunSuite {
     val vectors = IncrementalAnn.readIndex(spark, indexPath)
     assert(vectors.count() == b1.size + 2)
     assert(spark.read.parquet(s"$indexPath/planes").count() == 16)
+    // vector 2's stored sign bits under the 16 seed planes: a signing
+    // change would orphan every existing index
+    assert(vectors.filter("vec_id = 2").select("bucket").head().getLong(0) == 23510L)
 
     // replay (streaming retry): no-op, no duplicate index rows
     val replay = IncrementalAnn.probeAndUpdate(

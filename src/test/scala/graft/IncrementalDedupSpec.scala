@@ -93,6 +93,12 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(new String(java.nio.file.Files.readAllBytes(marker), "UTF-8").trim == "3")
     // and re-opening the index it stamped is fine
     assert(IncrementalDedup.readIndex(spark, idx1).count() == 1)
+    // version 3's stored band keys of one fixed document: a signing
+    // change that keeps the version number would orphan every index
+    val bands = IncrementalDedup.readIndex(spark, idx1)
+      .select("b1", "b2", "b3", "b4").head().toSeq
+    assert(bands === Seq("53634904476:37802870661", "15921935987:1681461917",
+      "3378169725:103711068037", "42922012243:82053776517"))
 
     // an index stamped with a DIFFERENT scheme version must refuse
     val idx2 = base.resolve("v1").toString

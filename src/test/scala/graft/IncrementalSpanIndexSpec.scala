@@ -47,6 +47,11 @@ class IncrementalSpanIndexSpec extends AnyFunSuite {
     s1.unpersist()
     val indexed1 = IncrementalSpanIndex.readIndex(spark, idx).count()
     assert(indexed1 > 0)
+    // the stored fingerprint of one fixed window ("u1 … u20"): a
+    // window-hash change would orphan every existing index
+    val h64 = IncrementalSpanIndex.readIndex(spark, idx)
+      .filter("doc_id = 2 AND pos = 1").select("h64").head().getLong(0)
+    assert(h64 === 1121449428756991352L)
 
     // drop 2: doc 3 quotes the same passage after 10 different filler
     // tokens — the match must come from doc 1's PERSISTED windows
