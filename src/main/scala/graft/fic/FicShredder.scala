@@ -11,9 +11,15 @@ import org.apache.spark.sql.functions._
   * equivalent (SURVEY §7.4.1) is a deterministic natural-key hash —
   * xxhash64 over (url, nombre_fic, fecha_corte, filename) — so children
   * join to parents without any sequence coordination, task retries are
-  * idempotent, and re-runs produce identical ids. Every child table is a
-  * narrow per-row explode of its parent document: the whole shred is one
-  * scan, zero shuffles.
+  * idempotent, and re-runs produce identical ids.
+  *
+  * The shred is written once, in the per-document form ([[nested]]): one
+  * row per document holding `fic_id` and, per table, an `array<struct>`
+  * of that document's rows in the table (one element for the one-row
+  * tables fic, caracteristicas, calificacion and raw_json). The load
+  * writes every table of a document from that one row. The nine
+  * per-table frames of [[Shredded]] are `inline` views of it, so a
+  * table's column expressions exist in one place only.
   */
 object FicShredder {
 
@@ -23,6 +29,12 @@ object FicShredder {
     coalesce(col("fic.nombre_fic"), lit("")),
     coalesce(col("fic.fecha_corte"), lit("")),
     coalesce(col("filename"), lit("")))
+
+  /** The nine tables, parents first: the column names of [[nested]]. */
+  val Tables: Seq[String] = Seq("fic", "composicion_portafolio",
+    "plazo_duracion", "caracteristicas", "calificacion",
+    "principales_inversiones", "rentabilidad_historica",
+    "volatilidad_historica", "raw_json")
 
   final case class Shredded(
       fic: DataFrame,
@@ -34,16 +46,10 @@ object FicShredder {
       rentabilidadHistorica: DataFrame,
       volatilidadHistorica: DataFrame,
       rawJson: DataFrame) {
-    def all: Seq[(String, DataFrame)] = Seq(
-      "fic" -> fic,
-      "composicion_portafolio" -> composicionPortafolio,
-      "plazo_duracion" -> plazoDuracion,
-      "caracteristicas" -> caracteristicas,
-      "calificacion" -> calificacion,
-      "principales_inversiones" -> principalesInversiones,
-      "rentabilidad_historica" -> rentabilidadHistorica,
-      "volatilidad_historica" -> volatilidadHistorica,
-      "raw_json" -> rawJson)
+    def all: Seq[(String, DataFrame)] = Tables.zip(Seq(fic,
+      composicionPortafolio, plazoDuracion, caracteristicas, calificacion,
+      principalesInversiones, rentabilidadHistorica, volatilidadHistorica,
+      rawJson))
   }
 
   private val CompCats = Seq(
@@ -56,81 +62,85 @@ object FicShredder {
     ("por_moneda", "moneda", "moneda"),
     ("por_calificacion", "calificacion", "calificacion"))
 
-  /** `df` = output of [[FicTransform]] plus the `filename` column. */
-  def apply(df: DataFrame): Shredded = {
-    val base = df.withColumn("fic_id", ficIdCol)
+  /** One table row per element of `arr` (a null array has no rows). */
+  private def rows(arr: Column)(fields: Column => Seq[Column]): Column =
+    transform(arr, it => struct(fields(it): _*))
 
-    val fic = base.select(
-      col("fic_id"),
-      coalesce(col("fic.nombre_fic"), lit("")).as("nombre_fic"),
-      coalesce(col("fic.gestor"), lit("")).as("gestor"),
-      col("fic.custodio").as("custodio"),
-      col("fic.fecha_corte").as("fecha_corte"),
-      col("fic.politica_de_inversion").as("politica_de_inversion"),
-      coalesce(col("fic.tipo"), lit("")).as("tipo"),
-      coalesce(col("fic.url"), lit("")).as("url"))
-
-    // U3: six category arrays -> (fic_id, tipo_composicion, categoria,
+  /** The per-document form: one row per document of `df` (output of
+    * [[FicTransform]] plus the `filename` column) with `fic_id` and one
+    * `array<struct>` column per table of [[Tables]]; the struct fields
+    * are the table's columns after `fic_id`.
+    */
+  def nested(df: DataFrame): DataFrame = {
+    // U3: six category arrays -> (tipo_composicion, categoria,
     // participacion). Falsy category values collapse to '' exactly like
     // the load-side or-chain (load.py:259-260).
-    val comp = CompCats.map { case (field, tipo, key) =>
-      base.select(col("fic_id"),
-          explode(col(s"composicion_portafolio.$field")).as("it"))
-        .select(
-          col("fic_id"),
+    val comp = concat(CompCats.map { case (field, tipo, key) =>
+      coalesce(
+        rows(col(s"composicion_portafolio.$field"))(it => Seq(
           lit(tipo).as("tipo_composicion"),
-          coalesce(col(s"it.$key"), lit("")).as("categoria"),
-          col("it.participacion").as("participacion"))
-    }.reduce(_ unionAll _)
+          coalesce(it.getField(key), lit("")).as("categoria"),
+          it.getField("participacion").as("participacion"))),
+        array())
+    }: _*)
 
-    val plazos = base.select(col("fic_id"), explode(col("plazo_duracion")).as("it"))
-      .select(col("fic_id"), col("it.plazo").as("plazo"),
-        col("it.participacion").as("participacion"))
+    def rvColumns(rv: Column, st: String): Seq[Column] =
+      rv.getField("tipo_de_participacion").as("tipo_participacion") +: Seq(
+        "ultimo_mes", "ultimos_6_meses", "anio_corrido",
+        "ultimo_anio", "ultimos_2_anios", "ultimos_3_anios")
+        .map(h => rv.getField(st).getField(h).as(h))
 
-    val caracteristicas = base.select(
-      col("fic_id"),
-      col("caracteristicas.tipo").as("tipo"),
-      col("caracteristicas.valor").as("valor"),
-      col("caracteristicas.fecha_inicio_operaciones").as("fecha_inicio_operaciones"),
-      col("caracteristicas.no_unidades_en_circulacion").as("no_unidades_en_circulacion"))
+    df.select(
+      ficIdCol.as("fic_id"),
+      array(struct(
+        coalesce(col("fic.nombre_fic"), lit("")).as("nombre_fic"),
+        coalesce(col("fic.gestor"), lit("")).as("gestor"),
+        col("fic.custodio").as("custodio"),
+        col("fic.fecha_corte").as("fecha_corte"),
+        col("fic.politica_de_inversion").as("politica_de_inversion"),
+        coalesce(col("fic.tipo"), lit("")).as("tipo"),
+        coalesce(col("fic.url"), lit("")).as("url"))).as("fic"),
+      comp.as("composicion_portafolio"),
+      rows(col("plazo_duracion"))(it => Seq(
+        it.getField("plazo").as("plazo"),
+        it.getField("participacion").as("participacion"))).as("plazo_duracion"),
+      array(struct(
+        col("caracteristicas.tipo").as("tipo"),
+        col("caracteristicas.valor").as("valor"),
+        col("caracteristicas.fecha_inicio_operaciones").as("fecha_inicio_operaciones"),
+        col("caracteristicas.no_unidades_en_circulacion")
+          .as("no_unidades_en_circulacion"))).as("caracteristicas"),
+      array(struct(
+        col("calificacion.calificacion").as("calificacion"),
+        col("calificacion.fecha_ultima_calificacion").as("fecha_ultima_calificacion"),
+        col("calificacion.entidad_calificadora").as("entidad_calificadora"),
+        col("calificacion.entidad_calificadora_normalizada")
+          .as("entidad_calificadora_normalizada"))).as("calificacion"),
+      rows(col("principales_inversiones"))(it => Seq(
+        it.getField("emisor").as("emisor"),
+        it.getField("participacion").as("participacion")))
+        .as("principales_inversiones"),
+      rows(col("rentabilidad_volatilidad"))(rvColumns(_, "rentabilidad_historica_ea"))
+        .as("rentabilidad_historica"),
+      rows(col("rentabilidad_volatilidad"))(rvColumns(_, "volatilidad_historica"))
+        .as("volatilidad_historica"),
+      array(struct(
+        to_json(struct(col("fic"), col("plazo_duracion"),
+          col("composicion_portafolio"), col("caracteristicas"),
+          col("calificacion"), col("principales_inversiones"),
+          col("rentabilidad_volatilidad"))).as("json_data"),
+        lit("transformed").as("tipo"),
+        col("filename").as("filename"))).as("raw_json"))
+  }
 
-    val calificacion = base.select(
-      col("fic_id"),
-      col("calificacion.calificacion").as("calificacion"),
-      col("calificacion.fecha_ultima_calificacion").as("fecha_ultima_calificacion"),
-      col("calificacion.entidad_calificadora").as("entidad_calificadora"),
-      col("calificacion.entidad_calificadora_normalizada")
-        .as("entidad_calificadora_normalizada"))
+  /** One table of the per-document form as flat rows (fic_id, columns). */
+  def table(nested: DataFrame, name: String): DataFrame =
+    nested.select(col("fic_id"), inline(col(name)))
 
-    val inversiones = base.select(col("fic_id"),
-        explode(col("principales_inversiones")).as("it"))
-      .select(col("fic_id"), col("it.emisor").as("emisor"),
-        col("it.participacion").as("participacion"))
-
-    def horizons(st: String): Seq[Column] = Seq(
-      "ultimo_mes", "ultimos_6_meses", "anio_corrido",
-      "ultimo_anio", "ultimos_2_anios", "ultimos_3_anios")
-      .map(h => col(s"rv.$st.$h").as(h))
-
-    val rvBase = base.select(col("fic_id"),
-      explode(col("rentabilidad_volatilidad")).as("rv"))
-    val rent = rvBase.select(
-      col("fic_id") +: col("rv.tipo_de_participacion").as("tipo_participacion") +:
-        horizons("rentabilidad_historica_ea"): _*)
-    val vol = rvBase.select(
-      col("fic_id") +: col("rv.tipo_de_participacion").as("tipo_participacion") +:
-        horizons("volatilidad_historica"): _*)
-
-    val rawJson = base.select(
-      col("fic_id"),
-      to_json(struct(col("fic"), col("plazo_duracion"),
-        col("composicion_portafolio"), col("caracteristicas"),
-        col("calificacion"), col("principales_inversiones"),
-        col("rentabilidad_volatilidad"))).as("json_data"),
-      lit("transformed").as("tipo"),
-      col("filename").as("filename"))
-
-    Shredded(fic, comp, plazos, caracteristicas, calificacion,
-      inversiones, rent, vol, rawJson)
+  /** `df` = output of [[FicTransform]] plus the `filename` column. */
+  def apply(df: DataFrame): Shredded = {
+    val docs = nested(df)
+    val t = Tables.map(table(docs, _))
+    Shredded(t(0), t(1), t(2), t(3), t(4), t(5), t(6), t(7), t(8))
   }
 }

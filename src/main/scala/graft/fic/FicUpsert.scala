@@ -36,7 +36,10 @@ object FicUpsert {
   final case class Merged(
       /** snapshot after the merge */
       fic: DataFrame,
-      /** (fic_id, action ∈ insert|update|noop) for the incoming rows */
+      /** (fic_id, action ∈ insert|update|noop, old_fic_id) for the
+        * incoming rows; old_fic_id is the superseded version's fic_id on
+        * the update path and null otherwise
+        */
       actions: DataFrame,
       /** fic_ids whose child rows must be replaced (update path) */
       replacedIds: DataFrame)
@@ -97,7 +100,8 @@ object FicUpsert {
 
     val classified = probed.withColumn("action", action)
 
-    val actions = classified.select(col("fic_id"), col("action"))
+    val actions = classified.select(col("fic_id"), col("action"),
+      when(col("action") === "update", col("old_fic_id")).as("old_fic_id"))
     val replacedIds = classified.filter(col("action") === "update")
       .select(col("old_fic_id").as("fic_id"))
 

@@ -67,6 +67,10 @@ class FicLoadSpec extends AnyFunSuite {
     val act = m.actions.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(act == Map(10L -> "update", 11L -> "noop", 12L -> "insert",
       13L -> "insert", 14L -> "insert"))
+    // only the update names the version it supersedes
+    val old = m.actions.collect().map(r => r.getLong(0) -> Option(r.get(2))).toMap
+    assert(old == Map(10L -> Some(1L), 11L -> None, 12L -> None,
+      13L -> None, 14L -> None))
 
     val ficRows = m.fic.collect().map(_.getLong(0)).toSet
     // 1 replaced by 10; 2 and 3 survive; 12,13,14 inserted
