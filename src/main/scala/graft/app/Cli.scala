@@ -113,49 +113,54 @@ object GraftTransform {
 
   /** The transform stage over an already-loaded raw frame: 8-pass
     * chain, per-document JSON side-output, warning counts, skip list.
-    * Returns the transformed frame PERSISTED — the stage itself runs
-    * several actions (write, counts, date check) and the similarity
-    * UDF chain must not re-execute per action; callers unpersist when
-    * done.
+    * Returns the transformed frame PERSISTED (the JSON write materializes
+    * it; the bookkeeping reads the cache); callers unpersist when done.
     */
   def transformAndWrite(raw: DataFrame, lookup: FicLookup, out: String,
-      folderName: String): DataFrame = {
+      folderName: String): DataFrame = stage(raw, lookup, out, folderName)._1
+
+  /** [[transformAndWrite]], also returning the skip-listed file names.
+    * Two Spark executions: the JSON write, then ONE aggregate for the
+    * document and warning counts and the skip list, from which the
+    * skip-list file and the log lines are written.
+    */
+  private[app] def stage(raw: DataFrame, lookup: FicLookup, out: String,
+      folderName: String): (DataFrame, Seq[String]) = {
     val transformed = FicTransform(raw, lookup)
       .persist(StorageLevel.MEMORY_AND_DISK)
     FicSources.writePerDocumentJson(transformed, out)
-    val warnings = Validation.sumWarnings(transformed)
-    val skipped = Validation.dateFolderCheck(transformed, folderName)
-    Validation.writeSkipList(skipped,
+    val summary = Validation.summarize(transformed, folderName)
+    Validation.writeSkipList(summary.skipped,
       new java.io.File(out, "skip_list.txt").getPath)
     RunLog.withLog("graft.transform") { log =>
-      val nWarn = warnings.count()
-      val msg = s"transform complete: ${transformed.count()} docs, " +
-        s"$nWarn sum warnings"
+      val msg = s"transform complete: ${summary.docs} docs, " +
+        s"${summary.warnings} sum warnings"
       log.foreach { l =>
-        if (nWarn > 0) l.warning(msg) else l.info(msg)
+        if (summary.warnings > 0) l.warning(msg) else l.info(msg)
         // the skip list is already bounded (one line per mismatched
         // document of the batch folder) — mirror it at WARNING level
-        skipped.filter(!col("fecha_valida")).select(col("filename"))
-          .orderBy(col("filename")).collect()
-          .foreach(r => l.warning(s"transform: skip-listed ${r.getString(0)}"))
+        summary.skipped.foreach(f => l.warning(s"transform: skip-listed $f"))
       }
       println(msg)
     }
-    transformed
+    (transformed, summary.skipped)
   }
 
+  /** The stage over a raw JSON folder: the persisted transformed frame
+    * and the skip-listed file names.
+    */
   def run(spark: SparkSession, in: String, out: String,
-      ficsPath: Option[String]): DataFrame = {
+      ficsPath: Option[String]): (DataFrame, Seq[String]) = {
     val lookup = ficsPath.map(FicSources.ficsLookup).getOrElse(FicLookup(Nil))
     val raw = FicSources.rawJsonFolder(spark, in)
-    transformAndWrite(raw, lookup, out, new java.io.File(in).getName)
+    stage(raw, lookup, out, new java.io.File(in).getName)
   }
 
   def main(args: Array[String]): Unit = {
     val in = Cli.arg(args, "--input").getOrElse(sys.error("--input required"))
     val out = Cli.arg(args, "--output").getOrElse(sys.error("--output required"))
     val spark = Cli.session("graft-transform")
-    run(spark, in, out, Cli.arg(args, "--fics")).unpersist()
+    run(spark, in, out, Cli.arg(args, "--fics"))._1.unpersist()
     spark.stop()
   }
 }
@@ -231,15 +236,16 @@ private[app] object Fused {
       concat(regexp_replace(col("filename"), "\\.json$", ""),
         lit("_transformed.json")))
 
-  /** T+L tail shared by both fused drivers: date-check skip filter
-    * (applied in-memory, equal to the staged `--skip-list` anti-join)
-    * then the load stage, all without re-reading the side-outputs.
+  /** T+L tail shared by both fused drivers: the transform stage's
+    * skip-listed file names filtered out in memory (equal to the staged
+    * `--skip-list` anti-join), then the load stage, all without
+    * re-reading the side-outputs.
     */
   def loadTransformed(spark: SparkSession, transformed: DataFrame,
-      folderName: String, url: String): (Long, Long) = {
-    val bad = Validation.dateFolderCheck(transformed, folderName)
-      .filter(!col("fecha_valida")).select(col("filename"))
-    val kept = transformed.join(broadcast(bad), Seq("filename"), "left_anti")
+      skipped: Seq[String], url: String): (Long, Long) = {
+    val kept =
+      if (skipped.isEmpty) transformed
+      else transformed.filter(!col("filename").isin(skipped: _*))
     GraftLoad.run(spark, toTransformedNaming(kept), url)
   }
 }
@@ -268,9 +274,9 @@ object GraftPipeline {
     // month-named directory in the reference layout) — the fixed
     // "raw" work subdirectory could never match the date pattern
     val folderName = new java.io.File(folder).getName
-    val transformed = GraftTransform
-      .transformAndWrite(raw, lookup, s"$work/transformed", folderName)
-    val res = Fused.loadTransformed(spark, transformed, folderName, url)
+    val (transformed, skipped) = GraftTransform
+      .stage(raw, lookup, s"$work/transformed", folderName)
+    val res = Fused.loadTransformed(spark, transformed, skipped, url)
     transformed.unpersist()
     docs.unpersist()
     res
@@ -628,9 +634,8 @@ object GraftTransformLoad {
 
   def run(spark: SparkSession, in: String, out: String, url: String,
       ficsPath: Option[String]): (Long, Long) = {
-    val transformed = GraftTransform.run(spark, in, out, ficsPath)
-    val res = Fused.loadTransformed(spark, transformed,
-      new java.io.File(in).getName, url)
+    val (transformed, skipped) = GraftTransform.run(spark, in, out, ficsPath)
+    val res = Fused.loadTransformed(spark, transformed, skipped, url)
     transformed.unpersist()
     res
   }

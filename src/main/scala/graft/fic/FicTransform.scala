@@ -1,7 +1,16 @@
 package graft.fic
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import java.util.regex.Pattern
+
+import org.apache.spark.sql.{DataFrame, GraftColumn}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{CreateNamedStruct, ExpectsInputTypes, Expression, GenericInternalRow, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.util.{ArrayData, CollationSupport, GenericArrayData}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.{PyRound, Similarity, SpanishDate}
 
 /** Bank→fund→URL lookup (the reference's `fics.json`,
@@ -13,20 +22,21 @@ import graft.functions.{PyRound, Similarity, SpanishDate}
 final case class FicLookup(banks: Seq[(String, Seq[(String, String)])])
     extends Serializable {
   def isEmpty: Boolean = banks.isEmpty
+  /** Plans print the kernel's arguments: a count, not the whole lookup. */
+  override def toString: String = s"FicLookup(${banks.size} banks)"
 }
 
 /** The FIC transform chain — the reference's 8 passes
   * (/root/reference/src/etl/transform.py:19-68) as one
   * DataFrame → DataFrame function.
   *
-  * Spark-first design (SURVEY §3.2): every pass is a narrow per-row
-  * projection; pass 1's per-category aggregate runs INSIDE the row via
-  * array higher-order functions (`aggregate`/`filter`/`transform`), so
-  * the whole chain is shuffle-free — at 100 TB it is a single
-  * scan→project stage. The only non-built-in pieces are `py_round`
-  * (a codegen'd Catalyst expression for CPython rounding parity) and
-  * three scalar UDFs (Spanish dates, fuzzy agency match, fuzzy URL
-  * lookup) whose semantics are inherently procedural string algorithms.
+  * Every pass reads one document only, so the chain is one
+  * [[FicKernel]] per row: plain Scala over the nested record, wrapped as
+  * a single Catalyst expression. The plan is a scan and two narrow
+  * projections, shuffle-free and stream-safe, and it is small enough
+  * that a cold JVM plans it in milliseconds. The passes reuse the
+  * scalar functions below plus [[SpanishDate.parse]] and
+  * [[PyRound.round]] (CPython rounding parity).
   *
   * Divergence from the reference, by design: string-typed participation
   * values inside a category would crash the reference's format inference
@@ -160,276 +170,213 @@ object FicTransform {
   /** `limpiar_valor` (transform.py:70-86): ÷1000 while > 1e6, then
     * CPython round(·, 2). The iterative division is kept (each step
     * rounds in IEEE) — a closed-form pow division would differ in ulps.
+    * +Infinity (an overflowing number token) stays as it is instead of
+    * looping forever.
     */
   def limpiarValor(v: java.lang.Double): java.lang.Double = {
     if (v == null) return null
     var x = v.doubleValue()
     if (x == 0.0) return 0.0
-    while (x > 1000000.0) x /= 1000.0
+    while (x > 1000000.0 && !x.isInfinite) x /= 1000.0
     PyRound.round(x, 2)
   }
 
-  // ---------------------------------------------------------------------
-  // SQL fragments (pass 1) — evaluated entirely inside the row.
-  // ---------------------------------------------------------------------
-
-  /** Parse a string-or-number percentage. The schema reads numeric
-    * leaves as strings, so JSON NUMBER tokens (incl. exponent notation)
-    * arrive as number-literal text and take the direct cast — matching
-    * the reference's float branch. Everything else takes the reference's
-    * STRING branch: strip all but [0-9.,%-], comma→dot; a surviving '%'
-    * fails the parse → null (transform.py:592-597), and 'NaN'/'Infinity'
-    * strings clean to unparseable → null, exactly like Python.
-    */
-  private def numberLit(x: String): String =
-    s"trim($x) rlike '^-?[0-9]+(\\\\.[0-9]+)?([eE][+-]?[0-9]+)?$$'"
-
-  private def parseSql(x: String): String =
-    s"case when ${numberLit(x)} then cast(trim($x) as double) " +
-      s"else try_cast(replace(regexp_replace(trim($x), '[^0-9.,%-]', ''), ',', '.') as double) end"
-
-  /** Let-binding for SQL fragments: evaluate `value` ONCE, expose it to
-    * `body` as lambda variable `v`. A plain alias column would be
-    * re-INLINED at every use site by CollapseProject once the projects
-    * merge (each alias is referenced once per use site, so the collapse
-    * fires) — and an alias referenced inside a HOF lambda body is then
-    * re-evaluated PER ELEMENT. A lambda variable cannot be inlined away,
-    * so the hoist survives every optimizer pass. The wrapper is two
-    * O(1) array ops per row.
-    */
-  private def bind1(value: String, v: String, body: String): String =
-    s"element_at(transform(array($value), $v -> $body), 1)"
-
-  /** Category format inference (`_determinar_formato_categoria`,
-    * transform.py:537-566) over the parsed values of one array column.
-    * The parsed-values array and its sum are [[bind1]]-bound: inlining
-    * them at each of the 6 use sites octuples the expression tree (the
-    * pre-r15 planning cost of f37) and re-runs the whole-array
-    * aggregation per branch.
-    */
-  private def formatSql(arr: String): String = {
-    val vals = s"filter(transform($arr, it -> ${parseSql("it.participacion")}), v -> v is not null)"
-    bind1(vals, "__vs", bind1(
-      "aggregate(__vs, cast(0 as double), (a, v) -> a + v)", "__sum",
-      """
-      CASE
-        WHEN size(filter(__vs, v -> v > cast(1 as double))) >
-             size(filter(__vs, v -> v <= cast(1 as double)))
-             AND __sum BETWEEN 90 AND 110 THEN 'x100'
-        WHEN size(filter(__vs, v -> v <= cast(1 as double))) >
-             size(filter(__vs, v -> v > cast(1 as double)))
-             AND __sum BETWEEN 0.9 AND 1.1 THEN '/100'
-        WHEN __sum BETWEEN 90 AND 110 THEN 'x100'
-        WHEN __sum BETWEEN 0.9 AND 1.1 THEN '/100'
-        ELSE 'desconocido'
-      END"""))
-  }
-
-  /** Smart per-value conversion (`_convertir_porcentaje_inteligente` +
-    * `_convertir_porcentaje_individual`, transform.py:572-632) given the
-    * category format.
-    */
-  private def convertSql(v: String, fmt: String): String =
-    s"""
-      CASE
-        WHEN $v IS NULL THEN NULL
-        WHEN $fmt = 'x100' THEN py_round($v / 100.0, 6)
-        WHEN $fmt = '/100' THEN py_round($v, 6)
-        WHEN abs($v) BETWEEN 0.9 AND 1.1 THEN py_round($v, 6)
-        WHEN abs($v) BETWEEN 90 AND 110 THEN py_round($v / 100.0, 6)
-        WHEN abs($v) > 1.1 THEN py_round($v / 100.0, 6)
-        ELSE py_round($v, 6)
-      END"""
-
-  /** One percentage array rebuilt with its category format applied.
-    * The category format is [[bind1]]-bound OUTSIDE the element lambda
-    * — evaluated once per row, never per element — and each element's
-    * parsed value is bound once inside it (r15: a fmt hoisted into a
-    * separate column was re-inlined into the lambda by CollapseProject,
-    * re-running the whole-array format aggregation per element).
-    */
-  private def pctArraySql(arr: String, key: String): String =
-    bind1(formatSql(arr), "__f",
-      s"""transform($arr, it -> named_struct(
-         '$key', it.$key,
-         'participacion', ${bind1(parseSql("it.participacion"), "__v",
-           convertSql("__v", "__f"))}))""")
-
-  /** Simple conversion for returns/volatilities
-    * (`_convertir_si_es_necesario`, transform.py:635-661).
-    */
-  private def simpleConvSql(x: String): String =
-    bind1(parseSql(x), "__v",
-      """CASE WHEN __v IS NULL THEN NULL
-            WHEN abs(__v) > 1.0 THEN py_round(__v / 100.0, 6)
-            ELSE py_round(__v, 6) END""")
-
-  private def horizonsSql(st: String): String =
-    "named_struct(" + Seq("ultimo_mes", "ultimos_6_meses", "anio_corrido",
-      "ultimo_anio", "ultimos_2_anios", "ultimos_3_anios")
-      .map(h => s"'$h', ${simpleConvSql(s"$st.$h")}").mkString(", ") + ")"
-
-  /** `_parse_numero` (transform.py:790-805): number tokens cast
-    * directly (the reference's float branch); strings strip all but
-    * [0-9.-] and cast.
-    */
-  private def parseNumeroSql(x: String): String =
-    s"case when ${numberLit(x)} then cast(trim($x) as double) " +
-      s"else try_cast(regexp_replace(trim($x), '[^0-9.-]', '') as double) end"
-
-  // ---------------------------------------------------------------------
-  // The chain.
-  // ---------------------------------------------------------------------
-
-  /** Apply the 8-pass transform. `df` must carry a `filename` column
-    * plus the [[FicSchema.raw]] top-level columns.
+  /** Apply the 8-pass transform. `df` must carry the [[FicSchema.raw]]
+    * top-level columns, plus `filename` when `lookup` is non-empty.
+    * Every other column passes through and the input column order is
+    * kept. [[FicKernel]] runs once per row; the seven transformed
+    * columns are read out of its result.
     */
   def apply(df: DataFrame, lookup: FicLookup): DataFrame = {
-    val spark = df.sparkSession
-    PyRound.register(spark)
-
-    val parseDateUdf = udf { s: String =>
-      // falsy values pass through UNCHANGED ("" stays "", null stays
-      // null) — the reference's `if fecha_val` guard skips them
-      if (s == null || s.isEmpty) s
-      else {
-        val p = SpanishDate.parse(s)
-        if (p != null) p else s
-      }
-    }
-    val agencyUdf = udf { ent: String => matchAgency(ent).orNull }
-    val lk = lookup
-    val urlUdf = udf { filename: String => urlForFilename(filename, lk).orNull }
-    val limpiarUdf = udf { v: java.lang.Double => limpiarValor(v) }
-
-    val compCats = Seq(
-      "por_activo" -> "activo", "por_tipo_de_renta" -> "tipo",
-      "por_sector_economico" -> "sector", "por_pais_emisor" -> "pais",
-      "por_moneda" -> "moneda", "por_calificacion" -> "calificacion")
-
-    // -- pass 1: percentages --------------------------------------------
-    // category formats bound ONCE PER ROW inside each rebuild expression
-    // ([[bind1]] — lambda-bound, so no optimizer pass can push them back
-    // into the element lambdas the way the r14 fmt pre-columns were)
-    val rvRebuild = expr(
-      s"""transform(rentabilidad_volatilidad, rv -> named_struct(
-         'tipo_de_participacion', rv.tipo_de_participacion,
-         'rentabilidad_historica_ea', ${horizonsSql("rv.rentabilidad_historica_ea")},
-         'volatilidad_historica', ${horizonsSql("rv.volatilidad_historica")}))""")
-
-    // ONE projection for all 8 passes (r16, VERDICT #5): after the r15
-    // batching (15 withColumn → 4 withColumns) the residual f37 cost
-    // was the 4 remaining ANALYZER walks over the large nested-lambda
-    // tree. Every pass reads only ORIGINAL df columns (pass 7's
-    // calificacion write touches a field pass 2 passes through
-    // unchanged; pass 8's repairs read the pass-1 arrays, which fold as
-    // coalesce/when around the pass-1 expressions — each used exactly
-    // once, so nothing is duplicated), so the whole chain is a single
-    // withColumns and the analyzer walks the tree ONCE. The optimizer
-    // already collapsed the 4 projections into one physical Project
-    // (bind1 keeps the hoists), so the executed plan is unchanged —
-    // this cuts planning time only. Per-pass semantics are pinned by
-    // the FIC golden suites and the f37 oracle.
-    //
-    // Pass-8 fold equivalences (each checked against the r15 shape):
-    //  - pctArraySql(arr) and rvRebuild are null iff their input array
-    //    is null (transform(null) = null), so
-    //    coalesce(rebuild(arr), empty) == pass-8's
-    //    coalesce(pass-1 output, empty);
-    //  - composicion: pass 1 produced when(isNotNull, compRebuild) —
-    //    i.e. null iff the struct was null — and pass 8 re-wrapped
-    //    per-cat with coalesce; the fold evaluates compRebuild's
-    //    per-cat expression once inside the coalesce.
-    val entOrig = col("calificacion.entidad_calificadora")
-    val applied = entOrig.isNotNull && entOrig =!= ""
-    val matched = agencyUdf(upper(trim(entOrig)))
-    val urlCol =
-      if (lookup.isEmpty) lit(null).cast("string") else urlUdf(col("filename"))
-    val emptyPct = (key: String) =>
-      expr(s"cast(array() as array<struct<$key:string,participacion:double>>)")
-    df.withColumns(Map(
-      // passes 1 + 8: percentage rebuilds with structural repair folded
-      "plazo_duracion" ->
-        coalesce(expr(pctArraySql("plazo_duracion", "plazo")), emptyPct("plazo")),
-      "principales_inversiones" ->
-        coalesce(expr(pctArraySql("principales_inversiones", "emisor")),
-          emptyPct("emisor")),
-      "rentabilidad_volatilidad" ->
-        coalesce(rvRebuild, expr(
-          """cast(array() as array<struct<
-             tipo_de_participacion:string,
-             rentabilidad_historica_ea:struct<ultimo_mes:double,ultimos_6_meses:double,anio_corrido:double,ultimo_anio:double,ultimos_2_anios:double,ultimos_3_anios:double>,
-             volatilidad_historica:struct<ultimo_mes:double,ultimos_6_meses:double,anio_corrido:double,ultimo_anio:double,ultimos_2_anios:double,ultimos_3_anios:double>>>)""")),
-      "composicion_portafolio" ->
-        when(col("composicion_portafolio").isNull,
-          expr("named_struct(" + compCats.map { case (cat, key) =>
-            s"'$cat', cast(array() as array<struct<$key:string,participacion:double>>)"
-          }.mkString(", ") + ")"))
-        .otherwise(expr("named_struct(" + compCats.map { case (cat, key) =>
-          s"'$cat', coalesce(${pctArraySql(s"composicion_portafolio.$cat", key)}, " +
-            s"cast(array() as array<struct<$key:string,participacion:double>>))"
-        }.mkString(", ") + ")")),
-      // pass 2 + pass-7 date field (untouched by pass 2) composed
-      "calificacion" -> col("calificacion")
-        .withField("entidad_calificadora",
-          when(applied && matched.isNotNull, matched).otherwise(entOrig))
-        .withField("entidad_calificadora_normalizada",
-          when(applied, matched.isNotNull).otherwise(lit(null).cast("boolean")))
-        .withField("fecha_ultima_calificacion",
-          parseDateUdf(col("calificacion.fecha_ultima_calificacion"))),
-      // passes 3+4+7 (dates; numerics; monetary rescale — valor composes
-      // parse-then-limpiar in one field write) and 5+6 (fic tipo + url)
-      "fic" -> col("fic")
-        .withField("fecha_corte", parseDateUdf(col("fic.fecha_corte")))
-        .withField("tipo", tipoFicExpr(col("fic.politica_de_inversion")))
-        .withField("url", urlCol),
-      "caracteristicas" -> col("caracteristicas")
-        .withField("fecha_inicio_operaciones",
-          parseDateUdf(col("caracteristicas.fecha_inicio_operaciones")))
-        .withField("valor",
-          limpiarUdf(expr(parseNumeroSql("caracteristicas.valor"))))
-        .withField("no_unidades_en_circulacion",
-          expr(parseNumeroSql("caracteristicas.no_unidades_en_circulacion")))))
+    val doc = CreateNamedStruct(FicKernel.Input.fieldNames.toSeq.flatMap { f =>
+      Seq(Literal(f),
+        if (f == "filename" && lookup.isEmpty) Literal(null, StringType)
+        else UnresolvedAttribute.quoted(f))
+    })
+    df.withColumn(Doc, GraftColumn(FicKernel(doc, lookup)))
+      .withColumns(FicSchema.transformed.fieldNames.map(f => f -> col(s"$Doc.$f")).toMap)
+      .drop(Doc)
   }
 
+  private val Doc = "__fic_doc"
+
+  private val TipoKeywords: Seq[Seq[String]] = Seq(
+    Seq("renta fija", "bonos", "cdt", "certificado de depósito",
+      "tes", "títulos de deuda", "deuda pública", "tasa fija", "fixed income",
+      "instrumentos de deuda", "papeles comerciales", "obligaciones"),
+    Seq("renta variable", "acciones", "equity",
+      "bolsa de valores", "mercado accionario", "stocks", "índices accionarios",
+      "participaciones", "capitalización bursátil"),
+    Seq("mixta", "balanced", "balanceado", "combinado",
+      "renta fija y variable", "fija y variable", "diversificado",
+      "multiactivo", "multi-activo"),
+    Seq("alternativa", "alternative", "hedge fund",
+      "fondos de cobertura", "private equity", "capital privado",
+      "inmobiliario", "real estate", "commodities", "materias primas",
+      "infraestructura", "derivados", "divisas", "forex", "opciones", "futuros"))
+
   /** `_extraer_tipo_fic` (transform.py:107-169): keyword votes per fund
-    * type, argmax in declared order with a content-based fallback chain.
-    * Pure column expressions — no UDF.
+    * type (Renta Fija, Renta Variable, Mixta, Alternativa), argmax in
+    * that order. Of the reference's content fallbacks only "hedge" can
+    * still fire: every other one is a keyword, so it has already voted.
+    * Lower-cases the way Spark's `lower` does (ICU root case mapping).
     */
-  def tipoFicExpr(politicaCol: Column): Column = {
-    val politica = lower(coalesce(politicaCol, lit("")))
+  def tipoFic(politica: String): String = {
+    val p = CollationSupport.Lower
+      .execBinaryICU(UTF8String.fromString(if (politica == null) "" else politica)).toString
+    val Seq(rf, rv, mx, al) = TipoKeywords.map(_.count(p.contains))
+    if (rf > 0 && rf >= rv && rf >= mx && rf >= al) "Renta Fija"
+    else if (rv > 0 && rv >= mx && rv >= al) "Renta Variable"
+    else if (mx > 0 && mx >= al) "Mixta"
+    else if (al > 0 || p.contains("hedge")) "Alternativa"
+    else "Desconocido"
+  }
+}
 
-    val keywords: Seq[(String, Seq[String])] = Seq(
-      "Renta Fija" -> Seq("renta fija", "bonos", "cdt", "certificado de depósito",
-        "tes", "títulos de deuda", "deuda pública", "tasa fija", "fixed income",
-        "instrumentos de deuda", "papeles comerciales", "obligaciones"),
-      "Renta Variable" -> Seq("renta variable", "acciones", "equity",
-        "bolsa de valores", "mercado accionario", "stocks", "índices accionarios",
-        "participaciones", "capitalización bursátil"),
-      "Mixta" -> Seq("mixta", "balanced", "balanceado", "combinado",
-        "renta fija y variable", "fija y variable", "diversificado",
-        "multiactivo", "multi-activo"),
-      "Alternativa" -> Seq("alternativa", "alternative", "hedge fund",
-        "fondos de cobertura", "private equity", "capital privado",
-        "inmobiliario", "real estate", "commodities", "materias primas",
-        "infraestructura", "derivados", "divisas", "forex", "opciones", "futuros"))
+/** The whole 8-pass transform of one document as one Catalyst
+  * expression: `struct(<FicSchema.raw columns>, filename)` →
+  * [[FicSchema.transformed]]. Interpreted only (`CodegenFallback`):
+  * whole-stage codegen calls `eval` once per row, so the plan stays a
+  * scan and two narrow projections whatever the document shape.
+  */
+case class FicKernel(child: Expression, lookup: FicLookup)
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
 
-    def votes(ws: Seq[String]): Column =
-      ws.map(w => when(politica.contains(w), 1).otherwise(0))
-        .reduce(_ + _)
+  override def inputTypes: Seq[StructType] = Seq(FicKernel.Input)
+  override def dataType: DataType = FicSchema.transformed
 
-    val Seq(rf, rv, mx, al) = keywords.map { case (_, ws) => votes(ws) }
+  override protected def nullSafeEval(doc: Any): Any =
+    FicKernel.transform(doc.asInstanceOf[InternalRow], lookup)
 
-    when(rf > 0 && rf >= rv && rf >= mx && rf >= al, "Renta Fija")
-      .when(rv > 0 && rv >= mx && rv >= al, "Renta Variable")
-      .when(mx > 0 && mx >= al, "Mixta")
-      .when(al > 0, "Alternativa")
-      .when(politica.contains("renta fija") && politica.contains("renta variable"), "Mixta")
-      .when(politica.contains("renta fija"), "Renta Fija")
-      .when(politica.contains("renta variable"), "Renta Variable")
-      .when(politica.contains("alternativa") || politica.contains("hedge") ||
-        politica.contains("private equity") || politica.contains("inmobiliario"),
-        "Alternativa")
-      .otherwise("Desconocido")
+  override protected def withNewChildInternal(newChild: Expression): FicKernel =
+    copy(child = newChild)
+
+  override def prettyName: String = "fic_kernel"
+}
+
+/** The passes over one raw document row. Values keep the semantics of
+  * the SQL functions the transform was first written in: `trim` strips
+  * U+0020 only, numbers parse like `cast`/`try_cast` to double (a
+  * failed parse is null), case mapping is ICU's, and sums add left to
+  * right from 0.0.
+  */
+object FicKernel {
+
+  val Input: StructType = FicSchema.raw.add("filename", StringType)
+
+  private val Empty = new GenericArrayData(Array.empty[Any])
+
+  /** JSON number tokens arrive as their literal text and take the
+    * reference's float branch; all other text its string branch.
+    */
+  private val NumberLit = Pattern.compile("^-?[0-9]+(\\.[0-9]+)?([eE][+-]?[0-9]+)?$")
+
+  private def row(values: Any*): InternalRow = new GenericInternalRow(values.toArray)
+
+  private def string(s: UTF8String): String = if (s == null) null else s.toString
+
+  private def toDouble(s: String): java.lang.Double =
+    try java.lang.Double.valueOf(s) catch { case _: NumberFormatException => null }
+
+  /** A string-or-number value. The string branch keeps only
+    * [0-9.-] — plus ',' (read as '.') and '%' for percentages, where a
+    * surviving '%' fails the parse (transform.py:592-597,790-805).
+    */
+  private def parse(v: UTF8String, percent: Boolean): java.lang.Double = {
+    if (v == null) return null
+    val t = v.trim().toString
+    if (NumberLit.matcher(t).find()) return toDouble(t)
+    val kept = new java.lang.StringBuilder
+    t.foreach { c =>
+      if ((c >= '0' && c <= '9') || c == '.' || c == '-') kept.append(c)
+      else if (percent && c == ',') kept.append('.')
+      else if (percent && c == '%') kept.append(c)
+    }
+    toDouble(kept.toString)
+  }
+
+  private def round6(v: Double): java.lang.Double = PyRound.round(v, 6)
+
+  /** One percentage list (transform.py:537-632). The category format is
+    * decided by the sum of the parsed values alone: ×100 data when it is
+    * in [90, 110], fractions when in [0.9, 1.1] — the reference's count
+    * tests only ever choose between these two disjoint windows. With
+    * neither, each value converts on its own magnitude.
+    */
+  private def percentages(r: InternalRow, i: Int): ArrayData = {
+    val a = if (r == null) null else r.getArray(i)
+    if (a == null) return Empty
+    val items = Array.tabulate(a.numElements())(j => a.getStruct(j, 2))
+    val values = items.map(it => if (it == null) null else parse(it.getUTF8String(1), percent = true))
+    var sum = 0.0
+    values.foreach(v => if (v != null) sum += v)
+    val scaled = sum >= 90 && sum <= 110
+    val fraction = sum >= 0.9 && sum <= 1.1
+    new GenericArrayData(Array.tabulate[Any](items.length) { j =>
+      val v = values(j)
+      row(if (items(j) == null) null else items(j).getUTF8String(0),
+        if (v == null) null
+        else if (scaled || (!fraction && math.abs(v) > 1.1)) round6(v / 100.0)
+        else round6(v))
+    })
+  }
+
+  /** Returns and volatilities (`_convertir_si_es_necesario`,
+    * transform.py:635-661): always a struct, of nulls for a missing one.
+    */
+  private def horizons(h: InternalRow): InternalRow = new GenericInternalRow(
+    Array.tabulate[Any](6) { i =>
+      val v = if (h == null) null else parse(h.getUTF8String(i), percent = true)
+      if (v == null) null else if (math.abs(v) > 1.0) round6(v / 100.0) else round6(v)
+    })
+
+  /** Dates: falsy values ("" and null) pass through unchanged, and so
+    * does text that does not parse.
+    */
+  private def date(s: UTF8String): UTF8String =
+    if (s == null || s.numBytes == 0) s
+    else Option(UTF8String.fromString(SpanishDate.parse(s.toString))).getOrElse(s)
+
+  def transform(doc: InternalRow, lookup: FicLookup): InternalRow = {
+    val fic = doc.getStruct(0, 5)
+    val comp = doc.getStruct(2, 6)
+    val car = doc.getStruct(3, 4)
+    val cal = doc.getStruct(4, 3)
+    val rv = doc.getArray(6)
+    row(
+      // passes 3, 5 and 6: cut-off date, fund type, URL
+      if (fic == null) null
+      else row(fic.getUTF8String(0), fic.getUTF8String(1), fic.getUTF8String(2),
+        date(fic.getUTF8String(3)), fic.getUTF8String(4),
+        UTF8String.fromString(FicTransform.tipoFic(string(fic.getUTF8String(4)))),
+        if (lookup.isEmpty) null
+        else UTF8String.fromString(
+          FicTransform.urlForFilename(string(doc.getUTF8String(7)), lookup).orNull)),
+      // passes 1 and 8: percentages, missing lists repaired to empty ones
+      percentages(doc, 1),
+      row((0 until 6).map(percentages(comp, _)): _*),
+      // passes 3, 4 and 7: dates, numbers, monetary rescale
+      if (car == null) null
+      else row(car.getUTF8String(0),
+        FicTransform.limpiarValor(parse(car.getUTF8String(1), percent = false)),
+        date(car.getUTF8String(2)), parse(car.getUTF8String(3), percent = false)),
+      // passes 2 and 7: rating agency, rating date
+      if (cal == null) null
+      else {
+        val ent = cal.getUTF8String(2)
+        val applied = ent != null && ent.numBytes > 0
+        val matched = if (!applied) None
+          else FicTransform.matchAgency(CollationSupport.Upper.execBinaryICU(ent.trim()).toString)
+        row(cal.getUTF8String(0), date(cal.getUTF8String(1)),
+          matched.map(UTF8String.fromString).getOrElse(ent),
+          if (applied) matched.isDefined else null)
+      },
+      percentages(doc, 5),
+      if (rv == null) Empty
+      else new GenericArrayData(Array.tabulate[Any](rv.numElements()) { j =>
+        val e = rv.getStruct(j, 3)
+        if (e == null) row(null, horizons(null), horizons(null))
+        else row(e.getUTF8String(0), horizons(e.getStruct(1, 6)), horizons(e.getStruct(2, 6)))
+      }))
   }
 }

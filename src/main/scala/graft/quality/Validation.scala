@@ -2,6 +2,7 @@ package graft.quality
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Data-quality side-outputs (SURVEY A2 / D3): instead of log lines, the
   * engine emits warning/validation DataFrames — queryable, sinkable,
@@ -14,13 +15,13 @@ object Validation {
     expr(s"aggregate(filter($arr.participacion, v -> v is not null), " +
       "cast(0 as double), (a, v) -> a + v)")
 
-  /** Percentage-sum validation (`_validar_suma_porcentajes`,
-    * /root/reference/src/etl/transform.py:663-679): one warning row per
-    * out-of-range list. plazo_duracion is always validated; composition
-    * categories and principales_inversiones only when their sum > 0
-    * (transform.py:489-492,513-514).
+  /** Percentage-sum validation (`_validar_suma_porcentajes`, the
+    * reference's transform.py:663-679): one (campo, suma, warn) check
+    * per list of a document. plazo_duracion is always validated;
+    * composition categories and principales_inversiones only when their
+    * sum > 0 (transform.py:489-492,513-514).
     */
-  def sumWarnings(transformed: DataFrame): DataFrame = {
+  private val sumChecks: Column = {
     val checks: Seq[(String, Column, Column)] = Seq(
       ("plazo_duracion", sumOf("plazo_duracion"), lit(true)),
       ("principales_inversiones", sumOf("principales_inversiones"),
@@ -30,23 +31,26 @@ object Validation {
         val s = sumOf(s"composicion_portafolio.$cat")
         (cat, s, s > 0)
       }
-    val warnings = checks.map { case (campo, suma, applies) =>
+    array(checks.map { case (campo, suma, applies) =>
       struct(lit(campo).as("campo"), suma.as("suma"),
         (applies && !(suma >= 0.95 && suma <= 1.05)).as("warn"))
-    }
+    }: _*)
+  }
+
+  /** One warning row per out-of-range list. */
+  def sumWarnings(transformed: DataFrame): DataFrame =
     transformed
       .select(col("filename"), col("fic.nombre_fic").as("nombre_fic"),
-        explode(array(warnings: _*)).as("w"))
+        explode(sumChecks).as("w"))
       .filter(col("w.warn"))
       .select(col("filename"), col("nombre_fic"),
         col("w.campo").as("campo"), col("w.suma").as("suma"))
-  }
 
   /** Date-vs-folder consistency (script_transform.py:49-114): lenient —
     * a document is invalid only when BOTH the folder year/month and the
     * fecha_corte year/month parse and disagree.
     */
-  def dateFolderCheck(transformed: DataFrame, folderName: String): DataFrame = {
+  private def dateValid(folderName: String): Column = {
     val m = "^.*?[_-]?(\\d{4})[_-](\\d{1,2})$".r
     val (fy, fm) = folderName match {
       case m(y, mo) => (y.toInt, mo.toInt)
@@ -55,24 +59,43 @@ object Validation {
     val parts = split(col("fic.fecha_corte"), "-")
     val jy = element_at(parts, 1).cast("int")
     val jm = try_element_at(parts, lit(2)).cast("int")
-    val valid =
-      if (fy < 0) lit(true)
-      else when(col("fic.fecha_corte").isNull || jy.isNull || jm.isNull, true)
-        .otherwise(jy === fy && jm === fm)
+    if (fy < 0) lit(true)
+    else when(col("fic.fecha_corte").isNull || jy.isNull || jm.isNull, true)
+      .otherwise(jy === fy && jm === fm)
+  }
+
+  def dateFolderCheck(transformed: DataFrame, folderName: String): DataFrame =
     transformed.select(
       col("filename"), col("fic.fecha_corte").as("fecha_corte"),
-      valid.as("fecha_valida"))
+      dateValid(folderName).as("fecha_valida"))
+
+  /** The transform stage's bookkeeping: documents, [[sumWarnings]] rows,
+    * and the file names [[dateFolderCheck]] flags, sorted as Spark
+    * sorts strings.
+    */
+  final case class Summary(docs: Long, warnings: Long, skipped: Seq[String])
+
+  /** [[Summary]] from one aggregate over `transformed`. */
+  def summarize(transformed: DataFrame, folderName: String): Summary = {
+    val r = transformed.agg(
+      count(lit(1)),
+      coalesce(sum(size(filter(sumChecks, _.getField("warn")))), lit(0L)),
+      collect_list(when(!dateValid(folderName), col("filename")))).head()
+    Summary(r.getLong(0), r.getLong(1), r.getSeq[String](2).sortBy(UTF8String.fromString))
   }
 
   /** Skip-list emission (script_transform.py:270-293): base names of the
     * mismatched files, one per line with the header comments. Collected
     * to a single small text file (the skip list is tiny by construction).
     */
-  def writeSkipList(validation: DataFrame, outPath: String): Unit = {
-    val bad = validation.filter(!col("fecha_valida"))
-      .select(regexp_replace(col("filename"), "_transformed\\.json$", "").as("base"))
-      .orderBy(col("base"))
-      .collect().map(_.getString(0))
+  def writeSkipList(validation: DataFrame, outPath: String): Unit =
+    writeSkipList(validation.filter(!col("fecha_valida")).select(col("filename"))
+      .collect().map(_.getString(0)).toSeq, outPath)
+
+  /** The skip list of these (mismatched) file names. */
+  def writeSkipList(filenames: Seq[String], outPath: String): Unit = {
+    val bad = filenames.map(_.replaceAll("_transformed\\.json$", ""))
+      .sortBy(UTF8String.fromString)
     val body = "# Lista de archivos con fechas no coincidentes\n" +
       "# Generado automáticamente desde validación de fechas\n\n" +
       bad.mkString("", "\n", if (bad.nonEmpty) "\n" else "")

@@ -92,6 +92,10 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("limpiar_valor leaves an overflowed +Infinity as is instead of looping") {
+    assert(FicTransform.limpiarValor(Double.PositiveInfinity) == Double.PositiveInfinity)
+  }
+
   test("py_round output is a fixed point at the same scale") {
     forAll(Gen.chooseNum(-1e9, 1e9), Gen.chooseNum(0, 8)) { (v, s) =>
       val r = PyRound.round(v, s)
