@@ -48,7 +48,9 @@ object Validation {
 
   /** Date-vs-folder consistency (script_transform.py:49-114): lenient —
     * a document is invalid only when BOTH the folder year/month and the
-    * fecha_corte year/month parse and disagree.
+    * fecha_corte year/month parse and disagree. `try_cast`, not `cast`:
+    * under ANSI casts an unparseable fecha_corte ("fecha desconocida")
+    * would throw and abort the stage instead of staying valid.
     */
   private def dateValid(folderName: String): Column = {
     val m = "^.*?[_-]?(\\d{4})[_-](\\d{1,2})$".r
@@ -57,8 +59,8 @@ object Validation {
       case _ => (-1, -1)
     }
     val parts = split(col("fic.fecha_corte"), "-")
-    val jy = element_at(parts, 1).cast("int")
-    val jm = try_element_at(parts, lit(2)).cast("int")
+    val jy = element_at(parts, 1).try_cast("int")
+    val jm = try_element_at(parts, lit(2)).try_cast("int")
     if (fy < 0) lit(true)
     else when(col("fic.fecha_corte").isNull || jy.isNull || jm.isNull, true)
       .otherwise(jy === fy && jm === fm)

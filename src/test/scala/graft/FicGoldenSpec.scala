@@ -25,11 +25,12 @@ class FicGoldenSpec extends AnyFunSuite {
   }
 
   test("transform chain reproduces the reference output on all 7 goldens") {
+    val dir = ReferenceCorpus.assumeRawJson()
     spark.sparkContext.setLogLevel("WARN")
     val raw = spark.read
       .option("multiLine", true)
       .schema(FicSchema.raw)
-      .json("/root/reference/data/json_raw_2025_07/*.json")
+      .json(s"$dir/*.json")
       .withColumn("filename",
         regexp_extract(input_file_name(), "([^/]+)$", 1))
 

@@ -18,12 +18,13 @@ class FicLoadSpec extends AnyFunSuite {
   private lazy val transformed = {
     spark.sparkContext.setLogLevel("WARN")
     val raw = spark.read.option("multiLine", true).schema(FicSchema.raw)
-      .json("/root/reference/data/json_raw_2025_07/*.json")
+      .json(s"${ReferenceCorpus.RawJson}/*.json")
       .withColumn("filename", regexp_extract(input_file_name(), "([^/]+)$", 1))
     FicTransform(raw, FicLookup(Nil))
   }
 
   test("shred produces the 9-table star with consistent keys") {
+    ReferenceCorpus.assumeRawJson()
     val sh = FicShredder(transformed)
     assert(sh.fic.count() == 7)
     assert(sh.caracteristicas.count() == 7)

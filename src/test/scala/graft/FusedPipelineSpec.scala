@@ -41,7 +41,7 @@ class FusedPipelineSpec extends AnyFunSuite {
 
   test("fused E+T+L run leaves the same Derby state as the staged three commands") {
     spark.sparkContext.setLogLevel("WARN")
-    val pdfs = "/root/reference/data/pdfs"
+    val pdfs = PdfFixture.folder(7)
     val stagedWork = tmp("staged_etl")
     val fusedWork = tmp("fused_etl")
     val stagedUrl = "jdbc:derby:memory:stagedEtl;create=true"
@@ -78,7 +78,7 @@ class FusedPipelineSpec extends AnyFunSuite {
   }
 
   test("fused T+L run equals staged transform+load on the reference fixtures") {
-    val fixtures = "/root/reference/data/json_raw_2025_07"
+    val fixtures = ReferenceCorpus.assumeRawJson()
     val stagedOut = tmp("staged_tl")
     val fusedOut = tmp("fused_tl")
     val stagedUrl = "jdbc:derby:memory:stagedTl;create=true"

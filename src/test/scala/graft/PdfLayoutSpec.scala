@@ -63,7 +63,7 @@ class PdfLayoutSpec extends AnyFunSuite {
   }
 
   test("word generator is deterministic and page-bounded over the reference PDFs") {
-    val pdfs = FicSources.pdfFolder(spark, "/root/reference/data/pdfs")
+    val pdfs = FicSources.pdfFolder(spark, ReferenceCorpus.assumePdfs())
       .withColumn("doc_id", xxhash64(col("path")))
       .select(col("doc_id"), col("content"))
     val dec = new PdfLayout.StubLayoutDecoder()

@@ -21,15 +21,16 @@ class PipelineSpec extends AnyFunSuite {
     .getOrCreate()
 
   test("binaryFile PDF scan reads the reference corpus") {
+    val dir = ReferenceCorpus.assumePdfs()
     spark.sparkContext.setLogLevel("WARN")
-    val pdfs = FicSources.pdfFolder(spark, "/root/reference/data/pdfs")
+    val pdfs = FicSources.pdfFolder(spark, dir)
     assert(pdfs.count() == 7)
     assert(pdfs.filter(col("filename").endsWith(".pdf")).count() == 7)
     assert(pdfs.select("content").head().getAs[Array[Byte]](0).nonEmpty)
   }
 
   test("ocr + structurize: stub clients, retries, quarantine column") {
-    val pdfs = FicSources.pdfFolder(spark, "/root/reference/data/pdfs")
+    val pdfs = FicSources.pdfFolder(spark, PdfFixture.folder(7))
     // failEvery=3: every third call throws once; in-lambda retry recovers
     val texts = LlmOperators.ocr(pdfs, new StubOcrClient(failEvery = 3),
       maxInFlight = 2, backoffMs = _ => 0L)
@@ -108,9 +109,9 @@ class PipelineSpec extends AnyFunSuite {
 
   test("streaming: file-source raw docs through the transform chain") {
     val out = java.nio.file.Files.createTempDirectory("stream_in").toFile
-    // stage 2 of the reference's fixtures as a "new month drop"
-    val srcs = new java.io.File("/root/reference/data/json_raw_2025_07")
-      .listFiles().filter(_.getName.endsWith("_raw.json")).take(3)
+    // three committed raw documents as a "new month drop"
+    val srcs = new java.io.File(ParityFixture.rawDir)
+      .listFiles().filter(_.getName.endsWith("_raw.json")).sortBy(_.getName).take(3)
     srcs.foreach(s => java.nio.file.Files.copy(s.toPath,
       new java.io.File(out, s.getName).toPath))
 

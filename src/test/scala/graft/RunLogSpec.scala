@@ -79,7 +79,7 @@ class RunLogSpec extends AnyFunSuite {
     sys.props(RunLog.LogPathProp) = dir
     try {
       val raw = graft.sources.FicSources.rawJsonFolder(
-        spark, "/root/reference/data/json_raw_2025_07")
+        spark, ParityFixture.rawDir)
       graft.app.GraftTransform
         .transformAndWrite(raw, graft.fic.FicLookup(Nil), out, "json_raw_2025_07")
         .unpersist()

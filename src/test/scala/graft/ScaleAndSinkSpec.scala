@@ -27,7 +27,7 @@ class ScaleAndSinkSpec extends AnyFunSuite {
   private lazy val transformed = {
     spark.sparkContext.setLogLevel("WARN")
     val raw = spark.read.option("multiLine", true).schema(FicSchema.raw)
-      .json("/root/reference/data/json_raw_2025_07/*.json")
+      .json(s"${ReferenceCorpus.RawJson}/*.json")
       .withColumn("filename", regexp_extract(input_file_name(), "([^/]+)$", 1))
     FicTransform(raw, FicLookup(Nil))
   }
@@ -398,6 +398,7 @@ class ScaleAndSinkSpec extends AnyFunSuite {
   }
 
   test("sum warnings flag out-of-range percentage lists") {
+    ReferenceCorpus.assumeRawJson()
     val w = Validation.sumWarnings(transformed)
     val rows = w.collect()
     // the reference logs these same warnings for its own corpus
@@ -408,6 +409,7 @@ class ScaleAndSinkSpec extends AnyFunSuite {
   }
 
   test("date-vs-folder check flags only true mismatches, skip list written") {
+    ReferenceCorpus.assumeRawJson()
     val v = Validation.dateFolderCheck(transformed, "json_raw_2025_07")
     val bad = v.filter(!col("fecha_valida")).collect()
     // progresion_globalVista has fecha_corte 2025-01-31 in a 2025_07 folder
@@ -421,7 +423,29 @@ class ScaleAndSinkSpec extends AnyFunSuite {
     assert(content.startsWith("#"))
   }
 
+  test("date-vs-folder check keeps an unparseable fecha_corte valid under ANSI casts") {
+    import spark.implicits._
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    val fechas = Seq(
+      "desconocida_raw.json" -> Some("fecha desconocida"),
+      "vacia_raw.json" -> Some(""),
+      "nula_raw.json" -> None,
+      "julio_raw.json" -> Some("2025-07-31"),
+      "enero_raw.json" -> Some("2025-01-31"))
+    val docs = spark.read.schema(FicSchema.transformed.add("filename", "string"))
+      .json(fechas.map { case (f, fecha) =>
+        val v = fecha.fold("null")(d => s""""$d"""")
+        s"""{"filename": "$f", "fic": {"fecha_corte": $v}}"""
+      }.toDS())
+    val valid = Validation.dateFolderCheck(docs, "json_raw_2025_07").collect()
+      .map(r => r.getString(0) -> r.getBoolean(2)).toMap
+    assert(valid == fechas.map { case (f, _) => f -> (f != "enero_raw.json") }.toMap)
+    val summary = Validation.summarize(docs, "json_raw_2025_07")
+    assert(summary.docs == 5 && summary.skipped == Seq("enero_raw.json"))
+  }
+
   test("jdbc sink: transactional upsert into Derby, idempotent on rerun") {
+    ReferenceCorpus.assumeRawJson()
     val url = s"jdbc:derby:memory:ficdb;create=true"
     val sh = FicShredder(transformed)
     JdbcSink.loadShredded(sh.all, url, partitions = 4)

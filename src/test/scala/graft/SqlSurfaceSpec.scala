@@ -131,9 +131,10 @@ class SqlSurfaceSpec extends AnyFunSuite {
   }
 
   test("typed dataset core over the shredded star") {
+    val dir = ReferenceCorpus.assumeRawJson()
     import org.apache.spark.sql.functions._
     val raw = spark.read.option("multiLine", true).schema(FicSchema.raw)
-      .json("/root/reference/data/json_raw_2025_07/*.json")
+      .json(s"$dir/*.json")
       .withColumn("filename", regexp_extract(input_file_name(), "([^/]+)$", 1))
     val sh = FicShredder(FicTransform(raw, FicLookup(Nil)))
     val comps = graft.fic.FicModel.composiciones(sh)
