@@ -3,8 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
-import graft.operators.Scale
 
 /** Incremental near-dup cluster + survivor state (r12, VERDICT #1 of
   * "What's missing"; r13 delta layout, VERDICT #2): the operator a
@@ -34,20 +32,24 @@ import graft.operators.Scale
   *    dropped.
   *
   * Per drop, [[update]] folds the batch's verified pairs in
-  * LOCALLY: only components touched by a new edge are re-solved —
-  * the new edges plus one (doc → label) star edge per member of an
-  * affected component feed [[Scale.connectedComponents]]; untouched
-  * components are NOT read, NOT rewritten, NOT touched. Label
-  * correctness is inductive: a state label is its component's min and
-  * participates as a node of the local graph, so the merged
-  * component's new label is the min over everything it absorbed —
-  * identical to batch t40 over the union of all drops' pairs
-  * (differentialed on real corpora by tools/DropCheck). Per-drop
-  * WRITE cost is O(new pairs + affected members) — change-bounded,
-  * spec-pinned by IncrementalClusterSpec's per-epoch row-count test;
-  * the per-drop READ floor is one resolution aggregate over the
-  * committed deltas (the same one-exchange floor the span/ANN indexes
-  * pay), compacted by [[compact]] on the usual lazy cadence.
+  * LOCALLY, in the Spark driver: only components touched by a new edge are
+  * re-solved — the new edges plus one (doc → label) star edge per
+  * member of an affected component go through a union-find over that
+  * change-bounded subgraph; untouched components are NOT read, NOT
+  * rewritten, NOT touched. Label correctness is inductive: a state
+  * label is its component's min and participates as a node of the
+  * local graph, so the merged component's new label is the min over
+  * everything it absorbed — identical to batch t40 over the union of
+  * all drops' pairs (differentialed on real corpora by
+  * tools/DropCheck). The fold collects this drop's pairs, the affected
+  * members, their batch scores and their prior survivors — one collect
+  * each — and throws, committing nothing, when those rows exceed
+  * [[MaxFoldRows]]; the four relations are written from the local
+  * rows. Per-drop WRITE cost is O(new pairs + affected members) —
+  * change-bounded, spec-pinned by IncrementalClusterSpec's per-epoch
+  * row-count test; the per-drop READ floor is one resolution aggregate
+  * over the committed deltas (the same one-exchange floor the span/ANN
+  * indexes pay), compacted by [[compact]] on the usual lazy cadence.
   *
   * Each epoch also publishes the drop's change report atomically with
   * the state (the VERDICT #2 discipline — no crash point can apply
@@ -209,6 +211,13 @@ object IncrementalCluster {
     spark.read.schema(survivorChangesSchema)
       .parquet(StreamingState.epochRel(path, batchId, "survivor_changes")))
 
+  /** Most rows one [[update]] collects into the Spark driver: this drop's
+    * pairs, the affected members, the batch scores and the prior
+    * survivors, together. A fold above it throws before anything is
+    * committed; there is no distributed fallback.
+    */
+  val MaxFoldRows: Int = 1000000
+
   /** Fold one drop's verified near-dup pairs into the persisted
     * cluster state and publish the change-bounded delta + change
     * report as one atomic epoch.
@@ -225,71 +234,123 @@ object IncrementalCluster {
     StreamingState.guardEpochLayout(spark, path, "IncrementalCluster")
     if (StreamingState.isCommitted(spark, path, batchId))
       return readChanges(spark, path, batchId)
-    val prevM = readMembers(spark, path).persist(StorageLevel.MEMORY_AND_DISK)
-    val prevS = readSurvivors(spark, path)
 
-    val e = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
-    val touched = e.select(col("u").as("doc_id"))
-      .union(e.select(col("v").as("doc_id"))).distinct()
-    // components holding any endpoint of a new edge; everything else
-    // is carried implicitly by the delta layout — the fold neither
-    // scans nor rewrites an unaffected cluster
-    val affLabels = prevM.join(touched, Seq("doc_id"), "left_semi")
-      .select(col("label")).distinct()
-    val affMembers = prevM.join(affLabels, Seq("label"), "left_semi")
-    val starEdges = affMembers.filter(col("doc_id") =!= col("label"))
-      .select(col("doc_id").as("u"), col("label").as("v"))
-    val (labels, _) = Scale.connectedComponents(e.unionByName(starEdges))
+    var collected = 0L
+    def take(what: String, df: DataFrame): Array[Row] = {
+      val rows = df.collect()
+      collected += rows.length
+      if (collected > MaxFoldRows)
+        throw new IllegalStateException(
+          s"IncrementalCluster fold of batch $batchId collected $collected rows " +
+          s"(through the $what), above the cap MaxFoldRows = " +
+          s"$MaxFoldRows; nothing was committed")
+      rows
+    }
+    def ids(name: String, xs: Iterable[Long]): DataFrame = broadcast(
+      spark.createDataFrame(
+        java.util.Arrays.asList(xs.toSeq.map(Row(_)): _*),
+        StructType(Seq(StructField(name, LongType, nullable = false)))))
+    def optDouble(r: Row, i: Int): Option[Double] =
+      if (r.isNullAt(i)) None else Some(r.getDouble(i))
+
+    val edges = take("pairs", pairs.select(col("doc_a"), col("doc_b")))
+      .map(r => (r.getLong(0), r.getLong(1)))
+    val touched = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
+    // components holding any endpoint of a new edge, as (doc_id, label,
+    // score); everything else is carried implicitly by the delta
+    // layout — the fold neither reads nor rewrites an unaffected cluster
+    val prev: Map[Long, (Long, Option[Double])] =
+      if (touched.isEmpty) Map.empty
+      else {
+        val members = readMembers(spark, path)
+        val affLabels = members.join(ids("doc_id", touched), Seq("doc_id"), "left_semi")
+          .select(col("label"))
+        take("affected members", members.join(affLabels, Seq("label"), "left_semi")
+            .select(col("doc_id"), col("label"), col("score")))
+          .map(r => r.getLong(0) -> ((r.getLong(1), optDouble(r, 2)))).toMap
+      }
+    val affLabels = prev.values.map(_._1).toSet
+
+    // union-find on the change-bounded subgraph: the new edges plus a
+    // (doc → label) star edge per affected member. A state label is
+    // its component's min and is a node here, so every root — the
+    // smaller id of each union — is the min over all it absorbed:
+    // batch t40's label over the union of every drop's pairs
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) {
+        val up = parent(r)
+        parent(r) = parent.getOrElse(up, up) // path halving
+        r = up
+      }
+      r
+    }
+    def union(a: Long, b: Long): Unit = {
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    edges.foreach { case (a, b) => if (a != b) union(a, b) }
+    prev.foreach { case (d, (l, _)) => if (d != l) union(d, l) }
+    val nodes = parent.keys.toSeq.sorted
 
     // score every relabeled doc: stored score wins, batch score covers
-    // first appearances
-    // defensive one-row-per-doc on the caller's scores: a duplicate
-    // (doc_id, score) row would silently fan the member join out
-    val batchScores = scores.groupBy(col("doc_id"))
-      .agg(max(col("score")).as("batch_score"))
-    val newAffM = labels
-      .join(prevM.select(col("doc_id"), col("score").as("prev_score")),
-        Seq("doc_id"), "left")
-      .join(batchScores, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("label"),
-        coalesce(col("prev_score"), col("batch_score")).as("score"))
+    // first appearances (max per doc — a duplicate (doc_id, score) row
+    // must not decide anything)
+    val batchScore: Map[Long, Option[Double]] =
+      if (nodes.isEmpty) Map.empty
+      else take("batch scores", scores.join(ids("doc_id", nodes), Seq("doc_id"), "left_semi")
+          .groupBy(col("doc_id")).agg(max(col("score")).as("score")))
+        .map(r => r.getLong(0) -> optDouble(r, 1)).toMap
+    val prevSurvivor: Map[Long, Long] =
+      if (nodes.isEmpty) Map.empty
+      else take("prior survivors", readSurvivors(spark, path)
+          .join(ids("cluster_id", nodes), Seq("cluster_id"), "left_semi")
+          .select(col("cluster_id"), col("survivor_id")))
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
 
-    val affSurv = newAffM
-      .groupBy(col("label").as("cluster_id"))
-      .agg(max(struct(col("score"), (-col("doc_id")).as("neg_id"))).as("best"),
-        count(lit(1)).as("cluster_size"))
-      .select(col("cluster_id"), (-col("best.neg_id")).as("survivor_id"),
-        col("cluster_size"), col("best.score").as("score"))
+    val newAffM = nodes.map { d =>
+      (d, find(d), prev.get(d).flatMap(_._2).orElse(batchScore.getOrElse(d, None)))
+    }
+    // election: highest score (null lowest, NaN highest, as Spark orders
+    // doubles), ties to the lower doc id
+    def better(a: (Long, Option[Double]), b: (Long, Option[Double])): Boolean = {
+      val c = (a._2, b._2) match {
+        case (None, None)       => 0
+        case (None, _)          => -1
+        case (_, None)          => 1
+        case (Some(x), Some(y)) => if (x == y) 0 else java.lang.Double.compare(x, y)
+      }
+      c > 0 || (c == 0 && a._1 < b._1)
+    }
+    val affSurv = newAffM.groupBy(_._2).toSeq.sortBy(_._1).map { case (label, ms) =>
+      val best = ms.map(m => (m._1, m._3)).reduce((a, b) => if (better(b, a)) b else a)
+      (label, best._1, ms.size.toLong, best._2)
+    }
     // labels absorbed by a merge no longer name a cluster: tombstone
     // them so the resolved survivor view drops their stale election
-    val tombstones = affLabels.select(col("label").as("cluster_id"))
-      .join(affSurv.select(col("cluster_id")), Seq("cluster_id"), "left_anti")
-      .select(col("cluster_id"), lit(null).cast("long").as("survivor_id"),
-        lit(null).cast("long").as("cluster_size"),
-        lit(null).cast("double").as("score"))
+    val tombstones = affLabels.diff(affSurv.map(_._1).toSet).toSeq.sorted
 
-    val labelChanges = newAffM
-      .join(prevM.select(col("doc_id"), col("label").as("old_label")),
-        Seq("doc_id"), "left")
-      .filter(col("old_label").isNull || col("old_label") =!= col("label"))
-      .select(col("doc_id"), col("old_label"), col("label").as("new_label"))
-    val survivorChanges = affSurv
-      .join(prevS.select(col("cluster_id"),
-        col("survivor_id").as("old_survivor")), Seq("cluster_id"), "left")
-      .filter(col("old_survivor").isNull ||
-        col("old_survivor") =!= col("survivor_id"))
-      .select(col("cluster_id"), col("old_survivor"),
-        col("survivor_id").as("new_survivor"), col("cluster_size"),
-        col("score"))
-
+    def rel(rows: Seq[Row], schema: StructType): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).coalesce(1)
+    def boxed(v: Option[Double]): Any = v.map(Double.box).orNull
     StreamingState.commitAppend(spark, path, batchId,
       Map(
-        "members" -> newAffM.withColumn("epoch", lit(batchId)),
-        "survivors" -> affSurv.unionByName(tombstones)
-          .withColumn("epoch", lit(batchId)),
-        "label_changes" -> labelChanges,
-        "survivor_changes" -> survivorChanges))
-    prevM.unpersist()
+        "members" -> rel(newAffM.map { case (d, l, sc) =>
+          Row(d, l, boxed(sc), batchId) }, membersDeltaSchema),
+        "survivors" -> rel(
+          affSurv.map { case (c, sv, n, sc) => Row(c, sv, n, boxed(sc), batchId) } ++
+            tombstones.map(c => Row(c, null, null, null, batchId)),
+          survivorsDeltaSchema),
+        "label_changes" -> rel(newAffM.collect {
+          case (d, l, _) if !prev.get(d).map(_._1).contains(l) =>
+            Row(d, prev.get(d).map(p => Long.box(p._1)).orNull, l)
+        }, labelChangesSchema),
+        "survivor_changes" -> rel(affSurv.collect {
+          case (c, sv, n, sc) if !prevSurvivor.get(c).contains(sv) =>
+            Row(c, prevSurvivor.get(c).map(Long.box).orNull, sv, n, boxed(sc))
+        }, survivorChangesSchema)))
     readChanges(spark, path, batchId)
   }
 

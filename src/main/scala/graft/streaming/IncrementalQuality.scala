@@ -109,6 +109,12 @@ object IncrementalQuality {
       .drop("epoch")
   }
 
+  /** Document count of committed epoch `batchId`, from its volume row. */
+  def committedDocs(spark: SparkSession, path: String, batchId: Long): Long =
+    spark.read.schema(profileSchema)
+      .parquet(StreamingState.epochRel(path, batchId, "profile"))
+      .select(col("n_docs")).collect().map(_.getLong(0)).sum
+
   /** Per-drop rule counts across every committed epoch — the quality
     * trend a dashboard plots (epoch ascending, scope, rule).
     */

@@ -93,11 +93,19 @@ object StreamingState {
     }
     val fs = fsFor(spark, root)
     fs.mkdirs(new Path(commitsDir(root)))
-    val marker = new Path(s"${commitsDir(root)}/$epoch")
-    try fs.create(marker, false).close()
-    catch { case _: java.io.IOException => () } // already published (replay race)
+    publish(fs, new Path(s"${commitsDir(root)}/$epoch"))
     prune(fs, root)
   }
+
+  /** Create the zero-byte marker `marker` — the commit point. A create
+    * that fails because the marker already exists (a replay racing an
+    * earlier publish) is success; any other failure (full disk, broken
+    * parent, object-store error) leaves the epoch unpublished and is
+    * rethrown, so no caller reads an uncommitted epoch as committed.
+    */
+  private def publish(fs: FileSystem, marker: Path): Unit =
+    try fs.create(marker, false).close()
+    catch { case e: java.io.IOException => if (!fs.exists(marker)) throw e }
 
   /** Has epoch `epoch` been published at `root`? */
   def isCommitted(spark: SparkSession, root: String, epoch: Long): Boolean =
@@ -131,9 +139,53 @@ object StreamingState {
     rels.foreach { case (rel, df) =>
       df.write.mode("overwrite").parquet(epochRel(root, epoch, rel))
     }
-    val marker = new Path(s"${commitsDir(root)}/$epoch")
-    try fs.create(marker, false).close()
-    catch { case _: java.io.IOException => () } // already published (replay race)
+    publish(fs, new Path(s"${commitsDir(root)}/$epoch"))
+  }
+
+  /** Data files of a written relation directory (hidden and `_`-prefixed
+    * bookkeeping files excluded, as the parquet reader excludes them).
+    */
+  private def dataFiles(fs: FileSystem, dir: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).toSeq.filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }
+
+  /** Row count of relation `rel` of epoch `epoch`, summed from its
+    * parquet footers — no Spark job, so a caller can report what a
+    * commit wrote without re-reading its rows.
+    */
+  def committedRows(spark: SparkSession, root: String, epoch: Long,
+      rel: String): Long = {
+    val dir = new Path(epochRel(root, epoch, rel))
+    val fs = fsFor(spark, dir.toString)
+    val conf = spark.sparkContext.hadoopConfiguration
+    dataFiles(fs, dir).map { st =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+      try reader.getRecordCount finally reader.close()
+    }.sum
+  }
+
+  /** Publish relation `rel` of the COMMITTED epoch `epoch` at `target`
+    * by copying its files — the rows the commit already wrote, with no
+    * Spark read or rewrite. The target is deleted first, so a replay
+    * replaces a torn earlier copy instead of adding to it.
+    */
+  def copyCommitted(spark: SparkSession, root: String, epoch: Long,
+      rel: String, target: String): Unit = {
+    val src = new Path(epochRel(root, epoch, rel))
+    val dst = new Path(target)
+    val fs = fsFor(spark, target)
+    val conf = spark.sparkContext.hadoopConfiguration
+    fs.delete(dst, true)
+    fs.mkdirs(dst)
+    dataFiles(fsFor(spark, src.toString), src).foreach { st =>
+      org.apache.hadoop.fs.FileUtil.copy(st.getPath.getFileSystem(conf), st.getPath,
+        fs, new Path(dst, st.getPath.getName), false, conf)
+      ()
+    }
   }
 
   private def checkpointsDir(root: String) = s"$root/checkpoints"
@@ -191,20 +243,24 @@ object StreamingState {
     * resolver here and the compacted copy holds only the CURRENT row
     * per key (epoch column retained, so post-compaction reads resolve
     * exactly as before).
+    *
+    * A root already checkpointed at its newest epoch is left as it is
+    * (the call returns that checkpoint id).
     */
   def checkpointDeltas(spark: SparkSession, root: String,
       rels: Map[String, StructType],
       fold: (String, DataFrame) => DataFrame = (_, df) => df): Long = {
     val cp = currentEpoch(spark, root)
-    if (cp < 0L) return -1L
+    // nothing committed, or nothing committed since the last
+    // checkpoint: re-folding would overwrite compact-<cp> while reading it
+    if (cp < 0L || cp == currentCheckpoint(spark, root)) return cp
     rels.foreach { case (rel, schema) =>
       fold(rel, readCommittedDeltas(spark, root, rel, schema))
         .write.mode("overwrite").parquet(compactRel(root, cp, rel))
     }
     val fs = fsFor(spark, root)
     fs.mkdirs(new Path(checkpointsDir(root)))
-    try fs.create(new Path(s"${checkpointsDir(root)}/$cp"), false).close()
-    catch { case _: java.io.IOException => () } // already published
+    publish(fs, new Path(s"${checkpointsDir(root)}/$cp"))
     cp
   }
 

@@ -11,22 +11,25 @@ import graft.streaming.{IncrementalAnn, IncrementalCluster, IncrementalDedup,
   * (r14, VERDICT #3): the per-index crash specs
   * (IncrementalCommitSpec) prove each index's epoch commit is atomic
   * in isolation, and tools/DropCheck proves steady-state equality —
-  * this tool closes the gap between them by killing the WIRED
-  * dedup → cluster → span → ann → quality sequence at seeded-random
-  * points, replaying, and requiring every state and report stream to
-  * equal an uninterrupted run's.
+  * this tool closes the gap between them by killing the WIRED step
+  * graph — the four concurrent chains dedup → {pairs report, cluster
+  * → cluster reports}, span → spans report, ann → neighbors report and
+  * quality — at seeded-random points, replaying, and requiring every
+  * state and report stream to equal an uninterrupted run's.
   *
   * Per drop, on the crashing root:
   *
-  *  1. run only the first `k` of [[GraftDrop.processDrop]]'s nine
-  *     steps (`k` seeded-random per drop, 0 = crash before anything) —
-  *     the between-steps kill;
-  *  2. plant a junk file inside the NEXT step's target directory
-  *     (an index epoch dir with no commit marker, or a report
-  *     partition dir) — the mid-write kill: torn output that must be
-  *     invisible to readers and overwritten by recovery;
+  *  1. draw a seeded cut of each of [[GraftDrop.chains]] (0 = nothing
+  *     of that chain ran) and run [[GraftDrop.processDrop]] on exactly
+  *     those steps — the between-steps kill. Every prefix of the old
+  *     sequential nine-step order is one such set of cuts, so every
+  *     state the sequential fold could crash in stays reachable;
+  *  2. plant a junk file inside the NEXT step's target directory of
+  *     each cut chain (an index epoch dir with no commit marker, or a
+  *     report partition dir) — the mid-write kill: torn output that
+  *     must be invisible to readers and overwritten by recovery;
   *  3. optionally (seeded coin) crash the RECOVERY itself the same
-  *     way — a second partial run + junk plant;
+  *     way — a second, later cut per chain + junk plants;
   *  4. replay the batch id to completion, exactly as the streaming
   *     checkpoint restart would before admitting the next file batch.
   *
@@ -108,7 +111,17 @@ object CrashCheck {
     val errs = scala.collection.mutable.ArrayBuffer.empty[String]
     def err(m: String): Unit = if (errs.size < maxErrs) { errs += m; () }
     val rng = new scala.util.Random(seed)
-    val nSteps = GraftDrop.stepNames.size
+    val chains = GraftDrop.chains
+    def stepsOf(cut: Seq[Int]): Set[String] =
+      chains.zip(cut).flatMap { case (c, k) => c.take(k) }.toSet
+    // torn write in the next step of each cut chain; names what landed
+    def tear(root: String, cut: Seq[Int], id: Long): Seq[String] =
+      chains.zip(cut).collect {
+        case (c, k) if k < c.size && plantJunk(spark, root, c(k), id) => c(k)
+      }
+    def show(cut: Seq[Int]): String =
+      chains.zip(cut).map { case (c, k) => s"${c.head.stripSuffix("_commit")} $k/${c.size}" }
+        .mkString(", ")
     val base = java.nio.file.Files.createTempDirectory("crashcheck").toString
     val crashed = s"$base/crashed"
     val clean = s"$base/clean"
@@ -117,21 +130,18 @@ object CrashCheck {
       val kills = scala.collection.mutable.ArrayBuffer.empty[String]
       for (i <- 0 until drops) {
         val batch = docs.filter(pmod(col("doc_id"), lit(drops)) === i)
-        // crashing root: partial run at a seeded kill point + torn write
-        val k = rng.nextInt(nSteps + 1)
-        GraftDrop.processDrop(batch, crashed, i.toLong, stopAfter = k)
-        val torn = k < nSteps &&
-          plantJunk(spark, crashed, GraftDrop.stepNames(k), i.toLong)
-        var killLog = s"drop $i: killed at step $k" +
-          (if (k == nSteps) " (completed)"
-           else if (torn) s" (${GraftDrop.stepNames(k)} torn)" else "")
-        // seeded coin: crash the recovery too, at a second point
-        if (k < nSteps && rng.nextBoolean()) {
-          val k2 = k + rng.nextInt(nSteps + 1 - k)
-          GraftDrop.processDrop(batch, crashed, i.toLong, stopAfter = k2)
-          if (k2 < nSteps)
-            plantJunk(spark, crashed, GraftDrop.stepNames(k2), i.toLong)
-          killLog += s", recovery killed at step $k2"
+        // crashing root: a seeded cut per chain + torn writes
+        val cut = chains.map(c => rng.nextInt(c.size + 1))
+        GraftDrop.processDrop(batch, crashed, i.toLong, steps = stepsOf(cut))
+        val torn = tear(crashed, cut, i.toLong)
+        var killLog = s"drop $i: killed at ${show(cut)}" +
+          (if (torn.nonEmpty) s" (${torn.mkString(", ")} torn)" else "")
+        // seeded coin: crash the recovery too, at a later cut per chain
+        if (cut.zip(chains).exists { case (k, c) => k < c.size } && rng.nextBoolean()) {
+          val cut2 = chains.zip(cut).map { case (c, k) => k + rng.nextInt(c.size + 1 - k) }
+          GraftDrop.processDrop(batch, crashed, i.toLong, steps = stepsOf(cut2))
+          tear(crashed, cut2, i.toLong)
+          killLog += s", recovery killed at ${show(cut2)}"
         }
         // the replay the streaming restart performs before batch i+1
         GraftDrop.processDrop(batch, crashed, i.toLong)

@@ -255,4 +255,67 @@ class GraftDropSpec extends AnyFunSuite {
     assert(replay.count()
       === graft.streaming.IncrementalQuality.dropRules.size.toLong)
   }
+
+  test("concurrently waits for every task, then rethrows the first failure") {
+    val finished = new java.util.concurrent.atomic.AtomicInteger()
+    val e = intercept[IllegalStateException](GraftDrop.concurrently(Seq(
+      () => { Thread.sleep(300); finished.incrementAndGet() },
+      () => throw new IllegalStateException("chain failed"),
+      () => { Thread.sleep(600); finished.incrementAndGet() })))
+    assert(e.getMessage === "chain failed")
+    assert(finished.get() === 2, "the other tasks must run to completion")
+    assert(GraftDrop.concurrently(Seq(() => 1, () => 2, () => 3)) === Seq(1, 2, 3))
+  }
+
+  test("a failing chain fails the epoch; the other chains commit; replay completes it") {
+    val in = Files.createTempDirectory("drop_in_fail").toString
+    val index = Files.createTempDirectory("drop_index_fail").toString
+    writeDrop(in, "d1.json", Seq(
+      (1L, "quarterly earnings report for the acme corporation fiscal year"),
+      (2L, "quarterly earnings report for the acme corporation fiscal year"),
+      (3L, "completely unrelated gardening tips about tomato seedlings")))
+    // a rule over a column drops do not have: the quality chain throws
+    val broken = graft.streaming.IncrementalQuality.dropRules :+
+      graft.operators.Expectations.rowRule("broken",
+        org.apache.spark.sql.functions.col("no_such_column").isNull)
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      GraftDrop.run(spark, in, index, qualityRules = broken))
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => String.valueOf(c.getMessage).contains("no_such_column")),
+      causes.map(_.toString).mkString("\n"))
+    val S = graft.streaming.StreamingState
+    Seq("dedup", "clusters", "spans", "ann/state").foreach { root =>
+      assert(S.isCommitted(spark, s"$index/$root", 0L), s"$root not committed")
+    }
+    assert(!S.isCommitted(spark, s"$index/quality", 0L))
+    Seq("pairs", "cluster_labels", "cluster_survivors", "spans", "neighbors").foreach { r =>
+      assert(S.exists(spark, s"$index/reports/$r/batch=0"), s"report $r not published")
+    }
+    assert(spark.read.parquet(s"$index/reports/pairs").count() === 1L)
+
+    // the restart replays batch 0: committed chains resolve to their
+    // epochs, the quality chain commits
+    GraftDrop.run(spark, in, index)
+    assert(S.isCommitted(spark, s"$index/quality", 0L))
+    assert(spark.read.parquet(s"$index/reports/pairs").count() === 1L)
+    assert(graft.streaming.IncrementalQuality.readProfile(spark, s"$index/quality")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq((0L, 3L)))
+  }
+
+  test("processDrop runs only a downward-closed set of steps") {
+    import spark.implicits._
+    val index = Files.createTempDirectory("drop_index_steps").toString
+    val b = Seq((1L, "alpha beta gamma delta epsilon"), (2L, "alpha beta gamma delta epsilon"))
+      .toDF("doc_id", "text")
+    val e = intercept[IllegalArgumentException](
+      GraftDrop.processDrop(b, index, 0L, steps = Set("dedup_commit", "cluster_reports")))
+    assert(e.getMessage.contains("cluster_commit"), e.getMessage)
+    val c = GraftDrop.processDrop(b, index, 0L, steps = Set("dedup_commit", "span_commit"))
+    assert(c === Map("pairs" -> 1L, "spans" -> 0L))
+    val S = graft.streaming.StreamingState
+    assert(S.isCommitted(spark, s"$index/dedup", 0L))
+    assert(!S.exists(spark, s"$index/reports/pairs"))
+    assert(!S.exists(spark, s"$index/clusters"))
+    assert(!S.exists(spark, s"$index/ann"))
+  }
 }

@@ -228,4 +228,21 @@ class IncrementalClusterSpec extends AnyFunSuite {
       assert(got === expectSurv, s"seed $seed survivors diverged")
     }
   }
+
+  test("a fold above MaxFoldRows throws with the count and the cap, and commits nothing") {
+    val path = tmp("cl_cap")
+    IncrementalCluster.update(spark, path, 0L,
+      pairsDf(Seq((1L, 2L))), scoresDf(Seq(1L -> 0.1, 2L -> 0.2)))
+    val cap = IncrementalCluster.MaxFoldRows
+    val pairs = spark.range(cap.toLong + 1L)
+      .selectExpr("id * 2 + 10 as doc_a", "id * 2 + 11 as doc_b")
+    val e = intercept[IllegalStateException](
+      IncrementalCluster.update(spark, path, 1L, pairs, scoresDf(Seq.empty)))
+    assert(e.getMessage.contains(s"collected ${cap + 1} rows"), e.getMessage)
+    assert(e.getMessage.contains(s"MaxFoldRows = $cap"), e.getMessage)
+    assert(!graft.streaming.StreamingState.isCommitted(spark, path, 1L))
+    assert(!graft.streaming.StreamingState.exists(spark,
+      graft.streaming.StreamingState.epochRel(path, 1L, "members")))
+    assert(collectMembers(path) === Map(1L -> 1L, 2L -> 1L))
+  }
 }

@@ -2,7 +2,13 @@
 # Direct-JVM runner for graft mains (no sbt lock): tools/run_main.sh graft.Bench [args...]
 # Mirrors build.sbt's forked-run JVM flags. SPARK_DRIVER_MEM sizes the heap.
 set -euo pipefail
-CLASSES=/root/repo/target/scala-2.13/classes
+# classes of the checkout this script lives in (sbt compile), wherever it is
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+CLASSES="$ROOT/target/scala-2.13/classes"
+[ -d "$CLASSES" ] || { echo "run_main.sh: $CLASSES not found; run sbt compile in $ROOT" >&2; exit 1; }
+# the jar directory build.sbt compiles against (its unmanagedBase)
+JARS="$(sed -n 's/^unmanagedBase *:= *file("\([^"]*\)").*/\1/p' "$ROOT/build.sbt")"
+[ -n "$JARS" ] || { echo "run_main.sh: no unmanagedBase in $ROOT/build.sbt" >&2; exit 1; }
 MEM="${SPARK_DRIVER_MEM:-8g}"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
@@ -17,4 +23,4 @@ exec java -Xmx"$MEM" $ADD_OPENS \
   -Dspark.sql.session.timeZone=UTC \
   -Dspark.network.timeout=600s \
   -Dspark.executor.heartbeatInterval=30s \
-  -cp "$CLASSES:/opt/spark/jars/*" "$@"
+  -cp "$CLASSES:$ROOT/src/main/resources:$JARS/*" "$@"
