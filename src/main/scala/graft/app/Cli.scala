@@ -469,13 +469,8 @@ object GraftDrop {
       // (computed at signing time), so an old endpoint paired drops
       // later is still survivor-electable without re-reading its text.
       if (steps("cluster_commit")) {
-        val endpointScores = pairs
-          .select(col("doc_a").as("doc_id"), col("score_a").as("score"))
-          .unionByName(pairs
-            .select(col("doc_b").as("doc_id"), col("score_b").as("score")))
-          .distinct()
-        graft.streaming.IncrementalCluster.update(
-          spark, s"$index/clusters", id, pairs, endpointScores)
+        graft.streaming.IncrementalCluster.update(spark, s"$index/clusters", id,
+          pairs, graft.streaming.IncrementalCluster.endpointScores(pairs))
         counts("relabels") = committedRows(spark, s"$index/clusters", id, "label_changes")
       }
       if (steps("cluster_reports")) {

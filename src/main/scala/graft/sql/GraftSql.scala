@@ -65,8 +65,9 @@ object GraftSql {
     * training a model artifact or iterating to a fixed point —
     * so registering their views is not free: `init` skips them and a
     * caller opts in via [[registerEagerViews]] to pay for the build up
-    * front. Membership is audited by `graft.tools.EagerAudit` (a
-    * job-counting listener over every builder): t46 trains a Bloom
+    * front. Membership is audited by `graft.tools.ProfileGate`'s
+    * `build_jobs` column (jobs started while building each gate's
+    * DataFrame): t46 trains a Bloom
     * sketch (`df.stat.bloomFilter` collects), t40/t52 run the
     * connected-components loop to convergence, t51/t59 run the BPE
     * merge loop (t59 then encodes with the trained ranks), t58/t61

@@ -14,9 +14,9 @@ import graft.operators.VectorOps
   * The index directory holds two tables:
   *  - `planes/`  — the hyperplane model (plane_id, pv): written ONCE
   *    when the index is created (from the first batch's lowest-id
-  *    vectors, the same data-derived convention as the batch operator)
-  *    and read back by every later batch, so signatures stay
-  *    comparable across the index's lifetime;
+  *    vectors, the same data-derived convention as the batch operator),
+  *    published by its own marker, and read back by every later batch,
+  *    so signatures stay comparable across the index's lifetime;
   *  - `state/` — the [[StreamingState]] epoch-committed log (r12,
   *    VERDICT #2): one `epoch-<batch>/` dir per drop holding the
   *    batch's vector delta (vec_id, v, nv, bucket — bucket packs all
@@ -61,6 +61,8 @@ object IncrementalAnn {
   private def statePath(p: String) = s"$p/state"
   private def planesPath(p: String) = s"$p/planes"
 
+  private val Format = StreamingState.Format("IncrementalAnn")
+
   private val vectorsSchema: StructType = StructType(Seq(
     StructField("vec_id", LongType, nullable = false),
     StructField("v", ArrayType(DoubleType), nullable = false),
@@ -83,14 +85,16 @@ object IncrementalAnn {
     * Hadoop's FileSystem (HDFS/S3-safe — the r10 java.io.File probes
     * silently restarted from an empty index on object stores).
     */
-  def readIndex(spark: SparkSession, indexPath: String): DataFrame = {
-    StreamingState.guardEpochLayout(spark, statePath(indexPath), "IncrementalAnn")
-    StreamingState.readCommittedDeltas(spark, statePath(indexPath),
-      "vectors", vectorsSchema)
-  }
+  def readIndex(spark: SparkSession, indexPath: String): DataFrame =
+    StreamingState.read(spark, statePath(indexPath), Format, "vectors", vectorsSchema)
 
   /** The persisted hyperplane model, initialized from `batch` if the
-    * index does not exist yet.
+    * index has none yet. The model is published by its own marker
+    * ([[StreamingState.writePublished]]): an unpublished planes dir — a
+    * write killed after Spark created the directory — counts as absent
+    * and is rewritten, unless `state/` already holds a committed epoch.
+    * The planes are always written before the first commit, so such an
+    * index (written before the marker existed) has a complete model.
     */
   private def planes(spark: SparkSession, batch: DataFrame, indexPath: String,
       cfg: Config): DataFrame = {
@@ -98,16 +102,17 @@ object IncrementalAnn {
     val schema = StructType(Seq(
       StructField("plane_id", IntegerType, nullable = false),
       StructField("pv", ArrayType(DoubleType), nullable = false)))
-    if (!StreamingState.exists(spark, pp)) {
+    if (!StreamingState.isPublished(spark, pp) &&
+        StreamingState.currentEpoch(spark, statePath(indexPath)) < 0L) {
       // number the ≤ bands×bits seed planes in-row (single-row
       // aggregate + posexplode) instead of a global window — same
       // result, no empty-partition WindowExec warning in the logs
-      batch.orderBy(col("vec_id")).limit(cfg.bands * cfg.bits)
-        .agg(expr("array_sort(collect_list(struct(vec_id, v)))").as("ps"))
-        .select(posexplode(col("ps")).as(Seq("plane_id", "p")))
-        .select(col("plane_id").cast("int").as("plane_id"),
-          col("p.v").as("pv"))
-        .write.mode("overwrite").parquet(pp)
+      StreamingState.writePublished(spark, pp,
+        batch.orderBy(col("vec_id")).limit(cfg.bands * cfg.bits)
+          .agg(expr("array_sort(collect_list(struct(vec_id, v)))").as("ps"))
+          .select(posexplode(col("ps")).as(Seq("plane_id", "p")))
+          .select(col("plane_id").cast("int").as("plane_id"),
+            col("p.v").as("pv")))
     }
     spark.read.schema(schema).parquet(pp)
   }
@@ -115,16 +120,6 @@ object IncrementalAnn {
   /** (vec_id, band_id, sig) view of stored buckets — v34's band slices. */
   private def bandRows(df: DataFrame, cfg: Config): DataFrame =
     VectorOps.bandSlices(df.select(col("vec_id"), col("bucket")), cfg.bands, cfg.bits)
-
-  /** Persisted per-(band, sig) occupancy of the CURRENT epoch. */
-  private[graft] def currentOcc(spark: SparkSession, indexPath: String): DataFrame = {
-    val root = statePath(indexPath)
-    val e = StreamingState.currentEpoch(spark, root)
-    if (e < 0L)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], occSchema)
-    else StreamingState.readOr(spark,
-      StreamingState.epochRel(root, e, "occ"), occSchema)
-  }
 
   /** Fold a batch's band rows into the persisted occupancy state (r12,
     * the span index's caps-fold pattern): the r11 layout re-aggregated
@@ -137,7 +132,7 @@ object IncrementalAnn {
     */
   private[graft] def foldedOcc(spark: SparkSession, indexPath: String,
       fresh: DataFrame, cfg: Config): DataFrame =
-    currentOcc(spark, indexPath)
+    StreamingState.readCurrent(spark, statePath(indexPath), "occ", occSchema)
       .unionByName(bandRows(fresh, cfg)
         .groupBy(col("band_id"), col("sig")).agg(count(lit(1)).as("bn")))
       .groupBy(col("band_id"), col("sig"))
@@ -154,58 +149,52 @@ object IncrementalAnn {
       cfg: Config = Config()): DataFrame = {
     val spark = batch.sparkSession
     graft.functions.DotProduct.register(spark)
-    StreamingState.guardEpochLayout(spark, statePath(indexPath), "IncrementalAnn")
-    if (StreamingState.isCommitted(spark, statePath(indexPath), batchId))
-      return spark.read.schema(neighborsSchema)
-        .parquet(StreamingState.epochRel(statePath(indexPath), batchId, "neighbors"))
-    val existing = readIndex(spark, indexPath)
-    val pl = planes(spark, batch, indexPath, cfg)
-    val fresh = VectorOps.signBuckets(
-        batch.select(col("vec_id"), col("v"))
-          .withColumn("nv", sqrt(dot("v", "v"))), pl)
-      .select(vectorsSchema.fieldNames.toIndexedSeq.map(col): _*)
-      .join(existing.select(col("vec_id")), Seq("vec_id"), "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val all = existing.unionByName(fresh)
-
-    // occupancy cap from the FOLDED state (r12): counts over index ∪
-    // fresh without re-aggregating every indexed vector's band rows
-    val occState = foldedOcc(spark, indexPath, fresh, cfg)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val over = occState.filter(col("bn") > cfg.cap)
-      .select(col("band_id"), col("sig"))
-    val capped = bandRows(all, cfg)
-      .join(broadcast(over), Seq("band_id", "sig"), "left_anti")
-    val target = capped.select(col("vec_id").as("t_vec_id"),
-      col("band_id").as("t_band_id"), col("sig").as("t_sig"))
-
-    val cand = bandRows(fresh, cfg)
-      .join(target,
-        col("band_id") === col("t_band_id") && col("sig") === col("t_sig") &&
-        col("vec_id") =!= col("t_vec_id"))
-      .select(col("vec_id").as("query_id"), col("t_vec_id").as("neighbor_id"))
-      .distinct()
-    val scored = cand
-      .join(fresh.select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nv").as("qnv")), Seq("query_id"))
-      .join(all.select(col("vec_id").as("neighbor_id"), col("v"), col("nv")),
-        Seq("neighbor_id"))
-      .withColumn("cosine", dot("qv", "v") / (col("qnv") * col("nv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    // No localCheckpoint: the committed index is stable until the
-    // epoch marker, so the top-k plan materializes exactly once — by
-    // the epoch write — against an unmoving listing
-    val topk = scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= cfg.k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
-    StreamingState.commitAppend(spark, statePath(indexPath), batchId,
-      Map("vectors" -> fresh, "neighbors" -> topk, "occ" -> occState))
     // occupancy is full state per epoch; each copy supersedes the last
-    StreamingState.pruneRel(spark, statePath(indexPath), "occ")
-    occState.unpersist(); fresh.unpersist()
-    spark.read.schema(neighborsSchema)
-      .parquet(StreamingState.epochRel(statePath(indexPath), batchId, "neighbors"))
+    StreamingState.fold(spark, statePath(indexPath), Format, batchId,
+        Map("neighbors" -> neighborsSchema), fullState = Seq("occ")) {
+      val existing = readIndex(spark, indexPath)
+      val pl = planes(spark, batch, indexPath, cfg)
+      val fresh = VectorOps.signBuckets(
+          batch.select(col("vec_id"), col("v"))
+            .withColumn("nv", sqrt(dot("v", "v"))), pl)
+        .select(vectorsSchema.fieldNames.toIndexedSeq.map(col): _*)
+        .join(existing.select(col("vec_id")), Seq("vec_id"), "left_anti")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val all = existing.unionByName(fresh)
+
+      // occupancy cap from the FOLDED state (r12): counts over index ∪
+      // fresh without re-aggregating every indexed vector's band rows
+      val occState = foldedOcc(spark, indexPath, fresh, cfg)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val over = occState.filter(col("bn") > cfg.cap)
+        .select(col("band_id"), col("sig"))
+      val capped = bandRows(all, cfg)
+        .join(broadcast(over), Seq("band_id", "sig"), "left_anti")
+      val target = capped.select(col("vec_id").as("t_vec_id"),
+        col("band_id").as("t_band_id"), col("sig").as("t_sig"))
+
+      val cand = bandRows(fresh, cfg)
+        .join(target,
+          col("band_id") === col("t_band_id") && col("sig") === col("t_sig") &&
+          col("vec_id") =!= col("t_vec_id"))
+        .select(col("vec_id").as("query_id"), col("t_vec_id").as("neighbor_id"))
+        .distinct()
+      val scored = cand
+        .join(fresh.select(col("vec_id").as("query_id"), col("v").as("qv"),
+          col("nv").as("qnv")), Seq("query_id"))
+        .join(all.select(col("vec_id").as("neighbor_id"), col("v"), col("nv")),
+          Seq("neighbor_id"))
+        .withColumn("cosine", dot("qv", "v") / (col("qnv") * col("nv")))
+      val w = Window.partitionBy(col("query_id"))
+        .orderBy(col("cosine").desc, col("neighbor_id"))
+      // No localCheckpoint: the committed index is stable until the
+      // epoch marker, so the top-k plan materializes exactly once — by
+      // the epoch write — against an unmoving listing
+      val topk = scored.withColumn("rank", row_number().over(w))
+        .filter(col("rank") <= cfg.k)
+        .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
+      Map("vectors" -> fresh, "neighbors" -> topk, "occ" -> occState)
+    }("neighbors")
   }
 
   /** Batch-API convenience: commits under the next free epoch id
@@ -222,11 +211,9 @@ object IncrementalAnn {
     * [[StreamingState.checkpointDeltas]]). Markers, neighbor reports,
     * the occupancy state, and the plane model stay untouched.
     */
-  def compact(spark: SparkSession, indexPath: String): Unit = {
-    StreamingState.checkpointDeltas(spark, statePath(indexPath),
+  def compact(spark: SparkSession, indexPath: String): Unit =
+    StreamingState.compactDeltas(spark, statePath(indexPath), Format,
       Map("vectors" -> vectorsSchema))
-    StreamingState.vacuum(spark, statePath(indexPath), Seq("vectors"))
-  }
 
   /** Streaming surface: foreachBatch maintaining the index, handing
     * each micro-batch's top-k neighbor frame to the caller.

@@ -78,49 +78,8 @@ object IncrementalCluster {
     */
   private val FormatVersion = 2
 
-  private def versionPath(path: String) = s"$path/_graft_format_version"
-
-  /** Marker-only layout check for READERS (r14, closing the r13 ADVICE
-    * finding): verifies an existing marker or refuses pre-versioning
-    * content, but never mkdirs the root or stamps a marker — reading a
-    * mistyped or not-yet-created path must not create state (and must
-    * work on read-only storage). [[checkOrStampVersion]] (stamping) is
-    * reserved for [[update]], the one writer.
-    */
-  private def checkVersionOnly(spark: SparkSession, path: String): Unit = {
-    val fs = StreamingState.fsFor(spark, path)
-    val vp = new org.apache.hadoop.fs.Path(versionPath(path))
-    val root = new org.apache.hadoop.fs.Path(path)
-    if (fs.exists(vp)) {
-      val in = fs.open(vp)
-      val v = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      if (v != FormatVersion.toString)
-        throw new IllegalStateException(
-          s"IncrementalCluster state at $path has layout version $v but this " +
-          s"build reads version $FormatVersion (append-delta rows); resolving " +
-          "it would silently mis-assign labels. Rebuild the state (delete the " +
-          "directory and re-run the drops).")
-    } else if (fs.exists(root) &&
-        fs.listStatus(root).exists(st =>
-          !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))) {
-      throw new IllegalStateException(
-        s"IncrementalCluster state at $path predates layout versioning " +
-        s"(no ${versionPath(path)} marker); refusing to resolve it as version-" +
-        s"$FormatVersion deltas. Rebuild the state.")
-    }
-  }
-
-  private def checkOrStampVersion(spark: SparkSession, path: String): Unit = {
-    checkVersionOnly(spark, path)
-    val fs = StreamingState.fsFor(spark, path)
-    val vp = new org.apache.hadoop.fs.Path(versionPath(path))
-    if (!fs.exists(vp)) {
-      fs.mkdirs(new org.apache.hadoop.fs.Path(path))
-      val out = fs.create(vp, true)
-      try out.write(FormatVersion.toString.getBytes("UTF-8")) finally out.close()
-    }
-  }
+  private val Format = StreamingState.Format("IncrementalCluster state",
+    Some(FormatVersion.toString))
 
   val membersSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType, nullable = true),
@@ -175,25 +134,17 @@ object IncrementalCluster {
   }
 
   /** Current (doc_id, label, score) state — every doc ever paired. */
-  def readMembers(spark: SparkSession, path: String): DataFrame = {
-    checkVersionOnly(spark, path)
-    StreamingState.guardEpochLayout(spark, path, "IncrementalCluster")
-    resolve(
-      StreamingState.readCommittedDeltas(spark, path, "members", membersDeltaSchema),
+  def readMembers(spark: SparkSession, path: String): DataFrame =
+    resolve(StreamingState.read(spark, path, Format, "members", membersDeltaSchema),
       "doc_id", Seq("label", "score"))
-  }
 
   /** Current per-cluster survivor election (tombstoned clusters —
     * labels absorbed by a merge — resolve away).
     */
-  def readSurvivors(spark: SparkSession, path: String): DataFrame = {
-    checkVersionOnly(spark, path)
-    StreamingState.guardEpochLayout(spark, path, "IncrementalCluster")
-    resolve(
-      StreamingState.readCommittedDeltas(spark, path, "survivors", survivorsDeltaSchema),
+  def readSurvivors(spark: SparkSession, path: String): DataFrame =
+    resolve(StreamingState.read(spark, path, Format, "survivors", survivorsDeltaSchema),
       "cluster_id", Seq("survivor_id", "cluster_size", "score"))
       .filter(col("survivor_id").isNotNull)
-  }
 
   /** t52's quality score for a (doc_id, text) batch — the per-doc
     * election key, computed once per document at arrival (text is
@@ -204,12 +155,15 @@ object IncrementalCluster {
         docs.withColumn("words", expr("filter(split(text, ' '), w -> w != '')")))
       .select(col("doc_id"), col("score"))
 
-  private def readChanges(spark: SparkSession, path: String,
-      batchId: Long): Changes = Changes(
-    spark.read.schema(labelChangesSchema)
-      .parquet(StreamingState.epochRel(path, batchId, "label_changes")),
-    spark.read.schema(survivorChangesSchema)
-      .parquet(StreamingState.epochRel(path, batchId, "survivor_changes")))
+  /** The (doc_id, score) endpoints of a pair report — the election
+    * scores the IncrementalDedup report carries for both sides of each
+    * pair, one row per distinct (doc_id, score). graft-drop and DropCheck
+    * fold a drop's pairs as `update(…, pairs, endpointScores(pairs))`.
+    */
+  def endpointScores(pairs: DataFrame): DataFrame =
+    pairs.select(col("doc_a").as("doc_id"), col("score_a").as("score"))
+      .unionByName(pairs.select(col("doc_b").as("doc_id"), col("score_b").as("score")))
+      .distinct()
 
   /** Most rows one [[update]] collects into the Spark driver: this drop's
     * pairs, the affected members, the batch scores and the prior
@@ -230,112 +184,109 @@ object IncrementalCluster {
     */
   def update(spark: SparkSession, path: String, batchId: Long,
       pairs: DataFrame, scores: DataFrame): Changes = {
-    checkOrStampVersion(spark, path)
-    StreamingState.guardEpochLayout(spark, path, "IncrementalCluster")
-    if (StreamingState.isCommitted(spark, path, batchId))
-      return readChanges(spark, path, batchId)
-
-    var collected = 0L
-    def take(what: String, df: DataFrame): Array[Row] = {
-      val rows = df.collect()
-      collected += rows.length
-      if (collected > MaxFoldRows)
-        throw new IllegalStateException(
-          s"IncrementalCluster fold of batch $batchId collected $collected rows " +
-          s"(through the $what), above the cap MaxFoldRows = " +
-          s"$MaxFoldRows; nothing was committed")
-      rows
-    }
-    def ids(name: String, xs: Iterable[Long]): DataFrame = broadcast(
-      spark.createDataFrame(
-        java.util.Arrays.asList(xs.toSeq.map(Row(_)): _*),
-        StructType(Seq(StructField(name, LongType, nullable = false)))))
-    def optDouble(r: Row, i: Int): Option[Double] =
-      if (r.isNullAt(i)) None else Some(r.getDouble(i))
-
-    val edges = take("pairs", pairs.select(col("doc_a"), col("doc_b")))
-      .map(r => (r.getLong(0), r.getLong(1)))
-    val touched = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
-    // components holding any endpoint of a new edge, as (doc_id, label,
-    // score); everything else is carried implicitly by the delta
-    // layout — the fold neither reads nor rewrites an unaffected cluster
-    val prev: Map[Long, (Long, Option[Double])] =
-      if (touched.isEmpty) Map.empty
-      else {
-        val members = readMembers(spark, path)
-        val affLabels = members.join(ids("doc_id", touched), Seq("doc_id"), "left_semi")
-          .select(col("label"))
-        take("affected members", members.join(affLabels, Seq("label"), "left_semi")
-            .select(col("doc_id"), col("label"), col("score")))
-          .map(r => r.getLong(0) -> ((r.getLong(1), optDouble(r, 2)))).toMap
+    val changes = StreamingState.fold(spark, path, Format, batchId,
+        Map("label_changes" -> labelChangesSchema,
+          "survivor_changes" -> survivorChangesSchema)) {
+      var collected = 0L
+      def take(what: String, df: DataFrame): Array[Row] = {
+        val rows = df.collect()
+        collected += rows.length
+        if (collected > MaxFoldRows)
+          throw new IllegalStateException(
+            s"IncrementalCluster fold of batch $batchId collected $collected rows " +
+            s"(through the $what), above the cap MaxFoldRows = " +
+            s"$MaxFoldRows; nothing was committed")
+        rows
       }
-    val affLabels = prev.values.map(_._1).toSet
+      def ids(name: String, xs: Iterable[Long]): DataFrame = broadcast(
+        spark.createDataFrame(
+          java.util.Arrays.asList(xs.toSeq.map(Row(_)): _*),
+          StructType(Seq(StructField(name, LongType, nullable = false)))))
+      def optDouble(r: Row, i: Int): Option[Double] =
+        if (r.isNullAt(i)) None else Some(r.getDouble(i))
 
-    // union-find on the change-bounded subgraph: the new edges plus a
-    // (doc → label) star edge per affected member. A state label is
-    // its component's min and is a node here, so every root — the
-    // smaller id of each union — is the min over all it absorbed:
-    // batch t40's label over the union of every drop's pairs
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) {
-        val up = parent(r)
-        parent(r) = parent.getOrElse(up, up) // path halving
-        r = up
+      val edges = take("pairs", pairs.select(col("doc_a"), col("doc_b")))
+        .map(r => (r.getLong(0), r.getLong(1)))
+      val touched = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
+      // components holding any endpoint of a new edge, as (doc_id, label,
+      // score); everything else is carried implicitly by the delta
+      // layout — the fold neither reads nor rewrites an unaffected cluster
+      val prev: Map[Long, (Long, Option[Double])] =
+        if (touched.isEmpty) Map.empty
+        else {
+          val members = readMembers(spark, path)
+          val affLabels = members.join(ids("doc_id", touched), Seq("doc_id"), "left_semi")
+            .select(col("label"))
+          take("affected members", members.join(affLabels, Seq("label"), "left_semi")
+              .select(col("doc_id"), col("label"), col("score")))
+            .map(r => r.getLong(0) -> ((r.getLong(1), optDouble(r, 2)))).toMap
+        }
+      val affLabels = prev.values.map(_._1).toSet
+
+      // union-find on the change-bounded subgraph: the new edges plus a
+      // (doc → label) star edge per affected member. A state label is
+      // its component's min and is a node here, so every root — the
+      // smaller id of each union — is the min over all it absorbed:
+      // batch t40's label over the union of every drop's pairs
+      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+      def find(x: Long): Long = {
+        var r = x
+        while (parent.getOrElse(r, r) != r) {
+          val up = parent(r)
+          parent(r) = parent.getOrElse(up, up) // path halving
+          r = up
+        }
+        r
       }
-      r
-    }
-    def union(a: Long, b: Long): Unit = {
-      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    edges.foreach { case (a, b) => if (a != b) union(a, b) }
-    prev.foreach { case (d, (l, _)) => if (d != l) union(d, l) }
-    val nodes = parent.keys.toSeq.sorted
-
-    // score every relabeled doc: stored score wins, batch score covers
-    // first appearances (max per doc — a duplicate (doc_id, score) row
-    // must not decide anything)
-    val batchScore: Map[Long, Option[Double]] =
-      if (nodes.isEmpty) Map.empty
-      else take("batch scores", scores.join(ids("doc_id", nodes), Seq("doc_id"), "left_semi")
-          .groupBy(col("doc_id")).agg(max(col("score")).as("score")))
-        .map(r => r.getLong(0) -> optDouble(r, 1)).toMap
-    val prevSurvivor: Map[Long, Long] =
-      if (nodes.isEmpty) Map.empty
-      else take("prior survivors", readSurvivors(spark, path)
-          .join(ids("cluster_id", nodes), Seq("cluster_id"), "left_semi")
-          .select(col("cluster_id"), col("survivor_id")))
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-    val newAffM = nodes.map { d =>
-      (d, find(d), prev.get(d).flatMap(_._2).orElse(batchScore.getOrElse(d, None)))
-    }
-    // election: highest score (null lowest, NaN highest, as Spark orders
-    // doubles), ties to the lower doc id
-    def better(a: (Long, Option[Double]), b: (Long, Option[Double])): Boolean = {
-      val c = (a._2, b._2) match {
-        case (None, None)       => 0
-        case (None, _)          => -1
-        case (_, None)          => 1
-        case (Some(x), Some(y)) => if (x == y) 0 else java.lang.Double.compare(x, y)
+      def union(a: Long, b: Long): Unit = {
+        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
-      c > 0 || (c == 0 && a._1 < b._1)
-    }
-    val affSurv = newAffM.groupBy(_._2).toSeq.sortBy(_._1).map { case (label, ms) =>
-      val best = ms.map(m => (m._1, m._3)).reduce((a, b) => if (better(b, a)) b else a)
-      (label, best._1, ms.size.toLong, best._2)
-    }
-    // labels absorbed by a merge no longer name a cluster: tombstone
-    // them so the resolved survivor view drops their stale election
-    val tombstones = affLabels.diff(affSurv.map(_._1).toSet).toSeq.sorted
+      edges.foreach { case (a, b) => if (a != b) union(a, b) }
+      prev.foreach { case (d, (l, _)) => if (d != l) union(d, l) }
+      val nodes = parent.keys.toSeq.sorted
 
-    def rel(rows: Seq[Row], schema: StructType): DataFrame =
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).coalesce(1)
-    def boxed(v: Option[Double]): Any = v.map(Double.box).orNull
-    StreamingState.commitAppend(spark, path, batchId,
+      // score every relabeled doc: stored score wins, batch score covers
+      // first appearances (max per doc — a duplicate (doc_id, score) row
+      // must not decide anything)
+      val batchScore: Map[Long, Option[Double]] =
+        if (nodes.isEmpty) Map.empty
+        else take("batch scores", scores.join(ids("doc_id", nodes), Seq("doc_id"), "left_semi")
+            .groupBy(col("doc_id")).agg(max(col("score")).as("score")))
+          .map(r => r.getLong(0) -> optDouble(r, 1)).toMap
+      val prevSurvivor: Map[Long, Long] =
+        if (nodes.isEmpty) Map.empty
+        else take("prior survivors", readSurvivors(spark, path)
+            .join(ids("cluster_id", nodes), Seq("cluster_id"), "left_semi")
+            .select(col("cluster_id"), col("survivor_id")))
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+      val newAffM = nodes.map { d =>
+        (d, find(d), prev.get(d).flatMap(_._2).orElse(batchScore.getOrElse(d, None)))
+      }
+      // election: highest score (null lowest, NaN highest, as Spark orders
+      // doubles), ties to the lower doc id
+      def better(a: (Long, Option[Double]), b: (Long, Option[Double])): Boolean = {
+        val c = (a._2, b._2) match {
+          case (None, None)       => 0
+          case (None, _)          => -1
+          case (_, None)          => 1
+          case (Some(x), Some(y)) => if (x == y) 0 else java.lang.Double.compare(x, y)
+        }
+        c > 0 || (c == 0 && a._1 < b._1)
+      }
+      val affSurv = newAffM.groupBy(_._2).toSeq.sortBy(_._1).map { case (label, ms) =>
+        val best = ms.map(m => (m._1, m._3)).reduce((a, b) => if (better(b, a)) b else a)
+        (label, best._1, ms.size.toLong, best._2)
+      }
+      // labels absorbed by a merge no longer name a cluster: tombstone
+      // them so the resolved survivor view drops their stale election
+      val tombstones = affLabels.diff(affSurv.map(_._1).toSet).toSeq.sorted
+
+      def rel(rows: Seq[Row], schema: StructType): DataFrame =
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).coalesce(1)
+      def boxed(v: Option[Double]): Any = v.map(Double.box).orNull
       Map(
         "members" -> rel(newAffM.map { case (d, l, sc) =>
           Row(d, l, boxed(sc), batchId) }, membersDeltaSchema),
@@ -350,8 +301,9 @@ object IncrementalCluster {
         "survivor_changes" -> rel(affSurv.collect {
           case (c, sv, n, sc) if !prevSurvivor.get(c).contains(sv) =>
             Row(c, prevSurvivor.get(c).map(Long.box).orNull, sv, n, boxed(sc))
-        }, survivorChangesSchema)))
-    readChanges(spark, path, batchId)
+        }, survivorChangesSchema))
+    }
+    Changes(changes("label_changes"), changes("survivor_changes"))
   }
 
   /** Compact the member/survivor delta logs into their RESOLVED
@@ -372,9 +324,8 @@ object IncrementalCluster {
     * only keep shrinking, so a tombstoned cluster_id never names a
     * cluster again.
     */
-  def compact(spark: SparkSession, path: String): Unit = {
-    checkVersionOnly(spark, path)
-    StreamingState.checkpointDeltas(spark, path,
+  def compact(spark: SparkSession, path: String): Unit =
+    StreamingState.compactDeltas(spark, path, Format,
       Map("members" -> membersDeltaSchema, "survivors" -> survivorsDeltaSchema),
       fold = {
         case ("members", df) =>
@@ -385,6 +336,4 @@ object IncrementalCluster {
             .filter(col("survivor_id").isNotNull)
         case (_, df) => df
       })
-    StreamingState.vacuum(spark, path, Seq("members", "survivors"))
-  }
 }

@@ -63,75 +63,16 @@ object IncrementalDedup {
     */
   private[streaming] val FormatVersion = 3
 
-  private def versionPath(path: String) = s"$path/_graft_format_version"
-
-  private def versionStamp(normalizeNfc: Boolean): String =
-    if (normalizeNfc) s"$FormatVersion+nfc" else FormatVersion.toString
-
-  /** Refuse an index written under a different signature scheme or
-    * signing normalization; stamp both on first creation. The marker
-    * filename starts with '_' so the parquet reader treats it as
-    * hidden metadata.
+  /** The index's open-time format ([[StreamingState.open]]): stamped
+    * `3` or `3+nfc`; readers accept either, the writer only the stamp
+    * of its own signing normalization.
     */
-  private def readStamp(fs: org.apache.hadoop.fs.FileSystem,
-      vp: org.apache.hadoop.fs.Path): String = {
-    val in = fs.open(vp)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-    finally in.close()
-  }
-
-  /** Mode-insensitive check for readers that only consume stored rows
-    * (readIndex / compact): any current-version stamp is fine — the
-    * signing normalization only matters when NEW signatures must be
-    * comparable to stored ones.
-    */
-  private def checkVersionOnly(spark: SparkSession, path: String): Unit = {
-    val fs = StreamingState.fsFor(spark, path)
-    val vp = new org.apache.hadoop.fs.Path(versionPath(path))
-    val root = new org.apache.hadoop.fs.Path(path)
-    if (fs.exists(vp)) {
-      val v = readStamp(fs, vp)
-      if (v != versionStamp(false) && v != versionStamp(true))
-        throw new IllegalStateException(
-          s"IncrementalDedup index at $path has signature-scheme version $v " +
-          s"but this build reads version $FormatVersion. Rebuild the index.")
-    } else if (fs.exists(root) &&
-        fs.listStatus(root).exists(st =>
-          !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))) {
-      throw new IllegalStateException(
-        s"IncrementalDedup index at $path predates signature-scheme versioning " +
-        s"(no ${versionPath(path)} marker); refusing to read it as a version-" +
-        s"$FormatVersion index. Rebuild the index.")
-    }
-  }
-
-  private def checkOrStampVersion(spark: SparkSession, path: String,
-      normalizeNfc: Boolean = false): Unit = {
-    val fs = StreamingState.fsFor(spark, path)
-    val vp = new org.apache.hadoop.fs.Path(versionPath(path))
-    val root = new org.apache.hadoop.fs.Path(path)
-    if (fs.exists(vp)) {
-      val v = readStamp(fs, vp)
-      if (v != versionStamp(normalizeNfc))
-        throw new IllegalStateException(
-          s"IncrementalDedup index at $path has signature-scheme version $v " +
-          s"but this probe signs ${versionStamp(normalizeNfc)}; mixed schemes " +
-          "silently miss true near-duplicates. Rebuild the index (delete the " +
-          "directory and re-stream the corpus) or match the --normalize-nfc " +
-          "setting it was created with.")
-    } else if (fs.exists(root) &&
-        fs.listStatus(root).exists(st =>
-          !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))) {
-      throw new IllegalStateException(
-        s"IncrementalDedup index at $path predates signature-scheme versioning " +
-        s"(no ${versionPath(path)} marker); refusing to probe it with version-" +
-        s"$FormatVersion signatures. Rebuild the index.")
-    } else {
-      fs.mkdirs(root)
-      val out = fs.create(vp, true)
-      try out.write(versionStamp(normalizeNfc).getBytes("UTF-8")) finally out.close()
-    }
-  }
+  private def format(normalizeNfc: Boolean) = StreamingState.Format(
+    "IncrementalDedup index",
+    Some(if (normalizeNfc) s"$FormatVersion+nfc" else FormatVersion.toString),
+    reads = Set(FormatVersion.toString, s"$FormatVersion+nfc"),
+    hint = " (signatures of mixed signing modes silently miss true " +
+      "near-duplicates: match the --normalize-nfc setting the index was created with)")
 
   val indexSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType, nullable = false),
@@ -185,10 +126,8 @@ object IncrementalDedup {
     * (HDFS/S3-safe) and an existing index must carry the current
     * format version.
     */
-  def readIndex(spark: SparkSession, path: String): DataFrame = {
-    if (StreamingState.exists(spark, path)) checkVersionOnly(spark, path)
-    StreamingState.readCommittedDeltas(spark, path, "index", indexSchema)
-  }
+  def readIndex(spark: SparkSession, path: String): DataFrame =
+    StreamingState.read(spark, path, format(false), "index", indexSchema)
 
   /** Ids-only banded view: the probe join must move (id, band, sig)
     * rows, never the shingle arrays — payloads re-attach by id for
@@ -215,55 +154,50 @@ object IncrementalDedup {
   def processBatch(batch: DataFrame, indexPath: String, batchId: Long,
       threshold: Double = 0.5, normalizeNfc: Boolean = false): DataFrame = {
     val spark = batch.sparkSession
-    checkOrStampVersion(spark, indexPath, normalizeNfc)
-    if (StreamingState.isCommitted(spark, indexPath, batchId))
-      return spark.read.schema(pairsSchema)
-        .parquet(StreamingState.epochRel(indexPath, batchId, "pairs"))
-    val existing = readIndex(spark, indexPath)
-    val fresh = docSignatures(batch, normalizeNfc)
-      .join(existing.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val all = existing.unionByName(fresh)
+    StreamingState.fold(spark, indexPath, format(normalizeNfc), batchId,
+        Map("pairs" -> pairsSchema)) {
+      val existing = readIndex(spark, indexPath)
+      val fresh = docSignatures(batch, normalizeNfc)
+        .join(existing.select(col("doc_id")), Seq("doc_id"), "left_anti")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val all = existing.unionByName(fresh)
 
-    // the probe is a self-join (fresh rides inside `all`), so the
-    // target side gets explicitly renamed columns — fresh exprIds —
-    // instead of dataset aliases, which resolve ambiguously here
-    val target = bandRows(all).select(
-      col("doc_id").as("t_doc_id"), col("band_id").as("t_band_id"),
-      col("band_sig").as("t_band_sig"))
-    val candIds = bandRows(fresh)
-      .join(target,
-        col("band_id") === col("t_band_id") &&
-        col("band_sig") === col("t_band_sig") &&
-        col("doc_id") =!= col("t_doc_id"))
-      .select(
-        least(col("doc_id"), col("t_doc_id")).as("doc_a"),
-        greatest(col("doc_id"), col("t_doc_id")).as("doc_b"))
-      .distinct()
-    val payload = all.select(col("doc_id"), col("shs"), col("n"), col("score"))
-    val cand = candIds
-      .join(payload.select(col("doc_id").as("doc_a"), col("shs").as("shs_a"),
-        col("n").as("n_a"), col("score").as("score_a")), Seq("doc_a"))
-      .join(payload.select(col("doc_id").as("doc_b"), col("shs").as("shs_b"),
-        col("n").as("n_b"), col("score").as("score_b")), Seq("doc_b"))
-    // No localCheckpoint needed under the epoch layout: the committed
-    // index `existing` is stable throughout (this batch's rows live in
-    // an epoch dir no reader resolves until the marker), so the pair
-    // plan is materialized once — by the epoch write itself — against
-    // a listing that cannot shift under it.
-    val pairs = cand
-      .withColumn("inter",
-        size(array_intersect(col("shs_a"), col("shs_b"))).cast("long"))
-      .withColumn("jaccard",
-        col("inter") / (col("n_a") + col("n_b") - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"),
-        col("score_a"), col("score_b"))
-    StreamingState.commitAppend(spark, indexPath, batchId,
-      Map("index" -> fresh, "pairs" -> pairs))
-    fresh.unpersist()
-    spark.read.schema(pairsSchema)
-      .parquet(StreamingState.epochRel(indexPath, batchId, "pairs"))
+      // the probe is a self-join (fresh rides inside `all`), so the
+      // target side gets explicitly renamed columns — fresh exprIds —
+      // instead of dataset aliases, which resolve ambiguously here
+      val target = bandRows(all).select(
+        col("doc_id").as("t_doc_id"), col("band_id").as("t_band_id"),
+        col("band_sig").as("t_band_sig"))
+      val candIds = bandRows(fresh)
+        .join(target,
+          col("band_id") === col("t_band_id") &&
+          col("band_sig") === col("t_band_sig") &&
+          col("doc_id") =!= col("t_doc_id"))
+        .select(
+          least(col("doc_id"), col("t_doc_id")).as("doc_a"),
+          greatest(col("doc_id"), col("t_doc_id")).as("doc_b"))
+        .distinct()
+      val payload = all.select(col("doc_id"), col("shs"), col("n"), col("score"))
+      val cand = candIds
+        .join(payload.select(col("doc_id").as("doc_a"), col("shs").as("shs_a"),
+          col("n").as("n_a"), col("score").as("score_a")), Seq("doc_a"))
+        .join(payload.select(col("doc_id").as("doc_b"), col("shs").as("shs_b"),
+          col("n").as("n_b"), col("score").as("score_b")), Seq("doc_b"))
+      // No localCheckpoint needed under the epoch layout: the committed
+      // index `existing` is stable throughout (this batch's rows live in
+      // an epoch dir no reader resolves until the marker), so the pair
+      // plan is materialized once — by the epoch write itself — against
+      // a listing that cannot shift under it.
+      val pairs = cand
+        .withColumn("inter",
+          size(array_intersect(col("shs_a"), col("shs_b"))).cast("long"))
+        .withColumn("jaccard",
+          col("inter") / (col("n_a") + col("n_b") - col("inter")))
+        .filter(col("jaccard") >= threshold)
+        .select(col("doc_a"), col("doc_b"), col("jaccard"),
+          col("score_a"), col("score_b"))
+      Map("index" -> fresh, "pairs" -> pairs)
+    }("pairs")
   }
 
   /** Batch-API convenience (specs, ad-hoc use): commits under the next
@@ -284,12 +218,9 @@ object IncrementalDedup {
     * for the whole history. Run lazily, e.g. yearly on a monthly-drop
     * cadence.
     */
-  def compact(spark: SparkSession, indexPath: String): Unit = {
-    checkVersionOnly(spark, indexPath)
-    StreamingState.checkpointDeltas(spark, indexPath,
+  def compact(spark: SparkSession, indexPath: String): Unit =
+    StreamingState.compactDeltas(spark, indexPath, format(false),
       Map("index" -> indexSchema))
-    StreamingState.vacuum(spark, indexPath, Seq("index"))
-  }
 
   /** Streaming surface: foreachBatch maintaining the index, handing
     * each micro-batch's verified near-dup pairs to the caller.

@@ -41,6 +41,8 @@ import graft.operators.Expectations
   */
 object IncrementalQuality {
 
+  private val Format = StreamingState.Format("IncrementalQuality")
+
   private val reportSchema: StructType = StructType(Seq(
     StructField("epoch", LongType, nullable = true),
     StructField("scope", StringType, nullable = true),
@@ -87,26 +89,19 @@ object IncrementalQuality {
       rules: Seq[Expectations.Rule] = dropRules,
       groupCols: Seq[String] = Nil): DataFrame = {
     val spark = batch.sparkSession
-    StreamingState.guardEpochLayout(spark, path, "IncrementalQuality")
-    if (StreamingState.isCommitted(spark, path, batchId))
-      return spark.read.schema(reportSchema)
-        .parquet(StreamingState.epochRel(path, batchId, "report"))
-        .drop("epoch")
-    val scope =
-      if (groupCols.isEmpty) lit(null).cast("string")
-      else concat_ws("/", groupCols.map(c => col(c).cast("string")): _*)
-    val report = Expectations.evaluateBy(batch, rules, groupCols)
-      .select(lit(batchId).as("epoch"), scope.as("scope"), col("rule"),
-        severityExpr(rules).as("severity"), col("n_violations"), col("pass"))
-    val profile = batch.agg(
-        count(lit(1)).as("n_docs"),
-        coalesce(sum(length(col("text"))), lit(0L)).cast("long").as("n_chars"))
-      .select(lit(batchId).as("epoch"), col("n_docs"), col("n_chars"))
-    StreamingState.commitAppend(spark, path, batchId,
-      Map("report" -> report, "profile" -> profile))
-    spark.read.schema(reportSchema)
-      .parquet(StreamingState.epochRel(path, batchId, "report"))
-      .drop("epoch")
+    StreamingState.fold(spark, path, Format, batchId, Map("report" -> reportSchema)) {
+      val scope =
+        if (groupCols.isEmpty) lit(null).cast("string")
+        else concat_ws("/", groupCols.map(c => col(c).cast("string")): _*)
+      val report = Expectations.evaluateBy(batch, rules, groupCols)
+        .select(lit(batchId).as("epoch"), scope.as("scope"), col("rule"),
+          severityExpr(rules).as("severity"), col("n_violations"), col("pass"))
+      val profile = batch.agg(
+          count(lit(1)).as("n_docs"),
+          coalesce(sum(length(col("text"))), lit(0L)).cast("long").as("n_chars"))
+        .select(lit(batchId).as("epoch"), col("n_docs"), col("n_chars"))
+      Map("report" -> report, "profile" -> profile)
+    }("report").drop("epoch")
   }
 
   /** Document count of committed epoch `batchId`, from its volume row. */
@@ -118,18 +113,14 @@ object IncrementalQuality {
   /** Per-drop rule counts across every committed epoch — the quality
     * trend a dashboard plots (epoch ascending, scope, rule).
     */
-  def readTrend(spark: SparkSession, path: String): DataFrame = {
-    StreamingState.guardEpochLayout(spark, path, "IncrementalQuality")
-    StreamingState.readCommittedDeltas(spark, path, "report", reportSchema)
+  def readTrend(spark: SparkSession, path: String): DataFrame =
+    StreamingState.read(spark, path, Format, "report", reportSchema)
       .orderBy(col("epoch"), col("scope"), col("rule"))
-  }
 
   /** Per-drop volume rows (epoch, n_docs, n_chars), epoch ascending. */
-  def readProfile(spark: SparkSession, path: String): DataFrame = {
-    StreamingState.guardEpochLayout(spark, path, "IncrementalQuality")
-    StreamingState.readCommittedDeltas(spark, path, "profile", profileSchema)
+  def readProfile(spark: SparkSession, path: String): DataFrame =
+    StreamingState.read(spark, path, Format, "profile", profileSchema)
       .orderBy(col("epoch"))
-  }
 
   /** Cumulative rule totals over all drops so far — additive across
     * disjoint batches for every offered rule (the batch-scoped
@@ -153,10 +144,7 @@ object IncrementalQuality {
     * reads them by batch id), so only the read path folds — the
     * rules-sized epoch rows stay on disk for replay.
     */
-  def compact(spark: SparkSession, path: String): Unit = {
-    StreamingState.guardEpochLayout(spark, path, "IncrementalQuality")
-    StreamingState.checkpointDeltas(spark, path,
-      Map("report" -> reportSchema, "profile" -> profileSchema))
-    ()
-  }
+  def compact(spark: SparkSession, path: String): Unit =
+    StreamingState.compactDeltas(spark, path, Format,
+      Map("report" -> reportSchema, "profile" -> profileSchema), vacuumDeltas = false)
 }

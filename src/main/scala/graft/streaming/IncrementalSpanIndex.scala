@@ -79,6 +79,8 @@ import graft.operators.TrainingOps
   */
 object IncrementalSpanIndex {
 
+  private val Format = StreamingState.Format("IncrementalSpanIndex")
+
   val indexSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType, nullable = false),
     StructField("pos", LongType, nullable = false),
@@ -109,27 +111,14 @@ object IncrementalSpanIndex {
   /** Current committed window index (union of every published epoch's
     * delta; empty if never written).
     */
-  def readIndex(spark: SparkSession, path: String): DataFrame = {
-    StreamingState.guardEpochLayout(spark, path, "IncrementalSpanIndex")
-    StreamingState.readCommittedDeltas(spark, path, "windows", indexSchema)
-  }
+  def readIndex(spark: SparkSession, path: String): DataFrame =
+    StreamingState.read(spark, path, Format, "windows", indexSchema)
 
   /** Doc ids already committed — one row per document, so the replay
     * anti-join never scans the token-sized window relation.
     */
   private def indexedDocs(spark: SparkSession, path: String): DataFrame =
     StreamingState.readCommittedDeltas(spark, path, "docs", docsSchema)
-
-  /** The persisted per-h64 (docf, maxk) aggregate of the CURRENT
-    * committed epoch (the full cap state as of the last drop).
-    */
-  private[graft] def currentCaps(spark: SparkSession, path: String): DataFrame = {
-    val e = StreamingState.currentEpoch(spark, path)
-    if (e < 0L) spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], capsSchema)
-    else StreamingState.readOr(spark,
-      StreamingState.epochRel(path, e, "caps"), capsSchema)
-  }
 
   /** Fold a batch's window delta into the persisted cap state: the
     * new full per-h64 (docf, maxk) aggregate. Exposed for the spec
@@ -143,7 +132,7 @@ object IncrementalSpanIndex {
       .agg(count(lit(1)).as("k"))
       .groupBy(col("h64"))
       .agg(count(lit(1)).as("docf"), max(col("k")).as("maxk"))
-    currentCaps(spark, path).unionByName(deltaAgg)
+    StreamingState.readCurrent(spark, path, "caps", capsSchema).unionByName(deltaAgg)
       .groupBy(col("h64"))
       .agg(sum(col("docf")).as("docf"), max(col("maxk")).as("maxk"))
   }
@@ -157,61 +146,54 @@ object IncrementalSpanIndex {
   def processBatch(batch: DataFrame, indexPath: String,
       batchId: Long): DataFrame = {
     val spark = batch.sparkSession
-    StreamingState.guardEpochLayout(spark, indexPath, "IncrementalSpanIndex")
-    if (StreamingState.isCommitted(spark, indexPath, batchId))
-      return spark.read.schema(spansSchema)
-        .parquet(StreamingState.epochRel(indexPath, batchId, "spans"))
-    val existing = readIndex(spark, indexPath)
-    val newDocs = batch.select(col("doc_id")).distinct()
-      .join(indexedDocs(spark, indexPath), Seq("doc_id"), "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val fresh = windowRows(batch)
-      .join(newDocs, Seq("doc_id"), "left_semi")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // t82's seeding discipline from the FOLDED state — identical to
-    // re-aggregating index ∪ fresh (per-doc window sets are epoch-
-    // disjoint) without the per-drop corpus-sized shuffle
-    val caps = foldedCaps(spark, indexPath, fresh)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val cold = caps
-      .filter(col("docf") <= TrainingOps.SpanDfCap &&
-        col("maxk") <= TrainingOps.SpanOccCap)
-      .select(col("h64"))
-
-    val freshC = fresh.join(cold, Seq("h64"))
-      .select(col("h64"), col("doc_id").as("f_doc"), col("pos").as("f_pos"))
-    // the cap discipline needs only ONE side filtered: the probe is an
-    // h64 equi-join, so an index posting with a hot hash can never
-    // match the cold-filtered fresh side — filtering the index too
-    // would add a second full-index join stage per drop for rows the
-    // equi-join already discards
-    val allC = existing.unionByName(fresh)
-      .select(col("h64"), col("doc_id").as("t_doc"), col("pos").as("t_pos"))
-    val m = freshC.join(allC, Seq("h64"))
-      .filter(col("f_doc") =!= col("t_doc"))
-      .select(
-        least(col("f_doc"), col("t_doc")).as("doc_a"),
-        greatest(col("f_doc"), col("t_doc")).as("doc_b"),
-        when(col("f_doc") < col("t_doc"), col("f_pos")).otherwise(col("t_pos")).as("pa"),
-        when(col("f_doc") < col("t_doc"), col("t_pos")).otherwise(col("f_pos")).as("pb"))
-      // a new-vs-new pair matches from both fresh sides — dedup the
-      // normalized rows before island construction
-      .distinct()
-
-    // t82's own island kernel. No localCheckpoint: the committed index
-    // is stable until the marker below, so the span plan materializes
-    // exactly once — by the epoch write — against an unmoving listing
-    val spans = TrainingOps.maximalSpans(m)
-    StreamingState.commitAppend(spark, indexPath, batchId,
-      Map("windows" -> fresh, "docs" -> newDocs, "caps" -> caps,
-        "spans" -> spans))
     // the cap state is full per epoch (each copy supersedes the last);
     // window/doc deltas stay — their union IS the index
-    StreamingState.pruneRel(spark, indexPath, "caps")
-    caps.unpersist(); fresh.unpersist(); newDocs.unpersist()
-    spark.read.schema(spansSchema)
-      .parquet(StreamingState.epochRel(indexPath, batchId, "spans"))
+    StreamingState.fold(spark, indexPath, Format, batchId,
+        Map("spans" -> spansSchema), fullState = Seq("caps")) {
+      val existing = readIndex(spark, indexPath)
+      val newDocs = batch.select(col("doc_id")).distinct()
+        .join(indexedDocs(spark, indexPath), Seq("doc_id"), "left_anti")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val fresh = windowRows(batch)
+        .join(newDocs, Seq("doc_id"), "left_semi")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+
+      // t82's seeding discipline from the FOLDED state — identical to
+      // re-aggregating index ∪ fresh (per-doc window sets are epoch-
+      // disjoint) without the per-drop corpus-sized shuffle
+      val caps = foldedCaps(spark, indexPath, fresh)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val cold = caps
+        .filter(col("docf") <= TrainingOps.SpanDfCap &&
+          col("maxk") <= TrainingOps.SpanOccCap)
+        .select(col("h64"))
+
+      val freshC = fresh.join(cold, Seq("h64"))
+        .select(col("h64"), col("doc_id").as("f_doc"), col("pos").as("f_pos"))
+      // the cap discipline needs only ONE side filtered: the probe is an
+      // h64 equi-join, so an index posting with a hot hash can never
+      // match the cold-filtered fresh side — filtering the index too
+      // would add a second full-index join stage per drop for rows the
+      // equi-join already discards
+      val allC = existing.unionByName(fresh)
+        .select(col("h64"), col("doc_id").as("t_doc"), col("pos").as("t_pos"))
+      val m = freshC.join(allC, Seq("h64"))
+        .filter(col("f_doc") =!= col("t_doc"))
+        .select(
+          least(col("f_doc"), col("t_doc")).as("doc_a"),
+          greatest(col("f_doc"), col("t_doc")).as("doc_b"),
+          when(col("f_doc") < col("t_doc"), col("f_pos")).otherwise(col("t_pos")).as("pa"),
+          when(col("f_doc") < col("t_doc"), col("t_pos")).otherwise(col("f_pos")).as("pb"))
+        // a new-vs-new pair matches from both fresh sides — dedup the
+        // normalized rows before island construction
+        .distinct()
+
+      // t82's own island kernel. No localCheckpoint: the committed index
+      // is stable until the epoch's marker, so the span plan materializes
+      // exactly once — by the epoch write — against an unmoving listing
+      Map("windows" -> fresh, "docs" -> newDocs, "caps" -> caps,
+        "spans" -> TrainingOps.maximalSpans(m))
+    }("spans")
   }
 
   /** Batch-API convenience: commits under the next free epoch id
@@ -226,11 +208,9 @@ object IncrementalSpanIndex {
     * [[StreamingState.checkpointDeltas]]). Markers, span reports, and
     * the cap state stay untouched.
     */
-  def compact(spark: SparkSession, indexPath: String): Unit = {
-    StreamingState.checkpointDeltas(spark, indexPath,
+  def compact(spark: SparkSession, indexPath: String): Unit =
+    StreamingState.compactDeltas(spark, indexPath, Format,
       Map("windows" -> indexSchema, "docs" -> docsSchema))
-    StreamingState.vacuum(spark, indexPath, Seq("windows", "docs"))
-  }
 
   /** Streaming surface: foreachBatch maintaining the index, handing
     * each micro-batch's maximal spans to the caller.

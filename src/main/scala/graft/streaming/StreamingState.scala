@@ -37,6 +37,20 @@ import org.apache.spark.sql.types.StructType
   * directory of monotonically named entries where the reader's state
   * is "highest committed id", and publication is a single atomic
   * file creation.
+  *
+  * THE FOLD PATH. The five monthly-drop indexes (dedup, cluster, span,
+  * ANN, quality) commit through [[fold]] alone, so opening, replay,
+  * commit and report read-back are written once. A fold's relations
+  * are of two kinds:
+  *  - DELTA relations hold only this epoch's new rows; the index is the
+  *    union of every committed epoch's delta ([[readCommittedDeltas]]),
+  *    folded into one copy by [[compactDeltas]]. Per-batch reports
+  *    (pairs, spans, neighbors, …) are delta relations read by batch id.
+  *  - FULL-STATE relations (the span index's `caps`, the ANN index's
+  *    `occ`) are rewritten whole each epoch, each copy superseding the
+  *    last: read through [[readCurrent]], pruned to the two newest
+  *    epochs after each commit.
+  * Every root is checked by [[open]] before it is read or written.
   */
 object StreamingState {
 
@@ -58,15 +72,16 @@ object StreamingState {
   def epochRel(root: String, epoch: Long, rel: String): String =
     s"$root/epoch-$epoch/$rel"
 
-  /** Highest committed epoch id, or -1 if nothing was ever committed. */
-  def currentEpoch(spark: SparkSession, root: String): Long = {
-    val fs = fsFor(spark, root)
-    val commits = new Path(commitsDir(root))
-    if (!fs.exists(commits)) -1L
-    else fs.listStatus(commits).iterator
-      .flatMap(st => scala.util.Try(st.getPath.getName.toLong).toOption)
-      .foldLeft(-1L)(math.max)
+  /** Ids of the markers under `dir`, ascending (none if it does not exist). */
+  private def markerIds(fs: FileSystem, dir: String): Seq[Long] = {
+    val p = new Path(dir)
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toSeq.flatMap(_.getPath.getName.toLongOption).sorted
   }
+
+  /** Highest committed epoch id, or -1 if nothing was ever committed. */
+  def currentEpoch(spark: SparkSession, root: String): Long =
+    committedEpochs(spark, root).lastOption.getOrElse(-1L)
 
   /** Current contents of one state relation (empty if none committed). */
   def readCurrent(spark: SparkSession, root: String, rel: String,
@@ -112,14 +127,8 @@ object StreamingState {
     fsFor(spark, root).exists(new Path(s"${commitsDir(root)}/$epoch"))
 
   /** All committed epoch ids at `root`, ascending. */
-  def committedEpochs(spark: SparkSession, root: String): Seq[Long] = {
-    val fs = fsFor(spark, root)
-    val commits = new Path(commitsDir(root))
-    if (!fs.exists(commits)) Seq.empty
-    else fs.listStatus(commits).iterator
-      .flatMap(st => scala.util.Try(st.getPath.getName.toLong).toOption)
-      .toSeq.sorted
-  }
+  def committedEpochs(spark: SparkSession, root: String): Seq[Long] =
+    markerIds(fsFor(spark, root), commitsDir(root))
 
   /** Commit an APPEND-DELTA epoch: every epoch's relations stay live
     * (the committed index IS the union of the deltas), so unlike
@@ -133,8 +142,8 @@ object StreamingState {
     val fs = fsFor(spark, root)
     // create the (possibly empty) commit log BEFORE any relation write:
     // a crash mid-first-epoch must leave a root that reads as "epoch
-    // layout, nothing committed", not one guardEpochLayout mistakes
-    // for a pre-epoch legacy index and refuses to recover
+    // layout, nothing committed", not one [[open]] mistakes for a
+    // pre-epoch legacy index and refuses to recover
     fs.mkdirs(new Path(commitsDir(root)))
     rels.foreach { case (rel, df) =>
       df.write.mode("overwrite").parquet(epochRel(root, epoch, rel))
@@ -193,14 +202,8 @@ object StreamingState {
     s"$root/compact-$cp/$rel"
 
   /** Highest published checkpoint id, or -1 if never checkpointed. */
-  def currentCheckpoint(spark: SparkSession, root: String): Long = {
-    val fs = fsFor(spark, root)
-    val cps = new Path(checkpointsDir(root))
-    if (!fs.exists(cps)) -1L
-    else fs.listStatus(cps).iterator
-      .flatMap(st => scala.util.Try(st.getPath.getName.toLong).toOption)
-      .foldLeft(-1L)(math.max)
-  }
+  def currentCheckpoint(spark: SparkSession, root: String): Long =
+    markerIds(fsFor(spark, root), checkpointsDir(root)).lastOption.getOrElse(-1L)
 
   /** Union of one relation across the committed epochs (the reader of
     * the [[commitAppend]] layout): the newest checkpoint's compacted
@@ -278,15 +281,11 @@ object StreamingState {
     committedEpochs(spark, root).filter(_ <= cp).foreach { e =>
       rels.foreach { rel => fs.delete(new Path(epochRel(root, e, rel)), true); () }
     }
-    val cps = new Path(checkpointsDir(root))
-    fs.listStatus(cps).iterator
-      .flatMap(st => scala.util.Try(st.getPath.getName.toLong).toOption)
-      .filter(_ < cp)
-      .foreach { old =>
-        fs.delete(new Path(s"$root/compact-$old"), true)
-        fs.delete(new Path(s"${checkpointsDir(root)}/$old"), false)
-        ()
-      }
+    markerIds(fs, checkpointsDir(root)).filter(_ < cp).foreach { old =>
+      fs.delete(new Path(s"$root/compact-$old"), true)
+      fs.delete(new Path(s"${checkpointsDir(root)}/$old"), false)
+      ()
+    }
   }
 
   /** Drop a FULL-STATE relation (one rewritten per epoch, each copy
@@ -303,41 +302,133 @@ object StreamingState {
     }
   }
 
-  /** Refuse a root that holds pre-epoch-layout data: non-hidden files
-    * or dirs but no commits log. Reading such an index through the
-    * committed-deltas resolver would silently see an EMPTY index (the
-    * same silent-miss class the dedup format-version marker guards),
-    * so it is a hard error at open time.
+  /** Compact the delta log of `root` (opened as a reader): checkpoint
+    * `rels` ([[checkpointDeltas]], folding each with `fold`), then, if
+    * `vacuumDeltas`, delete the delta copies the checkpoint supersedes
+    * ([[vacuum]]). Epoch markers and per-batch reports stay, so replay
+    * detection and report reads keep working for the whole history.
     */
-  def guardEpochLayout(spark: SparkSession, root: String, what: String): Unit = {
-    val fs = fsFor(spark, root)
-    val p = new Path(root)
-    if (!fs.exists(p)) return
-    if (fs.exists(new Path(commitsDir(root)))) return
-    val foreign = fs.listStatus(p).exists { st =>
-      val n = st.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
-    if (foreign)
-      throw new IllegalStateException(
-        s"$what at $root predates the epoch-committed layout (no commits/ " +
-        "log); reading it as committed deltas would silently treat it as " +
-        "empty. Rebuild the index (delete the directory and re-stream).")
+  def compactDeltas(spark: SparkSession, root: String, format: Format,
+      rels: Map[String, StructType], vacuumDeltas: Boolean = true,
+      fold: (String, DataFrame) => DataFrame = (_, df) => df): Unit = {
+    open(spark, root, format)
+    checkpointDeltas(spark, root, rels, fold)
+    if (vacuumDeltas) vacuum(spark, root, rels.keys.toSeq)
   }
 
+  private val StampFile = "_graft_format_version"
+
+  /** What a state root must hold to be opened (see [[open]]). A STAMPED
+    * root (`stamp` set) records its format version in the hidden file
+    * `_graft_format_version`: its writer requires `stamp` itself, its
+    * readers accept `stamp` or any of `reads`, and `hint` ends the
+    * writer's mismatch message. Unstamped roots are recognised by their
+    * `commits/` log alone.
+    */
+  final case class Format(what: String, stamp: Option[String] = None,
+      reads: Set[String] = Set.empty, hint: String = "")
+
+  /** The one open-time check of a state root. It refuses
+    *  - a stamp other than this build's (`write`: exactly `stamp`;
+    *    readers: `stamp` or `reads`) — mixed signature schemes or
+    *    layouts silently miss or mis-resolve rows instead of failing;
+    *  - content that predates the root's format: non-hidden entries but
+    *    no `commits/` log, or (stamped roots) no stamp. Read as committed
+    *    deltas such a root would silently look EMPTY.
+    * The writer (`write`) stamps a stamped root that holds nothing yet.
+    * Readers create nothing: a mistyped path or read-only storage is
+    * left as it is.
+    */
+  def open(spark: SparkSession, root: String, format: Format,
+      write: Boolean = false): Unit = {
+    val fs = fsFor(spark, root)
+    val dir = new Path(root)
+    val stampFile = new Path(dir, StampFile)
+    val stamped = format.stamp.isDefined && fs.exists(stampFile)
+    if (stamped) {
+      val in = fs.open(stampFile)
+      val v = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+        finally in.close()
+      val wanted = if (write) format.stamp.toSet else format.reads ++ format.stamp
+      if (!wanted(v))
+        throw new IllegalStateException(
+          s"${format.what} at $root has format version $v but this build " +
+          (if (write) s"writes version ${format.stamp.get}${format.hint}"
+           else s"reads version ${wanted.toSeq.sorted.mkString(" or ")}") +
+          ". Rebuild it (delete the directory and re-run the drops).")
+    }
+    val missing = Seq(StampFile -> (format.stamp.isDefined && !stamped),
+      "commits/ log" -> !fs.exists(new Path(commitsDir(root)))).collect { case (m, true) => m }
+    if (missing.nonEmpty && fs.exists(dir) && fs.listStatus(dir).exists { st =>
+        val n = st.getPath.getName
+        !n.startsWith("_") && !n.startsWith(".")
+      })
+      throw new IllegalStateException(
+        s"${format.what} at $root predates its format (no ${missing.mkString(", no ")}); " +
+        "read as committed epochs it would silently look empty. Rebuild it " +
+        "(delete the directory and re-run the drops).")
+    if (write && format.stamp.isDefined && !stamped) {
+      fs.mkdirs(dir)
+      val out = fs.create(stampFile, true)
+      try out.write(format.stamp.get.getBytes("UTF-8")) finally out.close()
+    }
+  }
+
+  /** Open `root` as a reader and read relation `rel` across its
+    * committed epochs ([[readCommittedDeltas]]).
+    */
+  def read(spark: SparkSession, root: String, format: Format, rel: String,
+      schema: StructType): DataFrame = {
+    open(spark, root, format)
+    readCommittedDeltas(spark, root, rel, schema)
+  }
+
+  /** One epoch of a drop index — the fold path (see the object doc):
+    *  1. open `root` as its writer ([[open]]);
+    *  2. if `batchId` is already committed (a replay), compute nothing;
+    *  3. otherwise build the epoch's relations (`deltas`), commit them
+    *     as one atomic epoch ([[commitAppend]]), prune the `fullState`
+    *     relations among them to the two newest epochs ([[pruneRel]])
+    *     and release any the caller persisted;
+    *  4. return the `reports` relations, read lazily from the committed
+    *     epoch — the same rows on a first run and on a replay.
+    */
+  def fold(spark: SparkSession, root: String, format: Format, batchId: Long,
+      reports: Map[String, StructType], fullState: Seq[String] = Nil)
+      (deltas: => Map[String, DataFrame]): Map[String, DataFrame] = {
+    open(spark, root, format, write = true)
+    if (!isCommitted(spark, root, batchId)) {
+      val rels = deltas
+      commitAppend(spark, root, batchId, rels)
+      fullState.foreach(pruneRel(spark, root, _))
+      rels.values.foreach(_.unpersist())
+    }
+    reports.map { case (rel, schema) =>
+      rel -> spark.read.schema(schema).parquet(epochRel(root, batchId, rel))
+    }
+  }
+
+  /** Write `df` once at `path` and publish it with a marker, outside any
+    * epoch log (the ANN hyperplane model). Spark creates `path` when the
+    * write job starts, so only the marker — created after every data
+    * file committed — tells a complete copy from a killed write.
+    */
+  def writePublished(spark: SparkSession, path: String, df: DataFrame): Unit = {
+    df.write.mode("overwrite").parquet(path)
+    publish(fsFor(spark, path), new Path(path, PublishedMarker))
+  }
+
+  /** Was the relation at `path` published by [[writePublished]]? */
+  def isPublished(spark: SparkSession, path: String): Boolean =
+    exists(spark, s"$path/$PublishedMarker")
+
+  private val PublishedMarker = "_graft_published"
+
   /** Keep the two newest committed epochs; drop older dirs + markers. */
-  private def prune(fs: FileSystem, root: String): Unit = {
-    val commits = new Path(commitsDir(root))
-    if (!fs.exists(commits)) return
-    val ids = fs.listStatus(commits)
-      .flatMap(st => scala.util.Try(st.getPath.getName.toLong).toOption)
-      .sorted
-    if (ids.length <= 2) return
-    val drop = ids.dropRight(2)
-    drop.foreach { id =>
+  private def prune(fs: FileSystem, root: String): Unit =
+    markerIds(fs, commitsDir(root)).dropRight(2).foreach { id =>
       fs.delete(new Path(s"$root/epoch-$id"), true)
       fs.delete(new Path(s"${commitsDir(root)}/$id"), false)
       ()
     }
-  }
 }

@@ -31,26 +31,6 @@ import graft.operators.{TextOps, TrainingOps}
   */
 object CcCheck {
 
-  /** Plain union-find with path compression — no rank heuristic, no
-    * label-propagation structure shared with Scale.connectedComponents.
-    */
-  private final class Dsu {
-    private val parent = scala.collection.mutable.LongMap.empty[Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    def union(a: Long, b: Long): Unit = {
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      ()
-    }
-    def nodes: Iterator[Long] = parent.keysIterator
-  }
-
   /** Returns mismatch descriptions; empty = both gates verified. */
   def check(spark: SparkSession, dir: String, maxErrs: Int = 20): Seq[String] = {
     val errs = scala.collection.mutable.ArrayBuffer.empty[String]

@@ -57,23 +57,6 @@ import graft.streaming.{IncrementalAnn, IncrementalCluster, IncrementalDedup,
   */
 object DropCheck {
 
-  private final class Dsu {
-    private val parent = scala.collection.mutable.LongMap.empty[Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    def union(a: Long, b: Long): Unit = {
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      ()
-    }
-    def nodes: Iterator[Long] = parent.keysIterator
-  }
-
   /** Run `body` against a fresh temp index root; ALWAYS drop the root
     * and release the memoized batch relations afterwards (r13, closing
     * the r12 ADVICE finding: a throw mid-check previously leaked the
@@ -110,12 +93,8 @@ object DropCheck {
     for (i <- 0 until drops) {
       val batch = docs.filter(pmod(col("doc_id"), lit(drops)) === i)
       val pairs = IncrementalDedup.processBatch(batch, s"$root/dedup", i.toLong)
-      val scores = pairs
-        .select(col("doc_a").as("doc_id"), col("score_a").as("score"))
-        .unionByName(pairs
-          .select(col("doc_b").as("doc_id"), col("score_b").as("score")))
-        .distinct()
-      IncrementalCluster.update(spark, s"$root/clusters", i.toLong, pairs, scores)
+      IncrementalCluster.update(spark, s"$root/clusters", i.toLong, pairs,
+        IncrementalCluster.endpointScores(pairs))
       reported ++= pairs.select(col("doc_a"), col("doc_b"), col("jaccard"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       ()

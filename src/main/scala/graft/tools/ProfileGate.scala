@@ -14,9 +14,19 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * chains), while one dominated by plan construction needs a smaller
   * expression tree / fewer analysis passes.
   *
+  * `build_jobs` counts the jobs started while BUILDING the DataFrame,
+  * before any action: above the one parquet-listing job of a first scan
+  * over a not-yet-cached table, they mark a builder that trains or
+  * collects at plan-construction time — an operator that belongs in
+  * `GraftSql.EagerArtifactViews` (t40 = 31, t51/t59 = 6).
+  *
   * Usage: runMain graft.tools.ProfileGate <sfDir> [passes] [name ...]
   */
 object ProfileGate {
+
+  /** Local property tagging the jobs a DataFrame builder starts. */
+  private val Phase = "graft.profile.phase"
+
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val passes = if (args.length > 1) args(1).toInt else 2
@@ -24,12 +34,17 @@ object ProfileGate {
     val spark = graft.app.Cli.session("graft-profile-gate")
 
     val jobs = new AtomicInteger
+    val buildJobs = new AtomicInteger
     val stages = new AtomicInteger
     val tasks = new AtomicInteger
     val taskMs = new AtomicLong
     val verbose = sys.env.get("PROFILE_STAGES").contains("1")
     spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        if (Option(j.properties).exists(_.getProperty(Phase) == "build"))
+          buildJobs.incrementAndGet()
+      }
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
         stages.incrementAndGet()
         if (verbose) {
@@ -47,13 +62,15 @@ object ProfileGate {
 
     val all = graft.SparkEntry.queries
     val picked = if (names.nonEmpty) names else all.keys.toSeq.sorted
-    println(f"${"query"}%-28s pass ${"plan_s"}%7s ${"exec_s"}%7s ${"jobs"}%5s ${"stg"}%5s ${"task"}%6s ${"taskSec"}%8s")
+    println(f"${"query"}%-28s pass ${"plan_s"}%7s ${"exec_s"}%7s ${"build_jobs"}%10s " +
+      f"${"jobs"}%5s ${"stg"}%5s ${"task"}%6s ${"taskSec"}%8s")
     picked.foreach { name =>
       all.get(name).foreach { fn =>
         (1 to passes).foreach { p =>
-          jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0)
+          jobs.set(0); buildJobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0)
           val t0 = System.nanoTime()
-          val df = fn(spark, dir)
+          spark.sparkContext.setLocalProperty(Phase, "build")
+          val df = try fn(spark, dir) finally spark.sparkContext.setLocalProperty(Phase, null)
           df.queryExecution.executedPlan // force analysis + physical planning
           val t1 = System.nanoTime()
           // full materialization: `.count()` lets Catalyst prune the
@@ -65,7 +82,7 @@ object ProfileGate {
           // listener events are async; give the bus a moment to drain
           Thread.sleep(150)
           println(f"$name%-28s $p%4d ${(t1 - t0) / 1e9}%7.3f ${(t2 - t1) / 1e9}%7.3f " +
-            f"${jobs.get()}%5d ${stages.get()}%5d ${tasks.get()}%6d ${taskMs.get() / 1e3}%8.2f")
+            f"${buildJobs.get()}%10d ${jobs.get()}%5d ${stages.get()}%5d ${tasks.get()}%6d ${taskMs.get() / 1e3}%8.2f")
         }
       }
     }

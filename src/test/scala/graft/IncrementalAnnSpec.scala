@@ -73,6 +73,31 @@ class IncrementalAnnSpec extends AnyFunSuite {
     replay.unpersist()
   }
 
+  test("a planes write killed before its marker is redone on replay, not signed against") {
+    spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
+    val rnd = new scala.util.Random(40)
+    val drops = Seq(0L until 40L, 40L until 50L)
+      .map(_.map(i => (i, Seq.fill(6)(rnd.nextGaussian()))).toDF("vec_id", "v"))
+    val base = java.nio.file.Files.createTempDirectory("ann_planes")
+    /** Both drops through `idx`: (planes, per-drop neighbor reports). */
+    def run(idx: String): (Seq[String], Seq[Seq[String]]) = {
+      val reports = drops.zipWithIndex.map { case (d, b) =>
+        IncrementalAnn.processBatch(d, idx, b.toLong).collect().map(_.toString).toSeq.sorted
+      }
+      (spark.read.schema("plane_id int, pv array<double>").parquet(s"$idx/planes")
+        .collect().map(_.toString).toSeq.sorted, reports)
+    }
+    val clean = run(base.resolve("clean").toString)
+    assert(clean._1.size == 16 && clean._2.forall(_.nonEmpty))
+    // the first drop was killed while Spark wrote the planes: the job
+    // had created planes/ and its staging dir, but committed no file
+    val torn = base.resolve("torn").toString
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(torn, "planes", "_temporary", "0"))
+    assert(run(torn) == clean)
+  }
+
   test("new-drop flow: raw text through embed into the incremental ANN index") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}

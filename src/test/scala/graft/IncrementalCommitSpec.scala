@@ -294,7 +294,8 @@ class IncrementalCommitSpec extends AnyFunSuite {
         IncrementalSpanIndex.processBatch(
           part.toDF("doc_id", "text"), idx, b.toLong)
       }
-      val folded = IncrementalSpanIndex.currentCaps(spark, idx)
+      val folded = StreamingState.readCurrent(spark, idx, "caps",
+          IncrementalSpanIndex.capsSchema)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       val scratch = IncrementalSpanIndex.windowRows(docs.toDF("doc_id", "text"))
         .groupBy("h64", "doc_id").count()
@@ -321,7 +322,8 @@ class IncrementalCommitSpec extends AnyFunSuite {
     drops.zipWithIndex.foreach { case (ids, b) =>
       IncrementalAnn.processBatch(vecs(ids), idx, b.toLong, cfg)
     }
-    val folded = IncrementalAnn.currentOcc(spark, idx)
+    val folded = StreamingState.readCurrent(spark, s"$idx/state", "occ",
+        IncrementalAnn.occSchema)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
     val scratch = IncrementalAnn.readIndex(spark, idx)
       .select(col("vec_id"), col("bucket"),

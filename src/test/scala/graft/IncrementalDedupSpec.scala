@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
-import graft.streaming.IncrementalDedup
+import graft.streaming.{IncrementalAnn, IncrementalCluster, IncrementalDedup,
+  IncrementalQuality, IncrementalSpanIndex}
 
 /** Updateable near-dup signature index (VERDICT r4 #6): batch 2 must
   * find its near-dups against batch 1 by probing the PERSISTED index —
@@ -110,18 +111,38 @@ class IncrementalDedupSpec extends AnyFunSuite {
     }
     assert(e1.getMessage.contains("version 1"))
 
-    // a pre-versioning index (data files, no marker) must refuse too
-    val idx3 = base.resolve("unversioned").toString
-    Seq((9L, textC)).toDF("doc_id", "text").write.parquet(idx3)
-    java.nio.file.Files.list(java.nio.file.Paths.get(idx3)).forEach { f =>
-      val n = f.getFileName.toString
-      if (n.startsWith("_") && n != "part") java.nio.file.Files.deleteIfExists(f)
-      ()
+    // content that predates the format (data files, no commits/ log
+    // and no stamp) must be refused by every drop index's reader AND
+    // writer — read as committed epochs it would look empty
+    val docs = Seq((2L, textB)).toDF("doc_id", "text")
+    val pairs = Seq((1L, 2L)).toDF("doc_a", "doc_b")
+    val scores = Seq((1L, 0.5), (2L, 0.5)).toDF("doc_id", "score")
+    val vecs = Seq((2L, Seq(1.0, 0.0))).toDF("vec_id", "v")
+    // (name, legacy content dir under the index path, reader, writer)
+    val roots: Seq[(String, String, String => Any, String => Any)] = Seq(
+      ("dedup", "", IncrementalDedup.readIndex(spark, _).count(),
+        IncrementalDedup.processBatch(docs, _, 0L).count()),
+      ("clusters", "", IncrementalCluster.readMembers(spark, _).count(),
+        IncrementalCluster.update(spark, _, 0L, pairs, scores).labelChanges.count()),
+      ("spans", "", IncrementalSpanIndex.readIndex(spark, _).count(),
+        IncrementalSpanIndex.processBatch(docs, _, 0L).count()),
+      ("ann", "/state", IncrementalAnn.readIndex(spark, _).count(),
+        IncrementalAnn.processBatch(vecs, _, 0L).count()),
+      ("quality", "", IncrementalQuality.readTrend(spark, _).count(),
+        IncrementalQuality.processBatch(docs, _, 0L).count()))
+    roots.foreach { case (name, sub, reader, writer) =>
+      val idx = base.resolve(s"unversioned-$name").toString
+      Seq((9L, textC)).toDF("doc_id", "text").write.parquet(idx + sub)
+      java.nio.file.Files.list(java.nio.file.Paths.get(idx + sub)).forEach { f =>
+        val n = f.getFileName.toString
+        if (n.startsWith("_") && n != "part") java.nio.file.Files.deleteIfExists(f)
+        ()
+      }
+      Seq("reader" -> reader, "writer" -> writer).foreach { case (role, open) =>
+        val e = intercept[IllegalStateException](open(idx))
+        assert(e.getMessage.contains("predates"), s"$name $role: ${e.getMessage}")
+      }
     }
-    val e2 = intercept[IllegalStateException] {
-      IncrementalDedup.readIndex(spark, idx3)
-    }
-    assert(e2.getMessage.contains("predates"))
   }
 
   test("normalize-nfc signing pairs composed/decomposed duplicates; mode is pinned to the index") {
