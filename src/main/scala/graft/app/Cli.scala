@@ -326,6 +326,12 @@ object GraftPipeline {
   * `Trigger.AvailableNow` drains the pending files then exits, so the
   * command is cron-able per monthly drop while keeping exactly-once
   * file-source semantics; a re-run with no new files appends nothing.
+  *
+  * The file-source checkpoint records the ABSOLUTE paths of the input
+  * files it has seen, so an index only continues at the path it was
+  * built at: a moved or copied index fails its next run with Spark's
+  * `Wrong basePath`. Continue an index at its original path, or
+  * rebuild it from the drop files.
   */
 object GraftDrop {
 

@@ -41,7 +41,7 @@ object BpeTrainer {
     * aggregation in training.
     */
   def wordCounts(docs: DataFrame): DataFrame =
-    docs.select(explode(expr("filter(split(text, ' '), w -> w != '')")).as("w"))
+    docs.select(explode(TextOps.wordsCol).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("n"))
 
   /** Split every word into single-character symbols. */
@@ -298,8 +298,7 @@ object BpeTrainer {
     */
   def tokenStats(docs: DataFrame, merges: Seq[Merge]): DataFrame = {
     val symed = docs
-      .select(col("doc_id"), explode(
-        expr("filter(split(text, ' '), w -> w != '')")).as("w"))
+      .select(col("doc_id"), explode(TextOps.wordsCol).as("w"))
       .withColumn("syms",
         expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))"))
     val merged = merges.foldLeft(symed)((df, m) => applyMerge(df, m.left, m.right))
@@ -403,8 +402,7 @@ object BpeTrainer {
     val encLen = udf((w: String) =>
       if (w == null) 0L else encodeWord(w, bc.value).length.toLong)
     val docWords = materialize(
-      docs.select(col("doc_id"), explode(
-          expr("filter(split(text, ' '), w -> w != '')")).as("w"))
+      docs.select(col("doc_id"), explode(TextOps.wordsCol).as("w"))
         .groupBy(col("doc_id"), col("w"))
         .agg(count(lit(1)).as("cnt")))
     // the encoded vocabulary IS the loaded-tokenizer artifact — its

@@ -138,7 +138,7 @@ object CurationOps {
     SessionMemo.persist("curation:occ", s, dir) {
       Tables.documents(s, dir)
         .select(col("doc_id"), col("source"),
-          explode(expr("filter(split(text, ' '), w -> w != '')")).as("w"))
+          explode(TextOps.wordsCol).as("w"))
     }
 
   /** (w, tf) corpus term frequencies — vocabulary-sized, memoized per
@@ -267,8 +267,7 @@ object CurationOps {
   private def docFreq(s: SparkSession, dir: String): DataFrame =
     SessionMemo.persist("curation:docfreq", s, dir) {
       Tables.documents(s, dir)
-        .select(col("doc_id"), explode(expr(
-          "array_distinct(filter(split(text, ' '), w -> w != ''))")).as("w"))
+        .select(col("doc_id"), explode(array_distinct(TextOps.wordsCol)).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("df"))
         .withColumn("idfw", expr("1000000 div df"))
     }
@@ -380,7 +379,7 @@ object CurationOps {
     // single-task at small SF) scan stage. Σ wc over a word's pairs ==
     // the direct per-occurrence count, which the unchanged oracle pins.
     val wordCounts = Tables.documents(s, dir)
-      .select(explode(expr("filter(split(text, ' '), w -> w != '')")).as("w"))
+      .select(explode(TextOps.wordsCol).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("wc"))
     val counts = wordCounts
       .filter(length(col("w")) >= 2)
@@ -445,7 +444,7 @@ object CurationOps {
           Tables.documents(s, dir)
             .withColumn("h", md5(col("text")))
             .withColumn("keep", col("doc_id") === min(col("doc_id")).over(w))
-            .withColumn("words", expr("filter(split(text, ' '), w -> w != '')")))
+            .withColumn("words", TextOps.wordsCol))
         .filter(col("keep") && col("doc_id") >= 5 &&
           col("score") >= TextOps.QualityFloor)
         .join(contam, Seq("doc_id"), "left_anti")
@@ -712,7 +711,7 @@ object CurationOps {
     SessionMemo.persist("curation:dsir-buckets", s, dir) {
       Tables.documents(s, dir)
         .select(col("doc_id"), col("lang"),
-          explode(expr("filter(split(text, ' '), w -> w != '')")).as("w"))
+          explode(TextOps.wordsCol).as("w"))
         .withColumn("b", conv(substring(md5(col("w")), 1, 2), 16, 10).cast("int"))
         .groupBy(col("doc_id"), col("lang"), col("b"))
         .agg(count(lit(1)).as("cnt"))
@@ -867,7 +866,7 @@ object CurationOps {
     SessionMemo.persist("curation:bigrams", s, dir) {
       Tables.documents(s, dir)
         .select(col("doc_id"),
-          expr("""transform(filter(split(text, ' '), w -> w != ''),
+          expr(s"""transform(${TextOps.wordsExpr},
                    w -> cast(conv(substring(md5(w), 1, 2), 16, 10) as int))""").as("bs"))
         .filter(size(col("bs")) >= 2)
         .select(col("doc_id"),

@@ -25,9 +25,12 @@ import graft.Tables
   */
 object TextOps {
 
+  /** Non-empty word array of the document text, as Spark SQL — for
+    * sites where it sits inside a larger SQL expression string. */
+  private[graft] val wordsExpr: String = "filter(split(text, ' '), w -> w != '')"
+
   /** Non-empty word array of the document text. */
-  private[graft] val wordsCol: Column =
-    expr("filter(split(text, ' '), w -> w != '')")
+  private[graft] val wordsCol: Column = expr(wordsExpr)
   private val wordsSql: String =
     "LIST_FILTER(STRING_SPLIT(text, ' '), w -> w <> '')"
 

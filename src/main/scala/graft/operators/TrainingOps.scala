@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.streaming.IncrementalSpanIndex
 
 /** Training-data curation operators beyond dedup/quality: deterministic
   * splitting, weighted source mixing, benchmark decontamination and
@@ -117,7 +118,7 @@ object TrainingOps {
   def qTemperatureMix(s: SparkSession, dir: String): DataFrame = {
     val perSource = Tables.documents(s, dir)
       .select(col("source"),
-        expr("size(filter(split(text, ' '), w -> w != ''))").cast("long").as("toks"))
+        size(TextOps.wordsCol).cast("long").as("toks"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("toks")).as("n_tokens"))
       .withColumn("w_micro",
@@ -187,7 +188,7 @@ object TrainingOps {
   def qUnimaxMix(s: SparkSession, dir: String): DataFrame =
     unimaxAlloc(Tables.documents(s, dir)
       .select(col("source"),
-        expr("size(filter(split(text, ' '), w -> w != ''))").cast("long").as("toks"))
+        size(TextOps.wordsCol).cast("long").as("toks"))
       .groupBy(col("source"))
       .agg(sum(col("toks")).as("n_tokens")))
 
@@ -437,9 +438,8 @@ object TrainingOps {
     */
   def qRepetitionFilter(s: SparkSession, dir: String): DataFrame = {
     graft.functions.TopBigramCount.register(s)
-    val words = "filter(split(text, ' '), w -> w != '')"
     Tables.documents(s, dir)
-      .withColumn("words", expr(words))
+      .withColumn("words", TextOps.wordsCol)
       .filter(size(col("words")) >= 2) // mirrors the explode dropping empty docs
       .withColumn("top_bigram_count", expr("top_bigram_count(words)"))
       .withColumn("n_bigrams", (size(col("words")) - 1).cast("long"))
@@ -479,7 +479,7 @@ object TrainingOps {
 
   def qSeqPack(s: SparkSession, dir: String): DataFrame = {
     val toks = Tables.documents(s, dir)
-      .withColumn("words", expr("filter(split(text, ' '), w -> w != '')"))
+      .withColumn("words", TextOps.wordsCol)
       .withColumn("tok",
         expr("aggregate(words, 0L, (acc, w) -> acc + ((length(w) + 3) div 4))"))
       .select(col("doc_id"), col("tok"))
@@ -520,7 +520,7 @@ object TrainingOps {
         _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)): DataFrame = {
     val toks = docs
       .withColumn("n_tokens",
-        size(expr("filter(split(text, ' '), w -> w != '')")).cast("long"))
+        size(TextOps.wordsCol).cast("long"))
       .withColumn("h", md5(col("doc_id").cast("string")))
     Scale.distributedKeyedPrefixSum(toks, "source", Seq("h", "doc_id"),
         "n_tokens", "cum_tokens", materialize = materialize)
@@ -602,7 +602,7 @@ object TrainingOps {
   private def chunkRelation(s: SparkSession, dir: String): DataFrame =
     SessionMemo.persist("training:chunks", s, dir) {
       Tables.documents(s, dir)
-        .withColumn("words", expr("filter(split(text, ' '), w -> w != '')"))
+        .withColumn("words", TextOps.wordsCol)
         .withColumn("n", size(col("words")))
         .filter(col("n") > 0)
         .withColumn("c", explode(expr(
@@ -660,7 +660,7 @@ object TrainingOps {
     graft.functions.TopKAgg.register(s)
     val scored = SessionMemo.persist("training:chunk-scores", s, dir) {
       val occ = Tables.documents(s, dir)
-        .withColumn("words", expr("filter(split(text, ' '), w -> w != '')"))
+        .withColumn("words", TextOps.wordsCol)
         .withColumn("n", size(col("words")))
         .filter(col("n") > 0)
         .withColumn("c", explode(expr(
@@ -734,6 +734,51 @@ object TrainingOps {
     */
   private[graft] val SpanL = 20
 
+  /** The span family's one window relation: every length-[[SpanL]]
+    * token window of each (doc_id, text) row at stride 1, as
+    * (doc_id, pos, h64) with pos the 1-based start token and h64 the
+    * window's 60-bit md5 fingerprint (its first 15 hex digits as a
+    * bigint). The hash sits inside the transform lambda, so each
+    * caller's plan stays one in-row generator off its scan. The batch
+    * gates (t65, t68, t76, t82 via [[spanPosRelation]]) and the drop
+    * span index (IncrementalSpanIndex.windowRows, which stores these
+    * rows) read the same windows under the same key.
+    *
+    * Collision contract: the 60-bit key shuffles and stores ~4× fewer
+    * bytes than the 32-character hex digest and compares as an
+    * integer. Two distinct windows share a key with probability
+    * ≈ n²/2^61 (~1e-3 at a billion windows). A collision can count one
+    * window as repeated (t65), flag one train document (t68), add one
+    * shared window to a pair (t76), or seed one false window match that
+    * span extension caps at window length (t82 and the drop index).
+    * t65's oracle applies the same truncation; the full-md5 oracles of
+    * t68, t76 and t82 match row for row on every tested corpus.
+    */
+  private[graft] def spanWindows(docs: DataFrame): DataFrame =
+    docs
+      .withColumn("words", TextOps.wordsCol)
+      .withColumn("n", size(col("words")))
+      .filter(col("n") >= SpanL)
+      .select(col("doc_id"), posexplode(expr(
+        s"""transform(sequence(1, n - $SpanL + 1),
+              i -> cast(conv(substring(md5(array_join(slice(words, i, $SpanL), ' ')),
+                1, 15), 16, 10) as bigint))"""))
+        .as(Seq("p0", "h64")))
+      .select(col("doc_id"), (col("p0") + 1).cast("long").as("pos"), col("h64"))
+
+  /** The corpus's [[spanWindows]] relation, memoized per (session,
+    * dir): the generator fan-out runs once however many span gates
+    * read it (t65, t68, t76, t82 and, through t82, t84/t85).
+    */
+  private def spanPosRelation(s: SparkSession, dir: String): DataFrame =
+    SessionMemo.persist("training:spans", s, dir) {
+      IncrementalSpanIndex.windowRows(Tables.documents(s, dir))
+    }
+
+  /** Position-free view for the consumers that only count hashes. */
+  private def spanRelation(s: SparkSession, dir: String): DataFrame =
+    spanPosRelation(s, dir).select(col("doc_id"), col("h64"))
+
   /** Alignment-free repeated-span detection (t65) — the windowed-hash
     * form of exact-substring dedup (the "ExactSubstr" family): hash
     * EVERY length-[[SpanL]] token window at stride 1, count window
@@ -745,80 +790,19 @@ object TrainingOps {
     * starting mid-chunk is invisible to t63 and caught here.
     *
     * Scale shape: window hashes are an in-row generator off the one
-    * corpus scan (the span relation is materialized once and read by
-    * both the count and probe sides); the only corpus-sized shuffle is
-    * the hash groupBy, which partial-aggregates to distinct hashes per
-    * task first. That single shuffle is exactly what suffix-array
-    * construction avoids — the trade this formulation makes to stay a
-    * two-stage Spark plan at any corpus size.
-    */
-  /** The memoized (doc_id, pos, h) span-hash relation — every length-
-    * [[SpanL]] token window at stride 1, hashed in-row off one corpus
-    * scan, keyed by its 1-based start token. Read by t65 (corpus-wide
-    * repeat counting), t68 (train-vs-eval collision screening) and t82
-    * (maximal-span extension, which needs the positions): the
-    * generator fan-out runs once per (session, dir) however many
-    * screens consume it.
-    */
-  private def spanPosRelation(s: SparkSession, dir: String): DataFrame =
-    SessionMemo.persist("training:spans", s, dir) {
-      spanWindows(Tables.documents(s, dir), "h", windowMd5)
-    }
-
-  /** The span-window kernel: every length-[[SpanL]] token window of each
-    * (doc_id, text) row at stride 1, as (doc_id, pos, `hashCol`) with
-    * pos the 1-based start token and `hash` rendering the window-string
-    * expression into its hash. The batch span family hashes with
-    * [[windowMd5]] ([[spanPosRelation]]); the drop fold's window index
-    * (IncrementalSpanIndex) with [[windowH64]]. The hash sits inside
-    * the transform lambda, so each caller's plan stays one in-row
-    * generator off its scan.
-    */
-  private[graft] def spanWindows(docs: DataFrame, hashCol: String,
-      hash: String => String): DataFrame =
-    docs
-      .withColumn("words", expr("filter(split(text, ' '), w -> w != '')"))
-      .withColumn("n", size(col("words")))
-      .filter(col("n") >= SpanL)
-      .select(col("doc_id"), posexplode(expr(
-        s"""transform(sequence(1, n - $SpanL + 1),
-              i -> ${hash(s"array_join(slice(words, i, $SpanL), ' ')")})"""))
-        .as(Seq("p0", hashCol)))
-      .select(col("doc_id"), (col("p0") + 1).cast("long").as("pos"), col(hashCol))
-
-  /** Hex md5 of a window (t65/t68/t82's key). */
-  private[graft] val windowMd5: String => String = w => s"md5($w)"
-
-  /** The 60-bit fingerprint of a hex digest: its first 15 hex digits
-    * as a bigint (see [[qRepeatedSpans]] for the narrow-key contract). */
-  private def fingerprint60(hex: String): String =
-    s"cast(conv(substring($hex, 1, 15), 16, 10) as bigint)"
-
-  /** 60-bit md5 fingerprint of a window (the drop span index's key). */
-  private[graft] val windowH64: String => String = w => fingerprint60(windowMd5(w))
-
-  /** Position-free view for the consumers that only count hashes. */
-  private def spanRelation(s: SparkSession, dir: String): DataFrame =
-    spanPosRelation(s, dir).select(col("doc_id"), col("h"))
-
-  /** t65 works on a 60-bit window FINGERPRINT (md5's first 15 hex
-    * digits as a bigint), not the full 32-char hex string: the r10
+    * corpus scan; the only corpus-sized shuffle is the count over the
+    * h64 window, which reshuffles the span relation ONCE instead of
+    * group-then-join's twice. That single shuffle is exactly what
+    * suffix-array construction avoids — the trade this formulation
+    * makes to stay a two-stage Spark plan at any corpus size. The r10
     * sf10 profile flagged this gate superlinear (23.7× on 10× data)
-    * and the cost was the corpus-sized shuffle of 40-byte string keys
-    * — group + join shipped the hash column twice. The narrowed key
-    * cuts the shuffled bytes ~4× and makes the sort comparisons
-    * integer, and the count-over-window form reshuffles the span
-    * relation ONCE instead of group-then-join's twice. Contract: a
-    * 60-bit fingerprint collision (≈n²/2^61 — ~1e-3 at a billion
-    * windows) can overcount one window pair as repeated; the oracle
-    * applies the identical truncation, so the gate pins the exact
-    * same fingerprint semantics.
+    * while it shuffled 40-byte hex keys; the 60-bit key (collision
+    * contract at [[spanWindows]]; the oracle applies the identical
+    * truncation) fixed it.
     */
   def qRepeatedSpans(s: SparkSession, dir: String): DataFrame = {
-    val spans = spanPosRelation(s, dir).select(col("doc_id"),
-      expr(fingerprint60("h")).as("h64"))
     val w = Window.partitionBy(col("h64"))
-    spans.withColumn("c", count(lit(1)).over(w))
+    spanRelation(s, dir).withColumn("c", count(lit(1)).over(w))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_spans"),
         sum(when(col("c") > 1, 1L).otherwise(0L)).as("n_repeated"))
@@ -867,9 +851,9 @@ object TrainingOps {
     val tagged = spanRelation(s, dir)
       .withColumn("split", splitCol(col("doc_id")))
     val evalHashes = tagged.filter(col("split") === "eval")
-      .select(col("h")).distinct().withColumn("m", lit(1L))
+      .select(col("h64")).distinct().withColumn("m", lit(1L))
     tagged.filter(col("split") === "train")
-      .join(evalHashes, Seq("h"), "left")
+      .join(evalHashes, Seq("h64"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_spans"), count(col("m")).as("n_hit"))
       .withColumn("contaminated", col("n_hit") > lit(0L))
@@ -926,37 +910,6 @@ object TrainingOps {
     */
   private[graft] val MinSpan = 50
 
-  /** TRUE exact-substring dedup (t82) — the suffix-array-family
-    * statistic of Lee et al. 2022 ("Deduplicating Training Data Makes
-    * Language Models Better"), computed without a global suffix array:
-    * for every document pair, each MAXIMAL repeated token span of
-    * length ≥ [[MinSpan]] at ARBITRARY alignment, reported as one span
-    * with both start offsets. t63 (aligned chunks) and t65 (fixed
-    * 20-token windows) see such a quote only piecewise; this operator
-    * reports it as the single (start_a, start_b, span_len) fact a
-    * curation pass can act on (cut the span, keep one copy).
-    *
-    * Method: seed from the memoized stride-1 window-hash relation —
-    * two windows with equal hashes at positions (i, j) of docs (a, b)
-    * lie on diagonal d = i − j, and a repeated substring of length
-    * M ≥ [[SpanL]] is exactly a run of M − SpanL + 1 consecutive
-    * matched windows on one diagonal. Gaps-and-islands over
-    * (pair, diagonal) recovers the maximal runs: island id =
-    * pos − row_number() (consecutive positions share it), one
-    * group-by emits each maximal span once. Nothing here is
-    * corpus-quadratic: seeding is posting-list-bounded by
-    * [[SpanDfCap]], runs are window-function work partitioned by
-    * (doc_a, doc_b, diagonal) — bounded by matched-window volume,
-    * never all-pairs. At 100 TB this is the standard layout: the
-    * window index is the corpus-sized artifact (one shuffle), matches
-    * are near-dup-sized, and the span extension never touches raw
-    * text.
-    *
-    * Maximality is over the df-capped window space: a span whose
-    * interior windows are boilerplate-hot fragments at the cap
-    * boundary (documented contract; the oracle applies the same cap,
-    * so the gate pins the exact same semantics).
-    */
   /** The t82 span set as a memoized SNAPSHOT artifact — one build,
     * two readers (the t82 report and t84's cut plan), mirroring the
     * curated-corpus discipline: downstream consumers must act on the
@@ -964,23 +917,7 @@ object TrainingOps {
     */
   private def exactSpanRelation(s: SparkSession, dir: String): DataFrame =
     SessionMemo.persist("training:xsub", s, dir) {
-      val sp = spanPosRelation(s, dir)
-      // two-level aggregation: (h, doc) occurrence counts first (map-
-      // side combinable), then per-h document frequency AND the max
-      // within-doc occurrence — one extra values-sized reduce buys the
-      // per-pair quadratic guard
-      val cold = sp.groupBy(col("h"), col("doc_id"))
-        .agg(count(lit(1)).as("k"))
-        .groupBy(col("h"))
-        .agg(count(lit(1)).as("docf"), max(col("k")).as("maxk"))
-        .filter(col("docf") <= SpanDfCap && col("maxk") <= SpanOccCap)
-        .select(col("h"))
-      val spc = sp.join(cold, Seq("h"))
-      val m = spc.as("a").join(spc.as("b"),
-          col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-          col("a.pos").as("pa"), col("b.pos").as("pb"))
-      maximalSpans(m)
+      IncrementalSpanIndex.probeFromEmpty(spanPosRelation(s, dir)).spans
     }
 
   /** Maximal-span extension of matched windows (doc_a, doc_b, pa, pb)
@@ -1003,6 +940,40 @@ object TrainingOps {
         col("span_len"))
   }
 
+  /** TRUE exact-substring dedup (t82) — the suffix-array-family
+    * statistic of Lee et al. 2022 ("Deduplicating Training Data Makes
+    * Language Models Better"), computed without a global suffix array:
+    * for every document pair, each MAXIMAL repeated token span of
+    * length ≥ [[MinSpan]] at ARBITRARY alignment, reported as one span
+    * with both start offsets. t63 (aligned chunks) and t65 (fixed
+    * 20-token windows) see such a quote only piecewise; this operator
+    * reports it as the single (start_a, start_b, span_len) fact a
+    * curation pass can act on (cut the span, keep one copy).
+    *
+    * Method: t82 is the drop span index's probe step
+    * (IncrementalSpanIndex.probe) over empty state — the fold's first
+    * epoch, so batch/incremental parity holds by construction. It
+    * seeds from the memoized stride-1 window relation — two windows
+    * with equal hashes at positions (i, j) of docs (a, b)
+    * lie on diagonal d = i − j, and a repeated substring of length
+    * M ≥ [[SpanL]] is exactly a run of M − SpanL + 1 consecutive
+    * matched windows on one diagonal. Gaps-and-islands over
+    * (pair, diagonal) recovers the maximal runs: island id =
+    * pos − row_number() (consecutive positions share it), one
+    * group-by emits each maximal span once. Nothing here is
+    * corpus-quadratic: seeding is posting-list-bounded by
+    * [[SpanDfCap]], runs are window-function work partitioned by
+    * (doc_a, doc_b, diagonal) — bounded by matched-window volume,
+    * never all-pairs. At 100 TB this is the standard layout: the
+    * window index is the corpus-sized artifact (one shuffle), matches
+    * are near-dup-sized, and the span extension never touches raw
+    * text.
+    *
+    * Maximality is over the df-capped window space: a span whose
+    * interior windows are boilerplate-hot breaks into fragments at the
+    * cap boundary (documented contract; the oracle applies the same cap,
+    * so the gate pins the exact same semantics).
+    */
   def qExactSubstring(s: SparkSession, dir: String): DataFrame =
     exactSpanRelation(s, dir)
       .orderBy(col("doc_a"), col("doc_b"), col("start_a"), col("start_b"))
@@ -1064,7 +1035,7 @@ object TrainingOps {
   private def selfSpanRelation(s: SparkSession, dir: String): DataFrame =
     SessionMemo.persist("training:selfspans", s, dir) {
       Tables.documents(s, dir)
-        .withColumn("words", expr("filter(split(text, ' '), w -> w != '')"))
+        .withColumn("words", TextOps.wordsCol)
         .withColumn("n", size(col("words")))
         .filter(col("n") >= SelfSpanL)
         // r15: per-WORD xxhash64 once, then the trigram key is one
@@ -1179,7 +1150,7 @@ object TrainingOps {
       Tables.documents(s, dir)
         .filter(conv(substring(md5(col("doc_id").cast("string")), 1, 2), 16, 10)
           .cast("int") < SelfSampleBucket)
-        .withColumn("words", expr("filter(split(text, ' '), w -> w != '')"))
+        .withColumn("words", TextOps.wordsCol)
         .withColumn("n", size(col("words")))
         .filter(col("n") >= SelfSpanL)
         .withColumn("wh", expr("transform(words, w -> xxhash64(w, 7L))"))
@@ -1300,8 +1271,7 @@ object TrainingOps {
   def qSubstringCutPlan(s: SparkSession, dir: String): DataFrame = {
     val merged = mergedCutIntervals(s, dir)
     val toks = Tables.documents(s, dir)
-      .select(col("doc_id"), size(expr(
-        "filter(split(text, ' '), w -> w != '')")).cast("long").as("n_tokens"))
+      .select(col("doc_id"), size(TextOps.wordsCol).cast("long").as("n_tokens"))
     merged.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_cuts"),
         sum(col("ce") - col("cs") + 1).as("tokens_cut"))
@@ -1396,7 +1366,7 @@ object TrainingOps {
       .agg(collect_list(struct(col("cs"), col("ce"))).as("ivs"))
     Tables.documents(s, dir)
       .select(col("doc_id"),
-        expr("filter(split(text, ' '), w -> w != '')").as("words"))
+        TextOps.wordsCol.as("words"))
       .join(ivs, Seq("doc_id"))
       .select(col("doc_id"), size(col("words")).cast("long").as("n_before"),
         expr("""filter(words, (w, i) -> not exists(ivs, v -> i + 1 >= v.cs and i + 1 <= v.ce))""")
@@ -1412,7 +1382,7 @@ object TrainingOps {
       .agg(collect_list(struct(col("cs"), col("ce"))).as("ivs"))
     Tables.documents(s, dir)
       .select(col("doc_id"),
-        expr("filter(split(text, ' '), w -> w != '')").as("words"))
+        TextOps.wordsCol.as("words"))
       .join(ivs, Seq("doc_id"), "left")
       .select(col("doc_id"), size(col("words")).cast("long").as("n_before"),
         expr("""filter(words, (w, i) -> ivs is null or
@@ -1555,9 +1525,9 @@ object TrainingOps {
       splits: DataFrame): DataFrame = {
     val tagged = spanRelation(s, dir).join(splits, Seq("doc_id"))
     val evalHashes = tagged.filter(col("split") === "eval")
-      .select(col("h")).distinct()
+      .select(col("h64")).distinct()
     tagged.filter(col("split") === "train")
-      .join(evalHashes, Seq("h"), "left_semi")
+      .join(evalHashes, Seq("h64"), "left_semi")
       .select(col("doc_id")).distinct()
   }
 
@@ -1591,30 +1561,30 @@ object TrainingOps {
     val tagged = SessionMemo.persist("training:span-distinct", s, dir) {
       spanRelation(s, dir)
         .withColumn("split", splitCol(col("doc_id")))
-        .select(col("doc_id"), col("split"), col("h")).distinct()
+        .select(col("doc_id"), col("split"), col("h64")).distinct()
     }
     // the df-cap-screened relation is itself a corpus-snapshot artifact
     // (like the signature index): build the cap aggregate + join once
     // per (session, dir), not once per pass
     val screened = SessionMemo.persist("training:span-screened", s, dir) {
-      val capped = tagged.groupBy(col("h"))
+      val capped = tagged.groupBy(col("h64"))
         .agg(countDistinct(col("doc_id")).as("df"))
         .filter(col("df") <= AttribDfCap)
-        .select(col("h"))
+        .select(col("h64"))
       // df-cap counts ALL splits (the oracle's sw includes test), but
       // only eval/train rows are ever probed — test rows (~5% of docs)
       // would ride the cache and both join-side scans dead (r16)
-      tagged.join(capped, Seq("h")).filter(col("split") =!= lit("test"))
+      tagged.join(capped, Seq("h64")).filter(col("split") =!= lit("test"))
     }
     // (r15 note: a grouped collect-then-cross-in-row variant was
     // measured WORSE — the collect aggregates doc lists for every
     // hash, matching or not, while this join only moves hashes both
     // splits share. Left as the join.)
     val ev = screened.filter(col("split") === "eval")
-      .select(col("h"), col("doc_id").as("eval_doc"))
+      .select(col("h64"), col("doc_id").as("eval_doc"))
     val tr = screened.filter(col("split") === "train")
-      .select(col("h"), col("doc_id").as("train_doc"))
-    ev.join(tr, Seq("h"))
+      .select(col("h64"), col("doc_id").as("train_doc"))
+    ev.join(tr, Seq("h64"))
       .groupBy(col("eval_doc"), col("train_doc"))
       .agg(count(lit(1)).as("n_shared"))
       .orderBy(col("eval_doc"), col("train_doc"))

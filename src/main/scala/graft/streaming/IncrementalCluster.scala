@@ -152,7 +152,7 @@ object IncrementalCluster {
     */
   def docScores(docs: DataFrame): DataFrame =
     graft.operators.TextOps.withQualityScore(
-        docs.withColumn("words", expr("filter(split(text, ' '), w -> w != '')")))
+        docs.withColumn("words", graft.operators.TextOps.wordsCol))
       .select(col("doc_id"), col("score"))
 
   /** The (doc_id, score) endpoints of a pair report — the election

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 import org.apache.spark.sql.types._
@@ -14,13 +14,17 @@ import graft.operators.TrainingOps
   * DROPS (the t82 class: same ≥50-token passage, arbitrary alignment,
   * too little whole-document overlap for LSH) went unseen.
   *
-  * The persisted artifact is t82's seeding relation itself, built by
-  * the batch family's window kernel (TrainingOps.spanWindows): one row
-  * per stride-1 token window, (doc_id, pos, h64) with h64 the 60-bit
-  * md5-prefix fingerprint (the t65/t83 narrow-key discipline — 4×
-  * fewer shuffled/stored bytes than the hex string; a fingerprint
-  * collision can seed one false window match, which span extension
-  * then caps at window length, the documented contract).
+  * The persisted artifact is the span family's one window relation
+  * (TrainingOps.spanWindows, read by t65/t68/t76/t82 too): one row per
+  * stride-1 token window, (doc_id, pos, h64) with h64 the 60-bit
+  * md5-prefix fingerprint; its collision contract is stated there.
+  *
+  * Each batch is one call of the pure [[probe]] step — (committed
+  * windows, prior caps, fresh windows) => (folded caps, spans) —
+  * wrapped in its persistence ([[processBatch]]: the open, replay and
+  * commit of [[StreamingState.fold]], the state reads and the doc-id
+  * anti-join). Batch t82 is the same step over empty state
+  * ([[probeFromEmpty]]), so the two agree by construction on one epoch.
   *
   * Storage is the [[StreamingState]] epoch-committed delta layout
   * (r12, VERDICT #2): each batch writes ONE `epoch-<batch>/` dir
@@ -101,12 +105,10 @@ object IncrementalSpanIndex {
     StructField("start_b", LongType, nullable = true),
     StructField("span_len", LongType, nullable = true)))
 
-  /** Stride-1 window fingerprints for a (doc_id, text) batch — the
-    * batch span family's window kernel ([[TrainingOps.spanWindows]])
-    * hashing each window to its 60-bit fingerprint in-row.
+  /** The window rows the index stores for a (doc_id, text) batch —
+    * the span family's one window relation, [[TrainingOps.spanWindows]].
     */
-  def windowRows(docs: DataFrame): DataFrame =
-    TrainingOps.spanWindows(docs, "h64", TrainingOps.windowH64)
+  def windowRows(docs: DataFrame): DataFrame = TrainingOps.spanWindows(docs)
 
   /** Current committed window index (union of every published epoch's
     * delta; empty if never written).
@@ -120,21 +122,70 @@ object IncrementalSpanIndex {
   private def indexedDocs(spark: SparkSession, path: String): DataFrame =
     StreamingState.readCommittedDeltas(spark, path, "docs", docsSchema)
 
-  /** Fold a batch's window delta into the persisted cap state: the
-    * new full per-h64 (docf, maxk) aggregate. Exposed for the spec
-    * that pins (a) fold-vs-recompute equality across randomized drop
-    * splits and (b) that the plan never scans the windows relation —
-    * the r11 per-drop full-index re-aggregation is gone.
+  /** The per-h64 (docf, maxk) cap aggregate of a window relation, in
+    * two levels: (h64, doc) occurrence counts first (map-side
+    * combinable), then per-h64 document frequency and the max
+    * within-document occurrence — one extra values-sized reduce buys
+    * the per-pair quadratic guard of [[TrainingOps.SpanOccCap]].
     */
-  private[graft] def foldedCaps(spark: SparkSession, path: String,
-      fresh: DataFrame): DataFrame = {
-    val deltaAgg = fresh.groupBy(col("h64"), col("doc_id"))
+  private[graft] def capAggregate(windows: DataFrame): DataFrame =
+    windows.groupBy(col("h64"), col("doc_id"))
       .agg(count(lit(1)).as("k"))
       .groupBy(col("h64"))
       .agg(count(lit(1)).as("docf"), max(col("k")).as("maxk"))
-    StreamingState.readCurrent(spark, path, "caps", capsSchema).unionByName(deltaAgg)
+
+  /** A cap row whose window may seed spans: document frequency
+    * ≤ [[TrainingOps.SpanDfCap]] and within-document occurrences
+    * ≤ [[TrainingOps.SpanOccCap]], t82's seeding discipline.
+    */
+  private[graft] val seeds: Column =
+    col("docf") <= TrainingOps.SpanDfCap && col("maxk") <= TrainingOps.SpanOccCap
+
+  /** What one probe step yields: the folded cap state and the maximal
+    * spans (doc_a, doc_b, start_a, start_b, span_len).
+    */
+  private[graft] final case class Probe(caps: DataFrame, spans: DataFrame)
+
+  /** The fold's pure step (steps 2–3 above): probe `fresh` windows
+    * (documents new to the index) against the `committed` windows and
+    * themselves, under the caps folded from `priorCaps` and `fresh`.
+    * Only the fresh side of the h64 equi-join is cap-filtered: an index
+    * posting with a hot hash can never match it, so filtering the index
+    * too would add a second index-side join stage for rows the
+    * equi-join already discards.
+    */
+  private[graft] def probe(committed: DataFrame, priorCaps: DataFrame,
+      fresh: DataFrame): Probe = {
+    val caps = priorCaps.unionByName(capAggregate(fresh))
       .groupBy(col("h64"))
       .agg(sum(col("docf")).as("docf"), max(col("maxk")).as("maxk"))
+    val cold = caps.filter(seeds).select(col("h64"))
+    val freshC = fresh.join(cold, Seq("h64"))
+      .select(col("h64"), col("doc_id").as("f_doc"), col("pos").as("f_pos"))
+    val allC = committed.unionByName(fresh)
+      .select(col("h64"), col("doc_id").as("t_doc"), col("pos").as("t_pos"))
+    val m = freshC.join(allC, Seq("h64"))
+      .filter(col("f_doc") =!= col("t_doc"))
+      .select(
+        least(col("f_doc"), col("t_doc")).as("doc_a"),
+        greatest(col("f_doc"), col("t_doc")).as("doc_b"),
+        when(col("f_doc") < col("t_doc"), col("f_pos")).otherwise(col("t_pos")).as("pa"),
+        when(col("f_doc") < col("t_doc"), col("t_pos")).otherwise(col("f_pos")).as("pb"))
+      // a new-vs-new pair matches from both fresh sides — dedup the
+      // normalized rows before island construction
+      .distinct()
+    Probe(caps, TrainingOps.maximalSpans(m))
+  }
+
+  /** [[probe]] over empty state: batch t82's plan. The empty index and
+    * cap state are empty local relations, so Catalyst prunes both
+    * unions and the plan reads only `windows`.
+    */
+  private[graft] def probeFromEmpty(windows: DataFrame): Probe = {
+    val spark = windows.sparkSession
+    def empty(schema: StructType) =
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    probe(empty(indexSchema), empty(capsSchema), windows)
   }
 
   /** Probe one batch against the index (and itself), commit its
@@ -157,42 +208,15 @@ object IncrementalSpanIndex {
       val fresh = windowRows(batch)
         .join(newDocs, Seq("doc_id"), "left_semi")
         .persist(StorageLevel.MEMORY_AND_DISK)
-
-      // t82's seeding discipline from the FOLDED state — identical to
-      // re-aggregating index ∪ fresh (per-doc window sets are epoch-
-      // disjoint) without the per-drop corpus-sized shuffle
-      val caps = foldedCaps(spark, indexPath, fresh)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val cold = caps
-        .filter(col("docf") <= TrainingOps.SpanDfCap &&
-          col("maxk") <= TrainingOps.SpanOccCap)
-        .select(col("h64"))
-
-      val freshC = fresh.join(cold, Seq("h64"))
-        .select(col("h64"), col("doc_id").as("f_doc"), col("pos").as("f_pos"))
-      // the cap discipline needs only ONE side filtered: the probe is an
-      // h64 equi-join, so an index posting with a hot hash can never
-      // match the cold-filtered fresh side — filtering the index too
-      // would add a second full-index join stage per drop for rows the
-      // equi-join already discards
-      val allC = existing.unionByName(fresh)
-        .select(col("h64"), col("doc_id").as("t_doc"), col("pos").as("t_pos"))
-      val m = freshC.join(allC, Seq("h64"))
-        .filter(col("f_doc") =!= col("t_doc"))
-        .select(
-          least(col("f_doc"), col("t_doc")).as("doc_a"),
-          greatest(col("f_doc"), col("t_doc")).as("doc_b"),
-          when(col("f_doc") < col("t_doc"), col("f_pos")).otherwise(col("t_pos")).as("pa"),
-          when(col("f_doc") < col("t_doc"), col("t_pos")).otherwise(col("f_pos")).as("pb"))
-        // a new-vs-new pair matches from both fresh sides — dedup the
-        // normalized rows before island construction
-        .distinct()
-
-      // t82's own island kernel. No localCheckpoint: the committed index
-      // is stable until the epoch's marker, so the span plan materializes
+      val step = probe(existing,
+        StreamingState.readCurrent(spark, indexPath, "caps", capsSchema), fresh)
+      // persisted before anything plans the spans, which then read the
+      // cached caps too. No localCheckpoint: the committed index is
+      // stable until the epoch's marker, so the span plan materializes
       // exactly once — by the epoch write — against an unmoving listing
+      val caps = step.caps.persist(StorageLevel.MEMORY_AND_DISK)
       Map("windows" -> fresh, "docs" -> newDocs, "caps" -> caps,
-        "spans" -> TrainingOps.maximalSpans(m))
+        "spans" -> step.spans)
     }("spans")
   }
 

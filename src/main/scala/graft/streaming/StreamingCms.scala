@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 import org.apache.spark.sql.types._
-import graft.operators.CurationOps
+import graft.operators.{CurationOps, TextOps}
 
 /** Incremental Count-Min sketch maintenance — the streaming counterpart
   * of the batch t81 gate (`CurationOps.qCmsHeavyHitters`), in the
@@ -53,7 +53,7 @@ object StreamingCms {
     */
   def batchCells(docs: DataFrame): DataFrame =
     CurationOps.cmsCells(docs
-      .select(explode(expr("filter(split(text, ' '), w -> w != '')")).as("w"))
+      .select(explode(TextOps.wordsCol).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("tf")))
 
   /** Fold one micro-batch into the persisted sketch. Returns true if

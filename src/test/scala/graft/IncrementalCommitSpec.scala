@@ -356,7 +356,9 @@ class IncrementalCommitSpec extends AnyFunSuite {
       Seq((1L, s"$filler1 $quote")).toDF("doc_id", "text"), idx, 0L)
     val fresh = IncrementalSpanIndex.windowRows(
       Seq((2L, s"$filler3 $quote")).toDF("doc_id", "text"))
-    val caps = IncrementalSpanIndex.foldedCaps(spark, idx, fresh)
+    val caps = IncrementalSpanIndex.probe(IncrementalSpanIndex.readIndex(spark, idx),
+      StreamingState.readCurrent(spark, idx, "caps", IncrementalSpanIndex.capsSchema),
+      fresh).caps
     val scanned = caps.queryExecution.optimizedPlan.collect {
       case lr: LogicalRelation => lr.relation match {
         case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString)

@@ -92,8 +92,8 @@ class PlanShapeSpec extends AnyFunSuite {
   test("t76 contamination report: span join is equi on h, no cross product") {
     val p = plan(graft.operators.TrainingOps.qContaminationReport(spark, dir))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
-    assert("Join[^\n]*\\[h#".r.findFirstIn(p).isDefined,
-      s"span screen must equi-join on the span hash h:\n$p")
+    assert("Join[^\n]*\\[h64#".r.findFirstIn(p).isDefined,
+      s"span screen must equi-join on the span hash h64:\n$p")
   }
 
   test("t78 cluster split reads the memoized components artifact") {
