@@ -3,7 +3,7 @@ package graft.app
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.fic.{FicLookup, FicShredder, FicTransform, FicUpsert}
+import graft.fic.{FicLookup, FicShredder, FicTransform}
 import graft.llm.{LlmOperators, StubOcrClient, StubStructurizer}
 import graft.load.JdbcSink
 import graft.quality.Validation
@@ -114,22 +114,25 @@ object GraftTransform {
   /** The transform stage over an already-loaded raw frame: 8-pass
     * chain, per-document JSON side-output, warning counts, skip list.
     * Returns the transformed frame PERSISTED (the JSON write materializes
-    * it; the bookkeeping reads the cache); callers unpersist when done.
+    * it); callers unpersist when done.
     */
   def transformAndWrite(raw: DataFrame, lookup: FicLookup, out: String,
       folderName: String): DataFrame = stage(raw, lookup, out, folderName)._1
 
   /** [[transformAndWrite]], also returning the skip-listed file names.
-    * Two Spark executions: the JSON write, then ONE aggregate for the
-    * document and warning counts and the skip list, from which the
-    * skip-list file and the log lines are written.
+    * One Spark execution: the tasks that write the per-document JSON
+    * also tally the document and warning counts and the skip list
+    * ([[Validation.Tally]]), from which the skip-list file and the log
+    * lines are written.
     */
   private[app] def stage(raw: DataFrame, lookup: FicLookup, out: String,
       folderName: String): (DataFrame, Seq[String]) = {
     val transformed = FicTransform(raw, lookup)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    FicSources.writePerDocumentJson(transformed, out)
-    val summary = Validation.summarize(transformed, folderName)
+    val tally = Validation.Tally(raw.sparkSession)
+    FicSources.writePerDocumentJson(transformed, out,
+      Validation.Tally.columns(folderName))(tally.add)
+    val summary = tally.summary
     Validation.writeSkipList(summary.skipped,
       new java.io.File(out, "skip_list.txt").getPath)
     RunLog.withLog("graft.transform") { log =>
@@ -172,38 +175,19 @@ object GraftTransform {
 object GraftLoad {
 
   /** The load stage over an already-loaded transformed frame (with a
-    * `filename` column in the `*_transformed.json` naming): shred each
-    * document once into its per-document row, classify it latest-wins
-    * against the existing DB state, then write every table from ONE
-    * Spark job — per chunk of documents one transaction deletes the
-    * documents and the versions they supersede, then inserts them.
-    * Returns (documents written, parents replaced), counted by the
-    * writer per committed chunk.
+    * `filename` column in the `*_transformed.json` naming): read the
+    * existing DB state's latest version per key on the driver
+    * (load.py:104-111), shred each document once into its per-document
+    * row, then write every table from ONE Spark job whose tasks apply
+    * latest-wins per key — per chunk of applied documents one
+    * transaction deletes the documents and the versions they supersede,
+    * then inserts them. Returns (documents written, parents replaced),
+    * counted by the writer per committed chunk.
     */
   def run(spark: SparkSession, docs: DataFrame, url: String): (Long, Long) = {
-    val nested = FicShredder.nested(docs)
-
-    // Latest-wins against the EXISTING database state (load.py:104-111):
-    // probe the current fic table; only applied (insert/update)
-    // documents are written, each carrying the fic_id it supersedes.
-    val (toLoad, retained) = JdbcSink.readTable(spark, url, "fic") match {
-      case Some(snapshot) =>
-        val m = FicUpsert.merge(
-          snapshot.select("fic_id", "nombre_fic", "url", "fecha_corte"),
-          FicShredder.table(nested, "fic")
-            .select("fic_id", "nombre_fic", "url", "fecha_corte"))
-        // materialize the classification BEFORE mutating the table it
-        // was derived from — the JDBC snapshot is re-read lazily
-        val actions = m.actions.persist(StorageLevel.MEMORY_AND_DISK)
-        actions.count()
-        val applied = actions.filter(col("action") =!= "noop")
-          .select("fic_id", "old_fic_id")
-        (nested.join(applied, Seq("fic_id")), Some(actions))
-      case None => (nested, None)
-    }
-    val (n, nReplaced) =
-      try JdbcSink.loadDocuments(toLoad, url, FicShredder.Tables)
-      finally retained.foreach(_.unpersist())
+    val prior = JdbcSink.readSnapshot(url)
+    val (n, nReplaced) = JdbcSink.loadDocuments(FicShredder.nested(docs), url,
+      FicShredder.Tables, prior)
     val msg = s"load complete: $n documents ($nReplaced replaced)"
     RunLog.withLog("graft.load")(_.foreach(_.info(msg)))
     println(msg)

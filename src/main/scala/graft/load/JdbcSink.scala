@@ -3,8 +3,9 @@ package graft.load
 import java.sql.{DriverManager, SQLException}
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.{col, current_timestamp, lit}
+import org.apache.spark.sql.functions.{col, current_timestamp}
 import org.apache.spark.sql.types._
+import graft.fic.FicUpsert
 
 /** Relational (JDBC) sink for the 9-table star schema — the reference's
   * Postgres load stage (/root/reference/src/etl/load.py:76-151,
@@ -13,9 +14,10 @@ import org.apache.spark.sql.types._
   *
   *  - DDL bootstrap once, before the write job (S12): each table, plus an
   *    index on `fic_id` so a chunk's deletes touch only its own rows;
-  *  - one writer: a task streams its partition, sorted on fic_id, in
-  *    CHUNKS of whole documents (≥ `batchSize` rows, never splitting a
-  *    fic_id). Each chunk is one connection and one transaction (U9):
+  *  - one writer: a task streams its partition, each fic_id's rows
+  *    adjacent, in CHUNKS of whole documents (≥ `batchSize` rows, never
+  *    splitting a fic_id). Each chunk is one connection and one
+  *    transaction (U9):
   *    delete the chunk's fic_ids — and the fic_ids of the versions they
   *    supersede — from every table, only then batch-insert every
   *    table's rows, commit. No insert precedes the chunk's last delete,
@@ -27,9 +29,15 @@ import org.apache.spark.sql.types._
   *  - [[loadDocuments]] feeds it one row per document (the per-document
   *    form of [[graft.fic.FicShredder.nested]]), so ALL tables of one
   *    fic_id land in the same chunk and commit together: a replaced
-  *    document is never missing from the database. [[upsertByFicId]],
+  *    document is never missing from the database. It routes every
+  *    version of one upsert key (url, nombre_fic) to one task, which
+  *    applies latest-wins ([[graft.fic.FicUpsert.latestWins]]) against
+  *    the [[readSnapshot]] the driver read before the job, so deciding
+  *    what to write costs no Spark job of its own. [[upsertByFicId]],
   *    [[loadShredded]] and [[deleteByIds]] are single-table calls into
   *    the same writer;
+  *  - a chunk is retried only on a transaction-rollback error
+  *    ([[transient]]); any other SQL error fails the task at once;
   *  - every table carries a `created_at` audit timestamp, mirroring the
   *    reference's `server_default NOW()` on each model (db.py:59,100).
   *
@@ -92,8 +100,8 @@ object JdbcSink {
   }
 
   /** Group a partition's documents into chunks of ≥ chunkSize rows that
-    * never split a fic_id (input must be sorted by fic_id within the
-    * partition): a chunk owns every row of its fic_ids, so its
+    * never split a fic_id (the documents of one fic_id must be adjacent
+    * in the partition): a chunk owns every row of its fic_ids, so its
     * delete+insert transaction is independently idempotent — a later
     * chunk's delete can never erase an earlier chunk's inserts.
     */
@@ -112,9 +120,20 @@ object JdbcSink {
       }
     }
 
+  /** SQLState class 40, transaction rollback — deadlock, lock timeout,
+    * serialization failure (Derby 40001, 40XL1, 40XL2; Postgres 40001,
+    * 40P01) — anywhere in `e`'s next-exception chain, where a
+    * `BatchUpdateException` carries the statement's own error. Only
+    * these are retried: a permanent error (22001, value too long) would
+    * replay the same failure.
+    */
+  private[graft] def transient(e: SQLException): Boolean =
+    Iterator.iterate(e)(_.getNextException).takeWhile(_ != null).take(16)
+      .exists(x => Option(x.getSQLState).exists(_.startsWith("40")))
+
   /** The one writer: per chunk of `docs`, one transaction over all
-    * `targets`, retried whole on a transient conflict; `committed` sees
-    * each chunk after its commit.
+    * `targets`, retried whole on a [[transient]] conflict; `committed`
+    * sees each chunk after its commit.
     */
   private def writeDocs(docs: Iterator[Doc], url: String,
       targets: Seq[Target], batchSize: Int)(committed: Seq[Doc] => Unit): Unit =
@@ -132,7 +151,7 @@ object JdbcSink {
           writeTxn(url, targets, chunk, batchSize)
           done = true
         } catch {
-          case _: SQLException if attempt < 5 =>
+          case e: SQLException if attempt < 5 && transient(e) =>
             Thread.sleep(50L * attempt * attempt)
         }
       }
@@ -207,25 +226,29 @@ object JdbcSink {
     }
   }
 
-  /** Load per-document rows — `fic_id`, an optional nullable
-    * `old_fic_id` (the version the document supersedes) and one
-    * `array<struct>` column per table of `tables`, the shape of
-    * [[graft.fic.FicShredder.nested]] — in ONE Spark job: repartition on
-    * fic_id, then one chunk-transaction writer per partition writes
-    * every table, each row stamped with the load-time `created_at`.
-    * Returns (documents written, superseded versions replaced), counted
-    * once per committed chunk.
+  /** Load the per-document rows of [[graft.fic.FicShredder.nested]]
+    * (`fic_id` and one `array<struct>` column per table of `tables`, the
+    * first being `fic`) latest-wins against `prior`, in ONE Spark job:
+    * repartition on the upsert key (url, nombre_fic), so each key's
+    * versions meet in one task and a fic_id never spans two; per task,
+    * [[graft.fic.FicUpsert.latestWins]] picks the documents to write and
+    * the versions they supersede, and one chunk-transaction writer
+    * writes every table, each row stamped with the load-time
+    * `created_at`. `prior` rides in the task closure. Returns (documents
+    * written, superseded versions replaced), counted once per committed
+    * chunk.
     */
-  def loadDocuments(docs: DataFrame, url: String,
-      tables: Seq[String]): (Long, Long) = {
-    val old =
-      if (docs.columns.contains("old_fic_id")) col("old_fic_id")
-      else lit(null).cast(LongType)
+  def loadDocuments(docs: DataFrame, url: String, tables: Seq[String],
+      prior: FicUpsert.Snapshot): (Long, Long) = {
+    val fic = col("fic").getItem(0)
     val frame = docs
-      .select(col("fic_id") +: old.as("old_fic_id") +:
+      .select(col("fic_id") +: fic.getField("url").as("url") +:
+        fic.getField("nombre_fic").as("nombre_fic") +:
+        fic.getField("fecha_corte").as("fecha_corte") +:
         current_timestamp().as("created_at") +: tables.map(col): _*)
-      .repartition(Partitions, col("fic_id"))
-      .sortWithinPartitions(col("fic_id"))
+      .repartition(Partitions, col("url"), col("nombre_fic"))
+      .sortWithinPartitions(col("url"), col("nombre_fic"), col("fic_id"))
+    val first = 5 // the first table column of `frame`
     val targets = tables.map { t =>
       val cols = frame.schema(t).dataType.asInstanceOf[ArrayType]
         .elementType.asInstanceOf[StructType]
@@ -238,14 +261,16 @@ object JdbcSink {
     val written = sc.longAccumulator("jdbc.documents_written")
     val replaced = sc.longAccumulator("jdbc.documents_replaced")
     frame.foreachPartition { (rows: Iterator[Row]) =>
-      val ds = rows.map { r =>
+      val applied = FicUpsert.latestWins(rows, prior)(
+        r => (r.getString(1), r.getString(2)),
+        r => FicUpsert.Version(r.getLong(0), r.getString(3)))
+      val ds = applied.map { case (r, old) =>
         val id = r.getLong(0)
-        val createdAt = r.get(2)
-        Doc(id, if (r.isNullAt(1)) None else Some(r.getLong(1)),
-          Array.tabulate(targets.size) { i =>
-            if (r.isNullAt(3 + i)) Nil
-            else r.getSeq[Row](3 + i).map(e => Row.fromSeq(id +: e.toSeq :+ createdAt))
-          })
+        val createdAt = r.get(4)
+        Doc(id, old, Array.tabulate(targets.size) { i =>
+          if (r.isNullAt(first + i)) Nil
+          else r.getSeq[Row](first + i).map(e => Row.fromSeq(id +: e.toSeq :+ createdAt))
+        })
       }
       writeDocs(ds, url, targets, BatchSize) { chunk =>
         written.add(chunk.size)
@@ -253,6 +278,29 @@ object JdbcSink {
       }
     }
     (written.value, replaced.value)
+  }
+
+  /** Undefined table: Derby 42X05, Postgres 42P01. */
+  private val UndefinedTable = Set("42X05", "42P01")
+
+  /** The latest existing version per (url, nombre_fic) of the `fic`
+    * table, read on the driver with one plain JDBC query before the load
+    * job mutates the table. An absent table is an empty snapshot; any
+    * other error fails the load, since an empty snapshot would insert
+    * every document as a duplicate.
+    */
+  def readSnapshot(url: String): FicUpsert.Snapshot = {
+    val conn = DriverManager.getConnection(url)
+    try {
+      val st = conn.createStatement()
+      try {
+        val rs = st.executeQuery("SELECT url, nombre_fic, fic_id, fecha_corte FROM fic")
+        FicUpsert.snapshot(Iterator.continually(rs).takeWhile(_.next()).map(r =>
+          (r.getString(1), r.getString(2), FicUpsert.Version(r.getLong(3), r.getString(4)))))
+      } catch {
+        case e: SQLException if UndefinedTable(e.getSQLState) => Map.empty
+      } finally st.close()
+    } finally conn.close()
   }
 
   private def tableExists(url: String, table: String): Boolean = {

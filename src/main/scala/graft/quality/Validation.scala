@@ -1,8 +1,9 @@
 package graft.quality
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.{CollectionAccumulator, LongAccumulator}
 
 /** Data-quality side-outputs (SURVEY A2 / D3): instead of log lines, the
   * engine emits warning/validation DataFrames — queryable, sinkable,
@@ -77,13 +78,45 @@ object Validation {
     */
   final case class Summary(docs: Long, warnings: Long, skipped: Seq[String])
 
-  /** [[Summary]] from one aggregate over `transformed`. */
-  def summarize(transformed: DataFrame, folderName: String): Summary = {
-    val r = transformed.agg(
-      count(lit(1)),
-      coalesce(sum(size(filter(sumChecks, _.getField("warn")))), lit(0L)),
-      collect_list(when(!dateValid(folderName), col("filename")))).head()
-    Summary(r.getLong(0), r.getLong(1), r.getSeq[String](2).sortBy(UTF8String.fromString))
+  /** [[Summary]] tallied by the tasks that already visit every document
+    * (the per-document JSON writer), so the bookkeeping costs no pass of
+    * its own: [[Tally.columns]] is evaluated next to each document and
+    * handed to [[add]], which folds it into accumulators. Task retries
+    * count once: Spark applies an action's accumulator updates once per
+    * task.
+    */
+  final class Tally private (docs: LongAccumulator, warnings: LongAccumulator,
+      skipped: CollectionAccumulator[String]) extends Serializable {
+
+    /** Fold one document's [[Tally.columns]] value. */
+    def add(r: Row): Unit = {
+      docs.add(1)
+      warnings.add(r.getInt(0))
+      if (!r.isNullAt(1)) skipped.add(r.getString(1))
+    }
+
+    /** The [[Summary]] of the documents folded so far. */
+    def summary: Summary = {
+      import scala.jdk.CollectionConverters._
+      Summary(docs.value, warnings.value,
+        skipped.value.asScala.toSeq.sortBy(UTF8String.fromString))
+    }
+  }
+
+  object Tally {
+    def apply(spark: SparkSession): Tally = {
+      val sc = spark.sparkContext
+      new Tally(sc.longAccumulator("transform.documents"),
+        sc.longAccumulator("transform.sum_warnings"),
+        sc.collectionAccumulator[String]("transform.skipped"))
+    }
+
+    /** Per document: its [[sumWarnings]] row count, and its file name
+      * when [[dateFolderCheck]] flags it (else null).
+      */
+    def columns(folderName: String): Column =
+      struct(size(filter(sumChecks, _.getField("warn"))),
+        when(!dateValid(folderName), col("filename")))
   }
 
   /** Skip-list emission (script_transform.py:270-293): base names of the

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.fic.{FicLookup, FicSchema}
 
@@ -157,24 +157,30 @@ object FicSources {
     * Hadoop FileSystem API, so it works on file:// and hdfs:// alike and
     * stays fully distributed — each task writes only its own rows.
     */
-  def writePerDocumentJson(df: DataFrame, outDir: String): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
+  def writePerDocumentJson(df: DataFrame, outDir: String): Unit =
+    writePerDocumentJson(df, outDir, struct(lit(null)))(_ => ())
+
+  /** [[writePerDocumentJson]] that also evaluates the struct `tally` over
+    * each document and hands its value to `seen`, in the task that
+    * writes the document — bookkeeping without a pass of its own.
+    */
+  def writePerDocumentJson(df: DataFrame, outDir: String, tally: Column)(
+      seen: Row => Unit): Unit = {
     val hadoopConf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val payload = df
-      .withColumn("__name", regexp_replace(col("filename"), "\\.json$", ""))
-      .select(col("__name"),
-        to_json(struct(df.columns.toIndexedSeq.filter(_ != "filename").map(col): _*)).as("__json"))
-      .as[(String, String)]
-    payload.foreachPartition { (rows: Iterator[(String, String)]) =>
+      df.sparkSession.sparkContext.hadoopConfiguration)
+    val payload = df.select(
+      regexp_replace(col("filename"), "\\.json$", ""),
+      to_json(struct(df.columns.toIndexedSeq.filter(_ != "filename").map(col): _*)),
+      tally)
+    payload.foreachPartition { (rows: Iterator[Row]) =>
       val fs = new org.apache.hadoop.fs.Path(outDir)
         .getFileSystem(hadoopConf.value)
-      rows.foreach { case (name, json) =>
+      rows.foreach { r =>
         val out = fs.create(
-          new org.apache.hadoop.fs.Path(outDir, s"${name}_transformed.json"), true)
-        try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          new org.apache.hadoop.fs.Path(outDir, s"${r.getString(0)}_transformed.json"), true)
+        try out.write(r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
         finally out.close()
+        seen(r.getStruct(2))
       }
     }
   }

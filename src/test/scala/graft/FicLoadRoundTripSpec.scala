@@ -11,6 +11,8 @@ import graft.load.JdbcSink
   * corpus): after each month every table holds exactly the shredded
   * rows of the surviving documents, a rerun changes nothing, and a
   * restatement whose insert fails leaves the previous version in place.
+  * Latest-wins holds inside a batch on an empty database too, and a
+  * snapshot that cannot be read fails the load before it writes.
   */
 class FicLoadRoundTripSpec extends AnyFunSuite {
 
@@ -70,5 +72,34 @@ class FicLoadRoundTripSpec extends AnyFunSuite {
       doc("Beta", "2025-09-30", politica = "x" * 32001, plazo = false)))
     intercept[Exception](GraftLoad.run(spark, transformed(spark, tooLong), url))
     assertHolds(url, after2, "a failed restatement")
+  }
+
+  test("an empty database keeps only the latest of two dated versions of one fund") {
+    import FicLoadFixture._
+    val url = "jdbc:derby:memory:firstLoadLatestWins;create=true"
+    val both = transformed(spark, folder(Seq(
+      "bancoA_beta_raw.json" -> doc("Beta", "2025-07-31"),
+      "bancoA_beta_agosto_raw.json" -> doc("Beta", "2025-08-31",
+        politica = "Renta fija y renta variable")))).cache()
+    assert(GraftLoad.run(spark, both, url) == ((1L, 0L)))
+    assertHolds(url, both.filter(col("filename") === "bancoA_beta_agosto_raw.json"),
+      "a first load of two versions")
+    assert(dbRows(url, "fic").size == 1)
+  }
+
+  test("a fic table whose snapshot cannot be read fails the load before it writes") {
+    import FicLoadFixture._
+    val url = "jdbc:derby:memory:unreadableSnapshot;create=true"
+    val conn = java.sql.DriverManager.getConnection(url)
+    try conn.createStatement().executeUpdate(
+      "CREATE TABLE fic (fic_id BIGINT, nombre_fic VARCHAR(200), url VARCHAR(200))")
+    finally conn.close()
+    val e = intercept[java.sql.SQLException](
+      GraftLoad.run(spark, transformed(spark, folder(Month1)), url))
+    assert(e.getSQLState == "42X04", e.getSQLState)
+    assert(dbRows(url, "fic").isEmpty)
+    FicShredder.Tables.filter(_ != "fic").foreach { t =>
+      assert(JdbcSink.readTable(spark, url, t).isEmpty, s"$t was created")
+    }
   }
 }

@@ -7,6 +7,7 @@ import graft.fic.{FicLookup, FicSchema, FicShredder, FicTransform}
 import graft.load.JdbcSink
 import graft.operators.{Scale, SessionMemo, VectorOps}
 import graft.quality.{ReliabilityReport, Validation}
+import graft.sources.FicSources
 
 /** Scale utilities, quality side-outputs and the JDBC sink (embedded
   * Derby standing in for Postgres).
@@ -437,11 +438,16 @@ class ScaleAndSinkSpec extends AnyFunSuite {
         val v = fecha.fold("null")(d => s""""$d"""")
         s"""{"filename": "$f", "fic": {"fecha_corte": $v}}"""
       }.toDS())
+    // the transform stage's tally, evaluated by its JSON writer
+    val tally = Validation.Tally(spark)
+    FicSources.writePerDocumentJson(docs,
+      java.nio.file.Files.createTempDirectory("tally").toString,
+      Validation.Tally.columns("json_raw_2025_07"))(tally.add)
+    val summary = tally.summary
+    assert(summary.docs == 5 && summary.skipped == Seq("enero_raw.json"))
     val valid = Validation.dateFolderCheck(docs, "json_raw_2025_07").collect()
       .map(r => r.getString(0) -> r.getBoolean(2)).toMap
     assert(valid == fechas.map { case (f, _) => f -> (f != "enero_raw.json") }.toMap)
-    val summary = Validation.summarize(docs, "json_raw_2025_07")
-    assert(summary.docs == 5 && summary.skipped == Seq("enero_raw.json"))
   }
 
   test("jdbc sink: transactional upsert into Derby, idempotent on rerun") {
