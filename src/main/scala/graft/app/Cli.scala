@@ -1,9 +1,11 @@
 package graft.app
 
+import scala.util.Using
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.fic.{FicLookup, FicShredder, FicTransform}
+import graft.fic.{FicLookup, FicShredder, FicTransform, FicUpsert}
 import graft.llm.{LlmOperators, StubOcrClient, StubStructurizer}
 import graft.load.JdbcSink
 import graft.quality.Validation
@@ -184,14 +186,45 @@ object GraftLoad {
     * then inserts them. Returns (documents written, parents replaced),
     * counted by the writer per committed chunk.
     */
-  def run(spark: SparkSession, docs: DataFrame, url: String): (Long, Long) = {
-    val prior = JdbcSink.readSnapshot(url)
+  def run(spark: SparkSession, docs: DataFrame, url: String): (Long, Long) =
+    Using.resource(new Prior(url))(run(spark, docs, url, _))
+
+  /** [[run]] against a snapshot read already started. It is joined
+    * before the load job creates any table, so an unreadable snapshot
+    * fails the load before anything is written.
+    */
+  private[app] def run(spark: SparkSession, docs: DataFrame, url: String,
+      prior: Prior): (Long, Long) = {
     val (n, nReplaced) = JdbcSink.loadDocuments(FicShredder.nested(docs), url,
-      FicShredder.Tables, prior)
+      FicShredder.Tables, prior.join())
     val msg = s"load complete: $n documents ($nReplaced replaced)"
     RunLog.withLog("graft.load")(_.foreach(_.info(msg)))
     println(msg)
     (n, nReplaced)
+  }
+
+  /** [[JdbcSink.readSnapshot]] on a driver thread of its own, started
+    * at construction. The fused drivers start it before their transform,
+    * so that on a cold JVM the embedded-Derby boot (0.5–0.8 s) overlaps
+    * the transform job instead of following it; the read is plain JDBC,
+    * not a Spark execution. [[close]] waits for the read, so a caller
+    * that fails before [[join]] leaves no read running.
+    */
+  private[app] final class Prior(url: String) extends AutoCloseable {
+    private var result: Either[Throwable, FicUpsert.Snapshot] = _
+    private val thread = new Thread(() => result =
+      try Right(JdbcSink.readSnapshot(url)) catch { case e: Throwable => Left(e) },
+      "graft-load-snapshot")
+    thread.setDaemon(true)
+    thread.start()
+
+    /** The snapshot, once read; the read's own error if it failed. */
+    def join(): FicUpsert.Snapshot = {
+      thread.join()
+      result.fold(e => throw e, identity)
+    }
+
+    def close(): Unit = thread.join()
   }
 
   def main(args: Array[String]): Unit = {
@@ -222,15 +255,16 @@ private[app] object Fused {
 
   /** T+L tail shared by both fused drivers: the transform stage's
     * skip-listed file names filtered out in memory (equal to the staged
-    * `--skip-list` anti-join), then the load stage, all without
+    * `--skip-list` anti-join), then the load stage against the snapshot
+    * read the driver started before its transform, all without
     * re-reading the side-outputs.
     */
   def loadTransformed(spark: SparkSession, transformed: DataFrame,
-      skipped: Seq[String], url: String): (Long, Long) = {
+      skipped: Seq[String], url: String, prior: GraftLoad.Prior): (Long, Long) = {
     val kept =
       if (skipped.isEmpty) transformed
       else transformed.filter(!col("filename").isin(skipped: _*))
-    GraftLoad.run(spark, toTransformedNaming(kept), url)
+    GraftLoad.run(spark, toTransformedNaming(kept), url, prior)
   }
 }
 
@@ -245,26 +279,26 @@ private[app] object Fused {
 object GraftPipeline {
 
   def run(spark: SparkSession, folder: String, work: String, url: String,
-      ficsPath: Option[String], workers: Int = 3): (Long, Long) = {
-    val rawDir = s"$work/raw"
-    val docs = GraftExtract.run(spark, folder, rawDir, workers)
-    val lookup = ficsPath.map(FicSources.ficsLookup).getOrElse(FicLookup(Nil))
-    val raw = docs.filter(col("json").isNotNull)
-      .withColumn("filename",
-        concat(regexp_replace(regexp_extract(col("path"), "([^/]+)$", 1),
-          "\\.pdf$", ""), lit("_raw.json")))
-      .select(col("doc.*"), col("filename"))
-    // date-vs-folder check keys on the SOURCE folder's name (the
-    // month-named directory in the reference layout) — the fixed
-    // "raw" work subdirectory could never match the date pattern
-    val folderName = new java.io.File(folder).getName
-    val (transformed, skipped) = GraftTransform
-      .stage(raw, lookup, s"$work/transformed", folderName)
-    val res = Fused.loadTransformed(spark, transformed, skipped, url)
-    transformed.unpersist()
-    docs.unpersist()
-    res
-  }
+      ficsPath: Option[String], workers: Int = 3): (Long, Long) =
+    Using.resource(new GraftLoad.Prior(url)) { prior =>
+      val docs = GraftExtract.run(spark, folder, s"$work/raw", workers)
+      val lookup = ficsPath.map(FicSources.ficsLookup).getOrElse(FicLookup(Nil))
+      val raw = docs.filter(col("json").isNotNull)
+        .withColumn("filename",
+          concat(regexp_replace(regexp_extract(col("path"), "([^/]+)$", 1),
+            "\\.pdf$", ""), lit("_raw.json")))
+        .select(col("doc.*"), col("filename"))
+      // date-vs-folder check keys on the SOURCE folder's name (the
+      // month-named directory in the reference layout) — the fixed
+      // "raw" work subdirectory could never match the date pattern
+      val folderName = new java.io.File(folder).getName
+      val (transformed, skipped) = GraftTransform
+        .stage(raw, lookup, s"$work/transformed", folderName)
+      val res = Fused.loadTransformed(spark, transformed, skipped, url, prior)
+      transformed.unpersist()
+      docs.unpersist()
+      res
+    }
 
   def main(args: Array[String]): Unit = {
     val folder = Cli.arg(args, "--folder").getOrElse(sys.error("--folder required"))
@@ -690,12 +724,13 @@ object GraftDrop {
 object GraftTransformLoad {
 
   def run(spark: SparkSession, in: String, out: String, url: String,
-      ficsPath: Option[String]): (Long, Long) = {
-    val (transformed, skipped) = GraftTransform.run(spark, in, out, ficsPath)
-    val res = Fused.loadTransformed(spark, transformed, skipped, url)
-    transformed.unpersist()
-    res
-  }
+      ficsPath: Option[String]): (Long, Long) =
+    Using.resource(new GraftLoad.Prior(url)) { prior =>
+      val (transformed, skipped) = GraftTransform.run(spark, in, out, ficsPath)
+      val res = Fused.loadTransformed(spark, transformed, skipped, url, prior)
+      transformed.unpersist()
+      res
+    }
 
   def main(args: Array[String]): Unit = {
     val in = Cli.arg(args, "--input").getOrElse(sys.error("--input required"))

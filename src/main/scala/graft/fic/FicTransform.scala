@@ -2,12 +2,13 @@ package graft.fic
 
 import java.util.regex.Pattern
 
+import com.ibm.icu.lang.UCharacter
 import org.apache.spark.sql.{DataFrame, GraftColumn}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{CreateNamedStruct, ExpectsInputTypes, Expression, GenericInternalRow, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayData, CollationSupport, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -215,15 +216,32 @@ object FicTransform {
       "inmobiliario", "real estate", "commodities", "materias primas",
       "infraestructura", "derivados", "divisas", "forex", "opciones", "futuros"))
 
+  /** Spark's `lower` on a UTF8_BINARY string, as the two calls its
+    * `CollationSupport.Lower.execBinaryICU` makes: ASCII maps byte by
+    * byte; anything else goes through ICU's `UCharacter.toLowerCase`,
+    * which follows the JVM default locale's rules (tr, az and lt map
+    * some letters differently), with invalid UTF-8 read as U+FFFD.
+    * Calling `CollationSupport` itself would initialize
+    * `CollationAwareUTF8String`, whose static table (ICU title case
+    * over all 1,114,112 code points) costs a cold JVM 1.5–2 s.
+    */
+  def lower(s: UTF8String): UTF8String =
+    if (s.isFullAscii) s.toLowerCaseAscii
+    else UTF8String.fromString(UCharacter.toLowerCase(s.toValidString))
+
+  /** Spark's `upper`, as [[lower]]. */
+  def upper(s: UTF8String): UTF8String =
+    if (s.isFullAscii) s.toUpperCaseAscii
+    else UTF8String.fromString(UCharacter.toUpperCase(s.toValidString))
+
   /** `_extraer_tipo_fic` (transform.py:107-169): keyword votes per fund
     * type (Renta Fija, Renta Variable, Mixta, Alternativa), argmax in
     * that order. Of the reference's content fallbacks only "hedge" can
     * still fire: every other one is a keyword, so it has already voted.
-    * Lower-cases the way Spark's `lower` does (ICU root case mapping).
+    * Lower-cases with [[lower]], as Spark's `lower` does.
     */
   def tipoFic(politica: String): String = {
-    val p = CollationSupport.Lower
-      .execBinaryICU(UTF8String.fromString(if (politica == null) "" else politica)).toString
+    val p = lower(UTF8String.fromString(if (politica == null) "" else politica)).toString
     val Seq(rf, rv, mx, al) = TipoKeywords.map(_.count(p.contains))
     if (rf > 0 && rf >= rv && rf >= mx && rf >= al) "Renta Fija"
     else if (rv > 0 && rv >= mx && rv >= al) "Renta Variable"
@@ -257,8 +275,8 @@ case class FicKernel(child: Expression, lookup: FicLookup)
 /** The passes over one raw document row. Values keep the semantics of
   * the SQL functions the transform was first written in: `trim` strips
   * U+0020 only, numbers parse like `cast`/`try_cast` to double (a
-  * failed parse is null), case mapping is ICU's, and sums add left to
-  * right from 0.0.
+  * failed parse is null), case mapping is `lower`/`upper`'s
+  * ([[FicTransform.lower]]), and sums add left to right from 0.0.
   */
 object FicKernel {
 
@@ -366,7 +384,7 @@ object FicKernel {
         val ent = cal.getUTF8String(2)
         val applied = ent != null && ent.numBytes > 0
         val matched = if (!applied) None
-          else FicTransform.matchAgency(CollationSupport.Upper.execBinaryICU(ent.trim()).toString)
+          else FicTransform.matchAgency(FicTransform.upper(ent.trim()).toString)
         row(cal.getUTF8String(0), date(cal.getUTF8String(1)),
           matched.map(UTF8String.fromString).getOrElse(ent),
           if (applied) matched.isDefined else null)

@@ -1,9 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.app.GraftLoad
+import graft.app.{GraftLoad, GraftTransformLoad}
 import graft.fic.FicShredder
 import graft.load.JdbcSink
 
@@ -12,7 +16,9 @@ import graft.load.JdbcSink
   * rows of the surviving documents, a rerun changes nothing, and a
   * restatement whose insert fails leaves the previous version in place.
   * Latest-wins holds inside a batch on an empty database too, and a
-  * snapshot that cannot be read fails the load before it writes.
+  * snapshot that cannot be read fails the load before it writes, on the
+  * staged and the fused path; a fused month whose transform fails
+  * surfaces that error and leaves no snapshot read behind.
   */
 class FicLoadRoundTripSpec extends AnyFunSuite {
 
@@ -87,19 +93,54 @@ class FicLoadRoundTripSpec extends AnyFunSuite {
     assert(dbRows(url, "fic").size == 1)
   }
 
-  test("a fic table whose snapshot cannot be read fails the load before it writes") {
-    import FicLoadFixture._
-    val url = "jdbc:derby:memory:unreadableSnapshot;create=true"
+  /** A database whose `fic` table lacks `fecha_corte`: its snapshot
+    * read fails with Derby's 42X04.
+    */
+  private def unreadableSnapshot(name: String): String = {
+    val url = s"jdbc:derby:memory:$name;create=true"
     val conn = java.sql.DriverManager.getConnection(url)
     try conn.createStatement().executeUpdate(
       "CREATE TABLE fic (fic_id BIGINT, nombre_fic VARCHAR(200), url VARCHAR(200))")
     finally conn.close()
-    val e = intercept[java.sql.SQLException](
-      GraftLoad.run(spark, transformed(spark, folder(Month1)), url))
-    assert(e.getSQLState == "42X04", e.getSQLState)
+    url
+  }
+
+  private def assertNothingWritten(url: String): Unit = {
     assert(dbRows(url, "fic").isEmpty)
     FicShredder.Tables.filter(_ != "fic").foreach { t =>
       assert(JdbcSink.readTable(spark, url, t).isEmpty, s"$t was created")
     }
+  }
+
+  test("a fic table whose snapshot cannot be read fails the load before it writes") {
+    import FicLoadFixture._
+    val url = unreadableSnapshot("unreadableSnapshot")
+    val e = intercept[java.sql.SQLException](
+      GraftLoad.run(spark, transformed(spark, folder(Month1)), url))
+    assert(e.getSQLState == "42X04", e.getSQLState)
+    assertNothingWritten(url)
+  }
+
+  test("the fused month fails on an unreadable snapshot before it writes") {
+    import FicLoadFixture._
+    val url = unreadableSnapshot("unreadableSnapshotFused")
+    val out = Files.createTempDirectory("fused_unreadable").toString
+    val e = intercept[java.sql.SQLException](
+      GraftTransformLoad.run(spark, folder(Month1).toString, out, url, None))
+    assert(e.getSQLState == "42X04", e.getSQLState)
+    assertNothingWritten(url)
+  }
+
+  test("a failed transform surfaces its own error and leaves no snapshot read running") {
+    val url = unreadableSnapshot("transformFailsFirst")
+    val absent = Files.createTempDirectory("fused_absent").resolve("json_raw_2025_07")
+    val out = Files.createTempDirectory("fused_absent_out").toString
+    val e = intercept[AnalysisException](
+      GraftTransformLoad.run(spark, absent.toString, out, url, None))
+    assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
+    val reads = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName == "graft-load-snapshot")
+    assert(reads.isEmpty)
+    assertNothingWritten(url)
   }
 }

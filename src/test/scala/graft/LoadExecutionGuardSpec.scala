@@ -1,18 +1,21 @@
 package graft
 
+import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
-import graft.app.GraftLoad
+import graft.app.{GraftLoad, GraftTransformLoad}
 
 /** Regression guard for the one-pass load: one `GraftLoad.run` starts
   * at most 1 SQL execution, the load job, on the insert path and on the
   * replace path (a per-table load needs 10 and 21; a DataFrame merge
-  * before the job, 2). The snapshot is a plain JDBC read. Counted with
-  * a QueryExecutionListener on a session of its own.
+  * before the job, 2). The snapshot is a plain JDBC read, also when a
+  * fused month starts it beside its transform: the month stays at 2,
+  * the JSON write and the load. Counted with a QueryExecutionListener
+  * on a session of its own.
   */
 class LoadExecutionGuardSpec extends AnyFunSuite {
 
@@ -66,6 +69,23 @@ class LoadExecutionGuardSpec extends AnyFunSuite {
     GraftLoad.run(session, m2, url)
     val replace = drain(session, ex)
     assert(replace.size <= 1, s"replace path ran ${replace.size}: ${replace.mkString(", ")}")
+    session.listenerManager.unregister(ex)
+  }
+
+  test("one fused GraftTransformLoad month starts at most 2 SQL executions") {
+    spark.sparkContext.setLogLevel("WARN")
+    import FicLoadFixture._
+    val session = spark.newSession()
+    val ex = new Executions
+    session.listenerManager.register(ex)
+    val url = "jdbc:derby:memory:fusedLoadGuard;create=true"
+    drain(session, ex)
+    Seq(Month1, Month2).foreach { month =>
+      val out = Files.createTempDirectory("fused_guard").toString
+      GraftTransformLoad.run(session, folder(month).toString, out, url, None)
+      val ran = drain(session, ex)
+      assert(ran.size <= 2, s"fused month ran ${ran.size}: ${ran.mkString(", ")}")
+    }
     session.listenerManager.unregister(ex)
   }
 }
