@@ -190,7 +190,7 @@ object Bench {
       val smallDir = sfDir.replace("sf0.1", "sf0.01")
       if (sys.env.getOrElse("SPARK_GRAFT_SCALING", "1") != "0" &&
           smallDir != sfDir && new java.io.File(smallDir).isDirectory) {
-        graft.operators.TextOps.releaseCache(spark)
+        graft.operators.SessionMemo.release(spark)
         val small = timeSuite(spark, queries, smallDir, ScalingPasses, errors)
         val smallMins = small.map(_.min)
         Some(scalePoint(smallDir, smallMins, "small_sf", "queries_min_small",
@@ -228,7 +228,7 @@ object Bench {
       val explicitUp = sys.env.contains("SPARK_GRAFT_SCALE_UP_DIR")
       if (sys.env.getOrElse("SPARK_GRAFT_SCALE_UP", "1") != "0" &&
           (sfDir.endsWith("sf0.1") || explicitUp) && fresh) {
-        graft.operators.TextOps.releaseCache(spark)
+        graft.operators.SessionMemo.release(spark)
         val big = timeSuite(spark, queries, bigDir, ScalingPasses, errors,
           warm = false)
         val bigMins = big.map(_.min)
@@ -320,7 +320,7 @@ object Bench {
       scaleUp.map(s => s""","scale_up":$s""").getOrElse("") + "}"
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), full + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] write $outPath failed: $e") }
-    graft.operators.TextOps.releaseCache(spark)
+    graft.operators.SessionMemo.release(spark)
     spark.stop()
     // The LAST stdout writes, after spark.stop() so no log line can
     // follow or interleave. Two copies of the SAME wire payload: a

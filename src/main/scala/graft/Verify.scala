@@ -57,7 +57,7 @@ object Verify {
     if (failures.nonEmpty)
       System.err.println(s"[verify] ${failures.size} queries failed: " +
         failures.keys.mkString(", "))
-    graft.operators.TextOps.releaseCache(spark)
+    graft.operators.SessionMemo.release(spark)
     spark.stop()
   }
 }

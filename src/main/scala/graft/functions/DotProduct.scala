@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** `dot_product(a, b)` — the sequential dot product of two
   * `array<double>` columns as a native codegen'd Catalyst expression.
@@ -69,20 +68,4 @@ object DotProduct {
     }
     java.lang.Double.valueOf(s)
   }
-
-  /** Register `dot_product` for SQL / expr() use (idempotent). Children
-    * are cast to array<double> so array<float> embedding columns work
-    * directly (exact widening).
-    */
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "dot_product") {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "dot_product",
-        exprs => DotProduct(
-          org.apache.spark.sql.catalyst.expressions.Cast(
-            exprs(0), ArrayType(DoubleType)),
-          org.apache.spark.sql.catalyst.expressions.Cast(
-            exprs(1), ArrayType(DoubleType))),
-        "built-in")
-    }
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType}
@@ -49,20 +48,5 @@ object PyRound {
   def round(v: Double, scale: Int): Double = {
     if (v.isNaN || v.isInfinite) v
     else new JBigDecimal(v).setScale(scale, RoundingMode.HALF_EVEN).doubleValue()
-  }
-
-  /** Register `py_round` for SQL / expr() use in a session. The value
-    * child is wrapped in a Cast to double so SQL decimal literals
-    * (`py_round(2.675, 2)`) work — the expression itself is
-    * double-typed and has no implicit coercion.
-    */
-  def register(spark: SparkSession): Unit = Registration.once(spark, "py_round") {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "py_round",
-      exprs => PyRound(
-        org.apache.spark.sql.catalyst.expressions.Cast(
-          exprs(0), org.apache.spark.sql.types.DoubleType),
-        exprs(1)),
-      "built-in")
   }
 }

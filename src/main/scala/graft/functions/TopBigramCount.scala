@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -74,12 +73,4 @@ case class TopBigramCount(child: Expression)
     copy(child = newChild)
 
   override def prettyName: String = "top_bigram_count"
-}
-
-object TopBigramCount {
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "top_bigram_count") {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "top_bigram_count", exprs => TopBigramCount(exprs(0)), "built-in")
-    }
 }

@@ -145,22 +145,12 @@ object TopKAgg {
     }
   }
 
-  /** Register `top_k_by_value(value, id, k)` for SQL / expr() use. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registration.once(spark, "top_k_by_value") {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "top_k_by_value",
-        exprs => TopKAgg(exprs(0), exprs(1),
-          exprs(2).eval().asInstanceOf[Number].intValue).toAggregateExpression(),
-        "built-in")
-    }
-
   /** Column API: top-k (value, id) pairs per group (registers the
     * function on first use).
     */
   def topK(spark: org.apache.spark.sql.SparkSession, valueCol: String,
       idCol: String, k: Int): Column = {
-    register(spark)
+    graft.sql.GraftExtensions.register(spark)
     org.apache.spark.sql.functions.expr(
       s"top_k_by_value($valueCol, $idCol, $k)")
   }

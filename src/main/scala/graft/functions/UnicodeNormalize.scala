@@ -2,7 +2,6 @@ package graft.functions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -67,15 +66,4 @@ object UnicodeNormalize {
     if (Normalizer.isNormalized(str, form)) s
     else UTF8String.fromString(Normalizer.normalize(str, form))
   }
-
-  /** Register `nfc_normalize` and `nfkc_normalize` for SQL/expr() use. */
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "nfc_normalize") {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "nfc_normalize",
-        exprs => UnicodeNormalize(exprs(0), "NFC"), "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "nfkc_normalize",
-        exprs => UnicodeNormalize(exprs(0), "NFKC"), "built-in")
-    }
 }

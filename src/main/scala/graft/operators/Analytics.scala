@@ -530,7 +530,7 @@ object Analytics {
     * The oracle is the window formulation: both must agree exactly.
     */
   def qTopkAggregate(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.TopKAgg.register(s)
+    graft.sql.GraftExtensions.register(s)
     Tables.orders(s, dir)
       .groupBy(col("o_custkey"))
       .agg(expr("top_k_by_value(o_totalprice, o_orderkey, 3)").as("top"))

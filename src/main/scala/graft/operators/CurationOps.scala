@@ -300,7 +300,7 @@ object CurationOps {
     .groupBy(_._1).map { case (w, ps) => w -> ps.map(_._2).sorted }
 
   def qLexicalTopk(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.TopKAgg.register(s)
+    graft.sql.GraftExtensions.register(s)
     val queryIds = queryTermIds
     val occ = occurrences(s, dir).select(col("doc_id"), col("w"))
     // Σ_t tf(d,t)·w(t) regrouped as a per-OCCURRENCE sum of w(t): the

@@ -214,7 +214,7 @@ object FicGate {
 
   def qNfcNormalize(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.UnicodeNormalize.register(s)
+    graft.sql.GraftExtensions.register(s)
     nfcFixture.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("id", "raw")
       .withColumn("norm", expr("nfc_normalize(raw)"))

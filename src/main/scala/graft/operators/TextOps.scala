@@ -94,9 +94,6 @@ object TextOps {
       (build: => DataFrame): DataFrame =
     SessionMemo.persist(s"text:$key", s, dir)(build)
 
-  /** Release the session's memoized intermediates (VERDICT r3 #6). */
-  def releaseCache(s: SparkSession): Unit = SessionMemo.release(s)
-
   /** (doc_id, shs: array of distinct shingles, n: shingle count) —
     * persisted: the Jaccard query reads it from three plan branches and
     * the MinHash query from two; at scale you materialize the shingle

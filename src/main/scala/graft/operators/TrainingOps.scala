@@ -437,7 +437,7 @@ object TrainingOps {
     * naive explode + two groupBy exchanges over every bigram occurrence.
     */
   def qRepetitionFilter(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.TopBigramCount.register(s)
+    graft.sql.GraftExtensions.register(s)
     Tables.documents(s, dir)
       .withColumn("words", TextOps.wordsCol)
       .filter(size(col("words")) >= 2) // mirrors the explode dropping empty docs
@@ -657,7 +657,7 @@ object TrainingOps {
   private val ChunkIdSpan = 1000000L
 
   def qChunkRetrieval(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.TopKAgg.register(s)
+    graft.sql.GraftExtensions.register(s)
     val scored = SessionMemo.persist("training:chunk-scores", s, dir) {
       val occ = Tables.documents(s, dir)
         .withColumn("words", TextOps.wordsCol)

@@ -48,7 +48,7 @@ object VectorOps {
     * SQRT(LIST_DOT_PRODUCT(v, v)), so cosines are unchanged.
     */
   private def embs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.DotProduct.register(s)
+    graft.sql.GraftExtensions.register(s)
     SessionMemo.persist("vec:embs", s, dir) {
       Tables.embeddings(s, dir)
         .select(col("vec_id"), col("label"), vec.as("v"))
@@ -283,7 +283,7 @@ object VectorOps {
     * decimal cast makes the cross-row sum order-independent).
     */
   def qVectorStats(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.DotProduct.register(s)
+    graft.sql.GraftExtensions.register(s)
     Tables.embeddings(s, dir)
       .withColumn("v", vec)
       .withColumn("norm", sqrt(dot("v", "v")))
@@ -1066,7 +1066,7 @@ object VectorOps {
     */
   def semDedup(vectors: DataFrame, idCol: String, vecCol: String,
       tau: Double = SemDedupTau, k: Int = IvfK, iters: Int = IvfIters): DataFrame = {
-    graft.functions.DotProduct.register(vectors.sparkSession)
+    graft.sql.GraftExtensions.register(vectors.sparkSession)
     val e = vectors.select(col(idCol).cast("long").as("vec_id"),
         col(vecCol).cast("array<double>").as("v"))
       .withColumn("nv", sqrt(dot("v", "v")))
@@ -1457,7 +1457,7 @@ object VectorOps {
     // row_number over (cosine desc, vec_id) / (hamming asc, vec_id) —
     // hamming enters negated), so ranks and the gate hash are
     // unchanged — verified at sf0.01 + sf0.1.
-    graft.functions.TopKAgg.register(s)
+    graft.sql.GraftExtensions.register(s)
     val e = embs(s, dir).select(col("vec_id"), col("v"), col("nv"))
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nv").as("qnv"))

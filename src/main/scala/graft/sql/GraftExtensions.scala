@@ -1,11 +1,11 @@
 package graft.sql
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
-import graft.functions.{DotProduct, PyRound, TopBigramCount, TopKAgg}
+import graft.functions.{DotProduct, PyRound, Registration, TopBigramCount, TopKAgg}
 
 /** Cluster-wide registration of the engine's native Catalyst
   * expressions through Spark's standard extension point:
@@ -16,9 +16,9 @@ import graft.functions.{DotProduct, PyRound, TopBigramCount, TopKAgg}
   * SparkSession.builder().withExtensions(new GraftExtensions).…
   * }}}
   *
-  * The per-object `register(spark)` helpers remain for ad-hoc sessions
-  * (they write into one session's temp-function registry); this class
-  * is the deployment path — injected functions exist in EVERY session
+  * [[GraftExtensions.register]] writes the same table into one
+  * session's function registry for ad-hoc sessions; this class is the
+  * deployment path — injected functions exist in EVERY session
   * built on the configured context (thrift server, notebook kernels,
   * scheduled jobs) with no driver-side call, which is how a shared
   * cluster actually ships a function library. Only the codegen'd
@@ -37,11 +37,12 @@ object GraftExtensions {
   private def info(name: String, clazz: Class[_], usage: String) =
     new ExpressionInfo(clazz.getName, null, name, usage, "")
 
-  /** The injectable function set — shared between the extension class
-    * and any catalog that wants to enumerate the native surface.
-    * Builders mirror the session-scoped `register` helpers exactly
-    * (same Cast coercions), so a query resolves identically whichever
-    * path registered the function.
+  /** The injectable function set — the one table behind both the
+    * extension class and the session-scoped [[register]], so a query
+    * resolves identically whichever path registered the function. The
+    * value children of `py_round` and `dot_product` are cast to double
+    * (array<double>), so SQL decimal literals and array<float>
+    * embedding columns work directly.
     */
   private[graft] val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     (FunctionIdentifier("py_round"),
@@ -65,4 +66,15 @@ object GraftExtensions {
       (es: Seq[Expression]) => TopKAgg(es(0), es(1),
         es(2).eval().asInstanceOf[Number].intValue).toAggregateExpression()),
   )
+
+  /** Register every native function in `spark`'s own function registry
+    * (idempotent: a name already present — e.g. in an extension-built
+    * session — is left as it is).
+    */
+  def register(spark: SparkSession): Unit =
+    functions.foreach { case (id, info, builder) =>
+      Registration.once(spark, id.funcName) {
+        spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+      }
+    }
 }

@@ -3,7 +3,7 @@ package graft.sql
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.Tables
 import graft.fic.FicTransform
-import graft.functions.{PyRound, Similarity, SpanishDate}
+import graft.functions.{Similarity, SpanishDate}
 
 /** SQL-facing surface: register the engine's scalar functions and the
   * corpus tables so everything is reachable from `spark.sql(...)` —
@@ -13,14 +13,14 @@ object GraftSql {
 
   /** Register all custom functions for SQL use.
     *
-    * `py_round` is a native Catalyst expression (codegen'd, usable in
-    * higher-order lambdas); the rest are procedural string algorithms
-    * registered as UDFs.
+    * The native Catalyst expressions (`py_round`, `dot_product`, …:
+    * codegen'd, usable in higher-order lambdas) come from
+    * [[GraftExtensions.register]]; the rest are procedural string
+    * algorithms registered as UDFs.
     */
   def registerFunctions(spark: SparkSession): Unit = {
     import graft.functions.Registration.once
-    PyRound.register(spark)
-    graft.functions.DotProduct.register(spark)
+    GraftExtensions.register(spark)
     once(spark, "parse_spanish_date") { spark.udf.register("parse_spanish_date",
       (s: String) => SpanishDate.parse(s)) }
     once(spark, "lcs_similarity") { spark.udf.register("lcs_similarity",

@@ -148,7 +148,7 @@ object IncrementalAnn {
   def processBatch(batch: DataFrame, indexPath: String, batchId: Long,
       cfg: Config = Config()): DataFrame = {
     val spark = batch.sparkSession
-    graft.functions.DotProduct.register(spark)
+    graft.sql.GraftExtensions.register(spark)
     // occupancy is full state per epoch; each copy supersedes the last
     StreamingState.fold(spark, statePath(indexPath), Format, batchId,
         Map("neighbors" -> neighborsSchema), fullState = Seq("occ")) {

@@ -102,7 +102,7 @@ object IncrementalDedup {
     val text =
       if (!normalizeNfc) docs
       else {
-        graft.functions.UnicodeNormalize.register(docs.sparkSession)
+        graft.sql.GraftExtensions.register(docs.sparkSession)
         docs.withColumn("text", expr("nfc_normalize(text)"))
       }
     val scored = TextOps.withQualityScore(text.withColumn("words", TextOps.wordsCol))

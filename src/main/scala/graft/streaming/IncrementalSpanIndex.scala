@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 import graft.operators.TrainingOps
@@ -235,18 +234,4 @@ object IncrementalSpanIndex {
   def compact(spark: SparkSession, indexPath: String): Unit =
     StreamingState.compactDeltas(spark, indexPath, Format,
       Map("windows" -> indexSchema, "docs" -> docsSchema))
-
-  /** Streaming surface: foreachBatch maintaining the index, handing
-    * each micro-batch's maximal spans to the caller.
-    */
-  def sink(docs: DataFrame, indexPath: String)
-      (onBatch: (DataFrame, Long) => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spans = processBatch(batch, indexPath, id)
-        onBatch(spans, id)
-        spans.unpersist()
-        ()
-      }
 }

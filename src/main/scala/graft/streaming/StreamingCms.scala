@@ -20,12 +20,11 @@ import graft.operators.{CurationOps, TextOps}
   * Replayed batches (streaming retry semantics) must NOT double-count
   * — unlike the dedup index, whose doc-keyed rows anti-join replays
   * away for free, counter increments are not naturally idempotent. So
-  * the sketch carries an applied-batch-id ledger, and (r11) the
-  * ledger and the merged cells are published TOGETHER through
-  * [[StreamingState]]'s epoch-directory + atomic-marker commit — the
-  * r10 layout wrote cells first and appended the ledger second, so a
-  * crash between the writes re-applied (double-counted) the batch on
-  * retry, in exactly the replay scenario the ledger exists for.
+  * each batch folds through [[StreamingState.fold]] under its own
+  * batch id: the merged cells are published by the atomic creation of
+  * the marker `commits/<batchId>`, and a batch id whose marker exists
+  * is a replay and computes nothing. There is no separate record of
+  * applied batches that could disagree with the cells.
   *
   * At 100 TB the shape holds: per batch, one word-count aggregation
   * (map-side combinable), a depth-way in-row fan-out to at most
@@ -40,12 +39,13 @@ object StreamingCms {
     StructField("b", LongType, nullable = false),
     StructField("c", LongType, nullable = false)))
 
-  private val ledgerSchema: StructType = StructType(Seq(
-    StructField("batch_id", LongType, nullable = false)))
+  private val Format = StreamingState.Format("StreamingCms")
 
   /** Current sketch contents (empty 0-cell sketch if never written). */
-  def readSketch(spark: SparkSession, path: String): DataFrame =
+  def readSketch(spark: SparkSession, path: String): DataFrame = {
+    StreamingState.open(spark, path, Format)
     StreamingState.readCurrent(spark, path, "cells", sketchSchema)
+  }
 
   /** Cell increments for one (doc_id, text) batch — batch-local word
     * counts fanned out to (d, b) cells via the SAME bucketing as the
@@ -57,27 +57,22 @@ object StreamingCms {
       .groupBy(col("w")).agg(count(lit(1)).as("tf")))
 
   /** Fold one micro-batch into the persisted sketch. Returns true if
-    * the batch was applied, false if its id was already in the ledger
+    * the batch was applied, false if its id was already committed
     * (replay no-op).
     */
   def applyBatch(docs: DataFrame, path: String, batchId: Long): Boolean = {
     val spark = docs.sparkSession
-    val applied = StreamingState.readCurrent(spark, path, "applied", ledgerSchema)
-    if (applied.filter(col("batch_id") === batchId).limit(1).count() > 0)
-      return false
-    // the merge reads the PREVIOUS epoch's directory and writes the
-    // next one, so no lineage truncation is needed; the new epoch's
-    // ledger already contains this batch id and both relations become
-    // visible in one atomic marker creation
-    val merged = readSketch(spark, path)
-      .unionByName(batchCells(docs))
-      .groupBy(col("d"), col("b")).agg(sum(col("c")).as("c"))
-      .select(col("d"), col("b"), col("c"))
-    import spark.implicits._
-    val ledger = applied.unionByName(Seq(batchId).toDF("batch_id"))
-    StreamingState.commit(spark, path, batchId,
-      Map("cells" -> merged, "applied" -> ledger))
-    true
+    val fresh = !StreamingState.isCommitted(spark, path, batchId)
+    // the merge reads the previous epoch's directory and writes the
+    // next one, so no lineage truncation is needed
+    StreamingState.fold(spark, path, Format, batchId, Map.empty,
+        fullState = Seq("cells")) {
+      Map("cells" -> readSketch(spark, path)
+        .unionByName(batchCells(docs))
+        .groupBy(col("d"), col("b")).agg(sum(col("c")).as("c"))
+        .select(col("d"), col("b"), col("c")))
+    }
+    fresh
   }
 
   /** Point-estimate term frequencies for a (w) probe relation: est(w)

@@ -14,14 +14,16 @@ import graft.operators.Analytics
   * around (Flajolet et al. 2007 §4 — the same operation 1000
   * executors' partial sketches reduce with on a real cluster).
   *
-  * Unlike StreamingCms, NO applied-batch ledger is needed: max-merge
-  * is idempotent (max(a, a) = a), so a replayed micro-batch —
-  * streaming retry semantics re-deliver the same data under the same
-  * batch id — re-maxes the sketch onto itself and cannot distort it.
-  * That asymmetry is exactly the sum-vs-max distinction between the
-  * two sketch families: counters need exactly-once, registers only
-  * need at-least-once. (A batch with NEW data under a replayed id
-  * would be a source-contract violation, not something a ledger could
+  * Unlike StreamingCms, replays need no detection: max-merge is
+  * idempotent (max(a, a) = a), so a replayed micro-batch — streaming
+  * retry semantics re-deliver the same data under the same batch id —
+  * re-maxes the sketch onto itself and cannot distort it. Each fold
+  * goes through [[StreamingState.fold]] under the next free epoch id,
+  * so a replay lands in a fresh epoch with identical contents. That
+  * asymmetry is exactly the sum-vs-max distinction between the two
+  * sketch families: counters need exactly-once, registers only need
+  * at-least-once. (A batch with NEW data under a replayed id would be
+  * a source-contract violation, not something replay detection could
   * repair either.)
   *
   * Batch parity is the correctness story: registers are built by the
@@ -44,9 +46,13 @@ object StreamingHll {
     StructField("j", LongType, nullable = false),
     StructField("rr", LongType, nullable = false)))
 
+  private val Format = StreamingState.Format("StreamingHll")
+
   /** Current register relation (empty if never written). */
-  def readRegisters(spark: SparkSession, path: String): DataFrame =
+  def readRegisters(spark: SparkSession, path: String): DataFrame = {
+    StreamingState.open(spark, path, Format)
     StreamingState.readCurrent(spark, path, "registers", registerSchema)
+  }
 
   /** One micro-batch's register relation (g, j, rr) — the q43
     * construction verbatim, so streamed sketches are bit-identical to
@@ -63,16 +69,16 @@ object StreamingHll {
       group: Column, value: Column): Unit = {
     val spark = rows.sparkSession
     // reads the previous epoch's directory, writes the next (no
-    // in-place overwrite, so no lineage truncation needed); max-merge
-    // stays ledger-free — a replayed fold re-maxes the sketch onto
-    // itself and lands in a fresh epoch with identical contents
-    val merged = readRegisters(spark, path)
-      .unionByName(batchRegisters(rows, group, value))
-      .groupBy(col("g"), col("j")).agg(max(col("rr")).as("rr"))
-      .select(col("g"), col("j"), col("rr"))
-    StreamingState.commit(spark, path,
-      StreamingState.currentEpoch(spark, path) + 1L,
-      Map("registers" -> merged))
+    // in-place overwrite, so no lineage truncation needed)
+    StreamingState.fold(spark, path, Format,
+        StreamingState.currentEpoch(spark, path) + 1L, Map.empty,
+        fullState = Seq("registers")) {
+      Map("registers" -> readRegisters(spark, path)
+        .unionByName(batchRegisters(rows, group, value))
+        .groupBy(col("g"), col("j")).agg(max(col("rr")).as("rr"))
+        .select(col("g"), col("j"), col("rr")))
+    }
+    ()
   }
 
   /** Per-group distinct-count summary of the persisted sketch —

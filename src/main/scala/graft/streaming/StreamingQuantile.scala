@@ -20,10 +20,11 @@ import graft.operators.Analytics
   * StreamingQuantileSpec on randomized splits).
   *
   * Like the CMS counters — and unlike StreamingHll's max-merged
-  * registers — sums are NOT replay-idempotent, so the sketch carries
-  * the same applied-batch-id ledger, published atomically WITH the
-  * merged bins through [[StreamingState]]'s epoch + marker commit
-  * (see StreamingCms for the r10 crash-window this closes).
+  * registers — sums are NOT replay-idempotent, so each batch folds
+  * through [[StreamingState.fold]] under its own batch id: the merged
+  * bins are published by the atomic creation of the marker
+  * `commits/<batchId>`, and a batch id whose marker exists is a replay
+  * and computes nothing.
   *
   * At 100 TB the shape holds: per batch one map-side-combinable
   * groupBy(group, bin) over the batch only, a merge against a table
@@ -37,12 +38,13 @@ object StreamingQuantile {
     StructField("bin", LongType, nullable = false),
     StructField("cnt", LongType, nullable = false)))
 
-  private val ledgerSchema: StructType = StructType(Seq(
-    StructField("batch_id", LongType, nullable = false)))
+  private val Format = StreamingState.Format("StreamingQuantile")
 
   /** Current sketch contents (empty if never written). */
-  def readSketch(spark: SparkSession, path: String): DataFrame =
+  def readSketch(spark: SparkSession, path: String): DataFrame = {
+    StreamingState.open(spark, path, Format)
     StreamingState.readCurrent(spark, path, "bins", sketchSchema)
+  }
 
   /** One micro-batch's bin counts — the q44 construction verbatim, so
     * streamed sketches are bit-identical to batch ones.
@@ -58,21 +60,16 @@ object StreamingQuantile {
   def applyBatch(rows: DataFrame, path: String,
       group: Column, cents: Column, batchId: Long): Boolean = {
     val spark = rows.sparkSession
-    val applied = StreamingState.readCurrent(spark, path, "applied", ledgerSchema)
-    if (applied.filter(col("batch_id") === batchId).limit(1).count() > 0)
-      return false
-    // reads the previous epoch, writes the next; bins + ledger become
-    // visible in one atomic marker creation (no cells-before-ledger
-    // crash window, no lineage truncation needed)
-    val merged = readSketch(spark, path)
-      .unionByName(batchBins(rows, group, cents))
-      .groupBy(col("g"), col("bin")).agg(sum(col("cnt")).as("cnt"))
-      .select(col("g"), col("bin"), col("cnt"))
-    import spark.implicits._
-    val ledger = applied.unionByName(Seq(batchId).toDF("batch_id"))
-    StreamingState.commit(spark, path, batchId,
-      Map("bins" -> merged, "applied" -> ledger))
-    true
+    val fresh = !StreamingState.isCommitted(spark, path, batchId)
+    // reads the previous epoch, writes the next (no lineage truncation)
+    StreamingState.fold(spark, path, Format, batchId, Map.empty,
+        fullState = Seq("bins")) {
+      Map("bins" -> readSketch(spark, path)
+        .unionByName(batchBins(rows, group, cents))
+        .groupBy(col("g"), col("bin")).agg(sum(col("cnt")).as("cnt"))
+        .select(col("g"), col("bin"), col("cnt")))
+    }
+    fresh
   }
 
   /** Per-group quantile answers from the persisted sketch — the q44

@@ -4,53 +4,48 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Shared persisted-state layout for the streaming sketch artifacts
-  * (StreamingCms / StreamingHll / StreamingQuantile), fixing two r10
-  * audit findings at once:
+/** The one persisted-state protocol of every incremental root: the five
+  * monthly-drop indexes (dedup, cluster, span, ANN, quality) and the
+  * three streaming sketches (StreamingCms / StreamingHll /
+  * StreamingQuantile). Every root commits through [[fold]] alone, so
+  * opening, replay detection, commit and report read-back are written
+  * once.
   *
-  * 1. ATOMIC COMMIT. The r10 sketches overwrote their merged cells
-  *    and THEN appended the applied-batch ledger as a second write —
-  *    a crash between the two left the increments applied but
-  *    unrecorded, so the streaming retry of that batch re-applied
-  *    them and double-counted, in exactly the replay scenario the
-  *    ledger exists for. Here a fold writes a fresh
-  *    `<root>/epoch-<id>/` directory (state relations AND the ledger
-  *    that already includes the batch id, together), then publishes
-  *    it with ONE atomic operation: creating the zero-byte marker
-  *    `<root>/commits/<id>` with overwrite=false. Crash before the
-  *    marker → readers still resolve the previous epoch and the
-  *    retry simply rewrites the orphan directory; crash after the
-  *    marker → the commit is complete and the retry sees its batch
-  *    id in the ledger and no-ops. There is no window in which state
-  *    and ledger disagree.
+  * ATOMIC COMMIT. A fold writes the epoch's relations into a fresh
+  * `<root>/epoch-<id>/` directory, which no reader resolves yet, then
+  * publishes it with ONE atomic operation: creating the zero-byte
+  * marker `<root>/commits/<id>` with overwrite=false. Crash before the
+  * marker → readers still resolve the previous epoch and the retry
+  * rewrites the orphan directory; crash after it → the commit is
+  * complete and the retry finds the marker and computes nothing. This
+  * is the commit-log discipline of Structured Streaming's own
+  * offset/commit logs: an append-only directory of monotonically named
+  * entries whose reader state is "highest committed id".
   *
-  * 2. OBJECT-STORE PATHS. Existence probes went through
-  *    `java.io.File`, which only sees the local filesystem — on
-  *    HDFS/S3 (the deployment the sketches are for) every read
-  *    silently restarted from an empty sketch. All probes here
-  *    resolve through Hadoop's `FileSystem` API
-  *    (`path.getFileSystem(hadoopConf)`), the same resolution the
-  *    parquet reader itself uses.
+  * REPLAY DETECTION rests on the marker alone, which [[fold]] never
+  * deletes: a batch id is applied iff `commits/<id>` exists. Markers
+  * grow by one zero-byte file per batch. Sketch roots written before
+  * the sketches folded here kept only their two newest markers (and an
+  * `applied` ledger relation, grown by one row and rewritten whole
+  * every batch, which is no longer read); Structured Streaming only
+  * ever replays the newest batch, so that replay is still caught, but a
+  * hand-applied id older than those two is not.
   *
-  * The marker-directory pattern is the commit-log discipline
-  * Structured Streaming's own offset/commit logs use: an append-only
-  * directory of monotonically named entries where the reader's state
-  * is "highest committed id", and publication is a single atomic
-  * file creation.
-  *
-  * THE FOLD PATH. The five monthly-drop indexes (dedup, cluster, span,
-  * ANN, quality) commit through [[fold]] alone, so opening, replay,
-  * commit and report read-back are written once. A fold's relations
-  * are of two kinds:
+  * RELATIONS. A fold's relations are of two kinds:
   *  - DELTA relations hold only this epoch's new rows; the index is the
   *    union of every committed epoch's delta ([[readCommittedDeltas]]),
   *    folded into one copy by [[compactDeltas]]. Per-batch reports
   *    (pairs, spans, neighbors, …) are delta relations read by batch id.
-  *  - FULL-STATE relations (the span index's `caps`, the ANN index's
-  *    `occ`) are rewritten whole each epoch, each copy superseding the
-  *    last: read through [[readCurrent]], pruned to the two newest
-  *    epochs after each commit.
-  * Every root is checked by [[open]] before it is read or written.
+  *  - FULL-STATE relations (the sketches' cells/registers/bins, the span
+  *    index's `caps`, the ANN index's `occ`) are rewritten whole each
+  *    epoch, each copy superseding the last: read through
+  *    [[readCurrent]], pruned to the two newest epochs after each
+  *    commit (the previous one stays for frames handed out earlier).
+  *
+  * Every root is checked by [[open]] before it is read or written, and
+  * every existence probe resolves through Hadoop's `FileSystem` API
+  * (`path.getFileSystem(hadoopConf)`), as the parquet reader does, so
+  * HDFS/S3 roots are seen as they are.
   */
 object StreamingState {
 
@@ -59,13 +54,6 @@ object StreamingState {
 
   def exists(spark: SparkSession, p: String): Boolean =
     fsFor(spark, p).exists(new Path(p))
-
-  /** Read a parquet relation, or an empty frame of the schema if the
-    * path does not exist (resolved via Hadoop FS, not java.io.File).
-    */
-  def readOr(spark: SparkSession, p: String, schema: StructType): DataFrame =
-    if (exists(spark, p)) spark.read.schema(schema).parquet(p)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
   private def commitsDir(root: String) = s"$root/commits"
 
@@ -83,33 +71,15 @@ object StreamingState {
   def currentEpoch(spark: SparkSession, root: String): Long =
     committedEpochs(spark, root).lastOption.getOrElse(-1L)
 
-  /** Current contents of one state relation (empty if none committed). */
+  /** Current contents of one full-state relation: its copy in the
+    * newest committed epoch, or an empty frame if there is none.
+    */
   def readCurrent(spark: SparkSession, root: String, rel: String,
       schema: StructType): DataFrame = {
     val e = currentEpoch(spark, root)
-    if (e < 0L)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    else readOr(spark, epochRel(root, e, rel), schema)
-  }
-
-  /** Write the relations of epoch `epoch` and publish them atomically.
-    * The relations are written into a directory no reader resolves yet
-    * (so, unlike the r10 in-place overwrite, the merge plan may read
-    * the previous epoch WHILE writing the next — no localCheckpoint
-    * lineage-truncation dance); the marker creation is the commit
-    * point. Epochs older than the previous one are pruned after the
-    * commit (current + previous stay, for frames handed out earlier
-    * that still reference the prior directory).
-    */
-  def commit(spark: SparkSession, root: String, epoch: Long,
-      rels: Map[String, DataFrame]): Unit = {
-    rels.foreach { case (rel, df) =>
-      df.write.mode("overwrite").parquet(epochRel(root, epoch, rel))
-    }
-    val fs = fsFor(spark, root)
-    fs.mkdirs(new Path(commitsDir(root)))
-    publish(fs, new Path(s"${commitsDir(root)}/$epoch"))
-    prune(fs, root)
+    val p = epochRel(root, e, rel)
+    if (e >= 0L && exists(spark, p)) spark.read.schema(schema).parquet(p)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
   }
 
   /** Create the zero-byte marker `marker` — the commit point. A create
@@ -130,12 +100,11 @@ object StreamingState {
   def committedEpochs(spark: SparkSession, root: String): Seq[Long] =
     markerIds(fsFor(spark, root), commitsDir(root))
 
-  /** Commit an APPEND-DELTA epoch: every epoch's relations stay live
-    * (the committed index IS the union of the deltas), so unlike
-    * [[commit]] nothing is pruned. Used by the incremental indexes
-    * (IncrementalDedup / IncrementalSpanIndex / IncrementalAnn), whose
-    * per-drop delta is the natural write unit — rewriting a 100 TB
-    * window index per monthly drop would be a corpus-sized write.
+  /** Write the relations of epoch `epoch` and publish them atomically
+    * (the commit step of [[fold]]). Nothing is pruned here: delta
+    * relations stay live in every epoch, because the committed index IS
+    * their union — rewriting a 100 TB window index per monthly drop
+    * would be a corpus-sized write.
     */
   def commitAppend(spark: SparkSession, root: String, epoch: Long,
       rels: Map[String, DataFrame]): Unit = {
@@ -423,12 +392,4 @@ object StreamingState {
     exists(spark, s"$path/$PublishedMarker")
 
   private val PublishedMarker = "_graft_published"
-
-  /** Keep the two newest committed epochs; drop older dirs + markers. */
-  private def prune(fs: FileSystem, root: String): Unit =
-    markerIds(fs, commitsDir(root)).dropRight(2).foreach { id =>
-      fs.delete(new Path(s"$root/epoch-$id"), true)
-      fs.delete(new Path(s"${commitsDir(root)}/$id"), false)
-      ()
-    }
 }

@@ -90,7 +90,7 @@ object ProfileGate {
     // analyzer/optimizer rules a plan-heavy query actually pays for.
     if (sys.env.get("PROFILE_RULES").contains("1"))
       println(org.apache.spark.sql.catalyst.rules.RuleExecutor.dumpTimeSpent())
-    graft.operators.TextOps.releaseCache(spark)
+    graft.operators.SessionMemo.release(spark)
     spark.stop()
   }
 }

@@ -42,7 +42,7 @@ class AnalysisSmokeSpec extends AnyFunSuite {
     }
     assert(failures.isEmpty,
       s"\n${failures.size} queries fail analysis:\n  ${failures.mkString("\n  ")}")
-    graft.operators.TextOps.releaseCache(spark)
+    graft.operators.SessionMemo.release(spark)
   }
 
   test("zero-global-window red line: no unpartitioned Window in any gate plan") {
@@ -64,7 +64,7 @@ class AnalysisSmokeSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"\nunpartitioned Window nodes (red line):\n  ${offenders.mkString("\n  ")}")
-    graft.operators.TextOps.releaseCache(spark)
+    graft.operators.SessionMemo.release(spark)
   }
 
   test("no-cartesian red line: every nested-loop shape is a whitelisted broadcast-bounded one") {
@@ -122,7 +122,7 @@ class AnalysisSmokeSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"\nunbounded nested-loop shapes (red line):\n  ${offenders.mkString("\n  ")}")
-    graft.operators.TextOps.releaseCache(spark)
+    graft.operators.SessionMemo.release(spark)
   }
 
   test("entry flagship query analyzes and the SQL surface initializes") {
@@ -133,6 +133,6 @@ class AnalysisSmokeSpec extends AnyFunSuite {
     graft.sql.GraftSql.init(spark, "/root/testdata/sf0.001")
     assert(spark.catalog.tableExists("events"))
     assert(spark.catalog.tableExists("lineitem"))
-    graft.operators.TextOps.releaseCache(spark)
+    graft.operators.SessionMemo.release(spark)
   }
 }

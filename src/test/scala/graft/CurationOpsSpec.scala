@@ -219,7 +219,7 @@ class CurationOpsSpec extends AnyFunSuite {
   }
 
   test("dot_product expression matches the HOF fold bit-for-bit incl. null semantics") {
-    graft.functions.DotProduct.register(spark)
+    graft.sql.GraftExtensions.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(7L)
     val rows = (1 to 300).map { i =>

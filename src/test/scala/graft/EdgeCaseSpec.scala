@@ -57,7 +57,7 @@ class EdgeCaseSpec extends AnyFunSuite {
 
   test("top_bigram_count tolerates null elements and rejects non-array input") {
     import spark.implicits._
-    graft.functions.TopBigramCount.register(spark)
+    graft.sql.GraftExtensions.register(spark)
     val rows = Seq(
       Tuple1(Seq[String]("a", "b", "a", "b")),          // bigrams: ab ba ab -> 2
       Tuple1(Seq[String]("a", null, "a", "b", "a", "b")), // null pairs skipped -> 2

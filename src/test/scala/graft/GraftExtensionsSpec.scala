@@ -75,7 +75,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
     // FIRST under desc, and -0.0 ties 0.0. The pre-fix buffer dropped a
     // NaN arriving after the buffer filled and split the zeros.
     graft.sql.GraftSql.registerFunctions(base)
-    graft.functions.TopKAgg.register(base)
     import base.implicits._
     import org.apache.spark.sql.functions._
     val rows = Seq(
@@ -101,7 +100,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
     // same SQL through the legacy per-session registration on the base
     // session — results must agree with the extension path
     graft.sql.GraftSql.registerFunctions(base)
-    graft.functions.TopKAgg.register(base)
     val viaRegister = base.sql("SELECT py_round(0.125, 2) AS r").head().getDouble(0)
     val viaExtension = withExtendedSession {
       _.sql("SELECT py_round(0.125, 2) AS r").head().getDouble(0)

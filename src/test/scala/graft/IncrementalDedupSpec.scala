@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions.col
 import graft.streaming.{IncrementalAnn, IncrementalCluster, IncrementalDedup,
-  IncrementalQuality, IncrementalSpanIndex}
+  IncrementalQuality, IncrementalSpanIndex, StreamingCms, StreamingHll, StreamingQuantile}
 
 /** Updateable near-dup signature index (VERDICT r4 #6): batch 2 must
   * find its near-dups against batch 1 by probing the PERSISTED index —
@@ -112,8 +113,9 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(e1.getMessage.contains("version 1"))
 
     // content that predates the format (data files, no commits/ log
-    // and no stamp) must be refused by every drop index's reader AND
-    // writer — read as committed epochs it would look empty
+    // and no stamp) must be refused by every state root's reader AND
+    // writer — the drop indexes and the streaming sketches; read as
+    // committed epochs it would look empty
     val docs = Seq((2L, textB)).toDF("doc_id", "text")
     val pairs = Seq((1L, 2L)).toDF("doc_a", "doc_b")
     val scores = Seq((1L, 0.5), (2L, 0.5)).toDF("doc_id", "score")
@@ -129,7 +131,13 @@ class IncrementalDedupSpec extends AnyFunSuite {
       ("ann", "/state", IncrementalAnn.readIndex(spark, _).count(),
         IncrementalAnn.processBatch(vecs, _, 0L).count()),
       ("quality", "", IncrementalQuality.readTrend(spark, _).count(),
-        IncrementalQuality.processBatch(docs, _, 0L).count()))
+        IncrementalQuality.processBatch(docs, _, 0L).count()),
+      ("cms", "", StreamingCms.readSketch(spark, _).count(),
+        StreamingCms.applyBatch(docs, _, 0L)),
+      ("hll", "", StreamingHll.readRegisters(spark, _).count(),
+        StreamingHll.applyBatch(docs, _, col("doc_id"), col("text"))),
+      ("quantile", "", StreamingQuantile.readSketch(spark, _).count(),
+        StreamingQuantile.applyBatch(docs, _, col("doc_id"), col("doc_id"), 0L)))
     roots.foreach { case (name, sub, reader, writer) =>
       val idx = base.resolve(s"unversioned-$name").toString
       Seq((9L, textC)).toDF("doc_id", "text").write.parquet(idx + sub)

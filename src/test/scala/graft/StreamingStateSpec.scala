@@ -6,13 +6,14 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.{StreamingCms, StreamingState}
 
-/** The epoch + atomic-marker commit discipline (r11): state relations
-  * and their applied-batch ledger become visible in ONE atomic marker
-  * creation, so there is no crash window in which a batch's
-  * increments are applied but unrecorded (the r10 double-count-on-
-  * replay hazard). Crash scenarios are simulated by doing exactly
-  * what a crashed commit leaves behind: an epoch directory with no
-  * marker, or a completed marker before the retry.
+/** The epoch + atomic-marker commit discipline of `StreamingState.fold`
+  * for full-state relations (each epoch's copy supersedes the last): a
+  * fold's relations become visible in ONE atomic marker creation, so
+  * there is no crash window in which a batch's increments are applied
+  * but unrecorded (the r10 double-count-on-replay hazard). Crash
+  * scenarios are simulated by doing exactly what a crashed commit
+  * leaves behind: an epoch directory with no marker, or a completed
+  * marker before the retry.
   */
 class StreamingStateSpec extends AnyFunSuite {
 
@@ -34,11 +35,20 @@ class StreamingStateSpec extends AnyFunSuite {
     StructField("k", StringType, nullable = false),
     StructField("v", LongType, nullable = false)))
 
+  /** Fold the one-row full-state relation `cells` = (a, v) as epoch `e`. */
+  private def foldCells(root: String, e: Long, v: Long): Unit = {
+    import spark.implicits._
+    StreamingState.fold(spark, root, StreamingState.Format("test state"), e,
+        Map.empty, fullState = Seq("cells")) {
+      Map("cells" -> Seq(("a", v)).toDF("k", "v"))
+    }
+    ()
+  }
+
   test("uncommitted epoch directory is invisible; the marker is the commit point") {
     import spark.implicits._
     val root = freshDir()
-    StreamingState.commit(spark, root, 0L,
-      Map("cells" -> Seq(("a", 1L)).toDF("k", "v")))
+    foldCells(root, 0L, 1L)
     // a crash after writing epoch-1's files but BEFORE its marker:
     Seq(("a", 99L)).toDF("k", "v")
       .write.parquet(StreamingState.epochRel(root, 1L, "cells"))
@@ -46,23 +56,20 @@ class StreamingStateSpec extends AnyFunSuite {
     val got = StreamingState.readCurrent(spark, root, "cells", schema).collect()
     assert(got.map(r => (r.getString(0), r.getLong(1))).toSeq === Seq(("a", 1L)))
     // the retry rewrites the orphan directory and publishes it
-    StreamingState.commit(spark, root, 1L,
-      Map("cells" -> Seq(("a", 2L)).toDF("k", "v")))
+    foldCells(root, 1L, 2L)
     val after = StreamingState.readCurrent(spark, root, "cells", schema).collect()
     assert(after.map(r => (r.getString(0), r.getLong(1))).toSeq === Seq(("a", 2L)))
   }
 
   test("pruning keeps the newest two epochs only") {
-    import spark.implicits._
     val root = freshDir()
-    (0L to 4L).foreach { e =>
-      StreamingState.commit(spark, root, e,
-        Map("cells" -> Seq(("a", e)).toDF("k", "v")))
-    }
+    (0L to 4L).foreach(e => foldCells(root, e, e))
     assert(StreamingState.currentEpoch(spark, root) === 4L)
-    assert(!StreamingState.exists(spark, s"$root/epoch-2"))
-    assert(StreamingState.exists(spark, s"$root/epoch-3"))
-    assert(StreamingState.exists(spark, s"$root/epoch-4"))
+    assert(!StreamingState.exists(spark, StreamingState.epochRel(root, 2L, "cells")))
+    assert(StreamingState.exists(spark, StreamingState.epochRel(root, 3L, "cells")))
+    assert(StreamingState.exists(spark, StreamingState.epochRel(root, 4L, "cells")))
+    // the markers all stay: replay detection covers the whole history
+    assert(StreamingState.committedEpochs(spark, root) === (0L to 4L))
   }
 
   test("CMS retry after a crash-before-marker does not double-count") {
